@@ -1,30 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Optional args = query-name filter (dev: bench a subset standalone).
+    val selected = SparkEntry.selected("bench", args.toSeq)
+    val spark = GraftSession(GraftSession.envCores)
     // Untimed JVM warm-up on the smallest fixture: JIT + codegen +
     // parquet-reader init otherwise lands on whichever query happens
     // to run first (~5s of noise attributed to an arbitrary query).
     // Standard benchmarking hygiene, disclosed here; every timed
     // query still does its own full scan/plan/execute.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // Optional args = query-name filter (dev: bench a subset standalone).
-    val wanted = args.toSet
-    val selected =
-      if (wanted.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (k, _) => wanted(k) }
     // NOISE PROTOCOL (BASELINE.md): a small cluster of token-grain
     // shuffle queries has moved ±2x between idle runs with unchanged
     // code (in-run JVM/GC interaction, adjudicated r7/r8). Those run
@@ -34,9 +20,12 @@ object Bench {
     // q184 joined the cluster in r14: the r13 watch item (1.23 →
     // 1.79 → 1.50 s across runs, file untouched) — min-of-two is the
     // designed response to that class. q336 was probed for membership
-    // and REJECTED: its second run reads the memoized fixture (9.2 →
-    // 0.65 s), so a min would record the cache, not the query — the
-    // protocol only fits queries whose repeat does the same work.
+    // and REJECTED: it reads TableOps' shared demo table, one of the
+    // three fixtures still built once per JVM, so its second run skips
+    // the build (9.2 → 0.65 s) and a min would record the cache, not
+    // the query — the protocol only fits queries whose repeat does the
+    // same work. Every other TableOps query rebuilds its fixture on a
+    // repeat; none of them is in this set.
     val noisy = Set("q109", "q129", "q143", "q155", "q184", "q199",
       "q281", "q304", "q350")
     def prefixOf(name: String): String = name.takeWhile(_ != '_')

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-capture tool for the optimization rounds: dumps
   * `.explain("formatted")` for the named queries (or all of them) to
   * `<outDir>/<name>.txt`. Build-only tooling — the driver's surfaces
@@ -15,29 +13,8 @@ object Explain {
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val wanted = args.drop(2).toSet
-    // a typo'd name would otherwise filter to nothing and exit clean,
-    // leaving a silently missing plan file (ADVICE r15)
-    val unknown = wanted -- SparkEntry.queries.map(_._1).toSet
-    if (unknown.nonEmpty) {
-      System.err.println(
-        s"[explain] unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
-      sys.exit(2)
-    }
-    val selected =
-      if (wanted.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (k, _) => wanted(k) }
+    val selected = SparkEntry.selected("explain", args.drop(2).toSeq)
+    val spark = GraftSession(GraftSession.envCores)
     selected.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)

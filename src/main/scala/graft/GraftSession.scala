@@ -1,0 +1,30 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one local SparkSession recipe: `Bench`, `Verify`, `Explain` and
+  * the specs' `SparkSuite` all build their session here, so every
+  * surface plans and reads with the same confs. */
+object GraftSession {
+
+  /** Cores for the mains: `SPARK_GRAFT_CPUS`, default 4. */
+  def envCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** A `local[cores]` session with one shuffle partition per core. */
+  def apply(cores: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Testdata timestamps are µs with no tz annotation; read them as
+      // TIMESTAMP (UTC session) straight off the scan — same instants
+      // DuckDB's naive read yields, and no NTZ cast blocking pushdown.
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+}

@@ -23,6 +23,21 @@ object SparkEntry {
       LinkOps.queries ++ SketchOps.queries ++ PrivacyOps.queries ++
       TableOps.queries ++ graft.etl.EtlDemo.queries
 
+  /** The queries `names` lists, or all of them when it is empty. An
+    * unknown name is reported on stderr and exits with status 2: a
+    * typo'd subset must fail, not run nothing and exit clean. */
+  def selected(tool: String, names: Seq[String])
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val wanted = names.toSet
+    val unknown = wanted -- queries.keySet
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"[$tool] unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
+    if (wanted.isEmpty) queries else queries.filter { case (k, _) => wanted(k) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1371,6 +1371,8 @@ object DedupOps {
       .localCheckpoint()
     val nodes = src.select($"source").distinct().localCheckpoint()
     val n = nodes.count()
+    // no sources means no ranks: stop before the divisions by n
+    if (n == 0L) return nodes.select($"source", lit(0L).as("rank"))
     val teleport = ((15L * prScale) / 100L) / n
     var rank = nodes.select($"source", lit(prScale / n).as("rank"))
     for (_ <- 1 to prRounds) {

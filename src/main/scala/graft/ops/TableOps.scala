@@ -42,16 +42,25 @@ object TableOps {
   private def ordersSlice(s: SparkSession, dir: String): DataFrame =
     Tables.orders(s, dir).select(dataCols.map(col): _*)
 
-  /** One demo table per sfDir per JVM — the read-only queries
-    * (q330–q334, q417/q418/q421) share the build (Verify/Bench run
-    * them all in one session; the log is deterministic, so sharing
-    * changes nothing but wall time). Queries that MUTATE a table
-    * (q419 vacuum, q424–q426 DML) build their own scratch tables. */
+  /** The three fixtures built once per sfDir per JVM, because more
+    * than one query reads each and none writes it: [[demoTable]]
+    * (the thirteen demo-history reads q330/q331/q333/q334/q336/q339/
+    * q340/q354/q417/q418/q421/q427/q451), [[partitionedDemo]]
+    * (q432/q433) and [[dvTable]] (q454/q456). Each build is
+    * deterministic, so sharing it changes nothing but wall time.
+    * Every other query builds its own fixture inline, once per call:
+    * a repeat call redoes the same work and reads no state another
+    * call left behind. */
   private val demoCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val mergeCache =
+  private val partCache =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val dvCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** The demo history of the object doc (v1–v5), shared read-only by
+    * the thirteen queries listed above. A query that mutates a table
+    * (q419 vacuum, q424–q426 DML) builds its own. */
   private[ops] def demoTable(s: SparkSession, dir: String): String =
     demoCache.computeIfAbsent(dir, _ => {
       val table = Files.createTempDirectory("graft_tlog_").toString
@@ -147,7 +156,7 @@ object TableOps {
     * oracle replays base − updated + changes in pure SQL. */
   def q332TableMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val table = mergeCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogm_").toString
       val base = ordersSlice(s, dir).where($"o_orderkey" % 4 === 0)
       TableLog.create(base, t, "o_orderkey", numFiles = 4)
@@ -159,7 +168,7 @@ object TableOps {
           lit("N").as("o_orderstatus"), $"o_orderpriority", $"o_totalprice")
       TableLog.merge(s, t, updates.unionByName(inserts), numFiles = 4)
       t
-    })
+    }
     TableLog.snapshot(s, table)
       .select(dataCols.map(col): _*)
       .orderBy($"o_orderkey")
@@ -255,9 +264,6 @@ object TableOps {
   /** Number of contiguous key slices in the advisor's table build. */
   val advisorSlices = 8L
 
-  private val advisorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** What-if skipping advisor — pricing a predicate BEFORE running
     * it, purely from the manifest (q339's metadata-only discipline
     * turned from answering queries into planning them): for each
@@ -277,7 +283,7 @@ object TableOps {
     * replay exactly cross-engine. */
   def q389SkippingAdvisor(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val table = advisorCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tloga_").toString
       val sl = ordersSlice(s, dir)
       val maxK = sl.agg(max($"o_orderkey")).head().getLong(0)
@@ -289,7 +295,7 @@ object TableOps {
           $"o_orderkey" < (i + 1) * w), t, numFiles = 1)
       }
       t
-    })
+    }
     val snap = TableLog.state(table)
     val (_, _, maxK) = TableLog.statsOf(table)
     val w = maxK / advisorSlices + 1L
@@ -342,9 +348,6 @@ object TableOps {
        |ORDER BY k.candidate""".stripMargin
 
   // ---------------------------------------------------------------- q335
-  private val streamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Land `df` as one flat parquet file the streaming file source can
     * pick up (the Extract.land shape: stage, then move the part file
     * into the watched dir under a stable name). */
@@ -376,7 +379,7 @@ object TableOps {
     * compaction (q330's v5) amortizes the small files separately. */
   def q335TableStreamIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val table = streamCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogs_").toString
       val landing = Files.createTempDirectory("graft_tlogl_").toString
       val slice = ordersSlice(s, dir)
@@ -400,7 +403,7 @@ object TableOps {
       runOnce(s"$landing/_cp1") // same lineage: checkpoint makes it a no-op
       runOnce(s"$landing/_cp2") // checkpoint LOST: txn ledger drops redelivery
       t
-    })
+    }
     TableLog.snapshot(s, table)
       .groupBy($"o_orderstatus")
       .agg(count(lit(1)).as("n_orders"), dsum($"o_totalprice").as("sum_price"))
@@ -443,9 +446,6 @@ object TableOps {
       |ORDER BY o_orderkey""".stripMargin
 
   // ---------------------------------------------------------------- q337
-  private val evolveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Additive schema evolution as a log commit
     * ([[TableLog.appendEvolve]]): the table starts 3 columns wide,
     * a later append arrives with a 4th (o_totalprice), the manifest
@@ -458,7 +458,7 @@ object TableOps {
     * the null-fill and the new values. */
   def q337TableSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val table = evolveCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tloge_").toString
       val o = Tables.orders(s, dir)
       TableLog.create(
@@ -471,7 +471,7 @@ object TableOps {
             $"o_totalprice"),
         t, numFiles = 2)
       t
-    })
+    }
     TableLog.snapshot(s, table)
       .groupBy($"o_orderstatus", $"o_totalprice".isNull.as("pre_evolution"))
       .agg(count(lit(1)).as("n_orders"),
@@ -494,9 +494,6 @@ object TableOps {
       |FROM rows_ GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   // ---------------------------------------------------------------- q338
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Point lookup through the table's bloom index
     * ([[TableLog.prunedFilesBloom]]): the table declares a bloom
     * sidecar on o_custkey at create; every later commit (here an
@@ -510,14 +507,14 @@ object TableOps {
     * result precise, so the oracle is a plain WHERE. */
   def q338TableBloomSkip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val table = bloomCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogb_").toString
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where($"o_orderkey" % 4 === 0), t,
         "o_orderkey", numFiles = 4, bloomCol = Some("o_custkey"))
       TableLog.append(slice.where($"o_orderkey" % 4 === 1), t, numFiles = 4)
       t
-    })
+    }
     TableLog.snapshotWhereIn(s, table, Seq(7L, 42L, 1001L))
       .select(dataCols.map(col): _*)
       .orderBy($"o_orderkey")
@@ -597,9 +594,6 @@ object TableOps {
       |ORDER BY o_orderkey""".stripMargin
 
   // ---------------------------------------------------------------- q341
-  private val cdcCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Transactional CDC apply ([[TableLog.applyCdc]]) — q336's
     * inverse, and the log-backed upgrade of q180: the q106 change
     * recipe (drop keys ≡1 mod 50, bump+restatus keys ≡4 mod 10,
@@ -612,7 +606,7 @@ object TableOps {
     * sliver, and the insert files ride in the same commit. */
   def q341TableCdcApply(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val table = cdcCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogc_").toString
       val o = Tables.orders(s, dir)
         .select($"o_orderkey", $"o_totalprice", $"o_orderstatus")
@@ -629,7 +623,7 @@ object TableOps {
       TableLog.applyCdc(s, t,
         deletes.unionByName(updates).unionByName(inserts), numFiles = 4)
       t
-    })
+    }
     TableLog.snapshot(s, table)
       .select($"o_orderkey", $"o_totalprice", $"o_orderstatus")
       .orderBy($"o_orderkey")
@@ -648,9 +642,6 @@ object TableOps {
       |ORDER BY o_orderkey""".stripMargin
 
   // ---------------------------------------------------------------- q351
-  private val zorderCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** OPTIMIZE ZORDER as a transactional commit
     * ([[TableLog.compactZorder]]): the table's files re-lay along
     * the (o_orderkey × o_custkey) Morton curve — q108 proves the
@@ -665,7 +656,7 @@ object TableOps {
     * rewrite is a logical no-op. */
   def q351TableZorder(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val table = zorderCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogz_").toString
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where($"o_orderkey" % 4 === 0), t,
@@ -673,7 +664,7 @@ object TableOps {
       TableLog.append(slice.where($"o_orderkey" % 4 === 1), t, numFiles = 4)
       TableLog.compactZorder(s, t, "o_orderkey", "o_custkey", numFiles = 4)
       t
-    })
+    }
     TableLog.snapshot(s, table)
       .where($"o_orderkey" <= 7000L && $"o_custkey" <= 700L)
       .groupBy($"o_orderstatus")
@@ -794,9 +785,6 @@ object TableOps {
   }
 
   // ---------------------------------------------------------------- q355
-  private val replaceCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Atomic slice restatement ([[TableLog.replaceWhere]] — Delta's
     * `replaceWhere` / dynamic partition overwrite): the open-order
     * slice (status 'O') is re-delivered with corrected prices (×2 —
@@ -811,7 +799,7 @@ object TableOps {
     * O slice restated in pure SQL. */
   def q355TableReplaceWhere(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val table = replaceCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogr_").toString
       val slice = ordersSlice(s, dir).where($"o_orderkey" % 4 <= 1)
       TableLog.create(slice.where($"o_orderkey" % 4 === 0), t,
@@ -822,7 +810,7 @@ object TableOps {
       TableLog.replaceWhere(s, t, $"o_orderstatus" === "O", restated,
         numFiles = 4)
       t
-    })
+    }
     TableLog.snapshot(s, table)
       .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
       .orderBy($"o_orderkey")
@@ -910,11 +898,7 @@ object TableOps {
     * TableLogSpec, where an expected failure belongs. History:
     * v1 create %4=0 (4 files) · v2 append %4=1 (4) · v3 compact (2)
     * · v4 delete URGENT (2). */
-  private val vacuumCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int, Long)]()
-
-  private def vacuumDemo(s: SparkSession, dir: String): (String, Int, Long) =
-    vacuumCache.computeIfAbsent(dir, _ => {
+  private def vacuumDemo(s: SparkSession, dir: String): (String, Int, Long) = {
       val table = Files.createTempDirectory("graft_tlogv_").toString
       val o = ordersSlice(s, dir)
       TableLog.create(o.where(col("o_orderkey") % 4 === 0), table,
@@ -925,12 +909,11 @@ object TableOps {
       TableLog.deleteWhere(s, table,
         col("o_orderpriority") === "1-URGENT", numFiles = 2)
       // grace 0: this fixture owns the only writer (see the
-      // defaultVacuumGraceMillis scaladoc); result cached so every
-      // invocation in the JVM reports the one vacuum that ran
+      // defaultVacuumGraceMillis scaladoc)
       val r = TableLog.vacuumRetain(table, retainVersions = 2,
         graceMillis = 0L)
       (table, r.filesDeleted, r.rowsReclaimed)
-    })
+    }
 
   def q419VacuumRetention(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -983,12 +966,9 @@ object TableOps {
     * sink; the oracle restates the three slices in pure SQL.
     * Rewrite-in-window fail-fast (the readAppendsSince contract,
     * streamed) is pinned in GraftLogStreamSpec. */
-  private val sourceStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q422TableStreamSource(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sinkName = sourceStreamCache.computeIfAbsent(dir, _ => {
+    val sinkName = {
       val t = Files.createTempDirectory("graft_tlogsrc_").toString
       val cp = Files.createTempDirectory("graft_tlogsrc_cp_").toString
       val name = s"q422_feed_${Integer.toHexString(dir.hashCode)}"
@@ -1011,7 +991,7 @@ object TableOps {
       q.processAllAvailable()
       q.stop()
       name
-    })
+    }
     s.table(sinkName)
       .groupBy($"o_orderstatus")
       .agg(count(lit(1)).as("n_orders"), dsum($"o_totalprice").as("sum_price"))
@@ -1038,12 +1018,9 @@ object TableOps {
     * proves exactly one copy landed — dedup across checkpoint loss,
     * which checkpointed streaming alone cannot give. Shares q335's
     * oracle content: both surfaces state the same ingest. */
-  private val sinkStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q423TableStreamSink(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val table = sinkStreamCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogsk_").toString
       val landing = Files.createTempDirectory("graft_tlogskl_").toString
       val slice = ordersSlice(s, dir)
@@ -1066,7 +1043,7 @@ object TableOps {
       runOnce(s"$landing/_cp1") // same lineage: checkpoint makes it a no-op
       runOnce(s"$landing/_cp2") // checkpoint LOST: txn ledger drops redelivery
       t
-    })
+    }
     TableLog.snapshot(s, table)
       .groupBy($"o_orderstatus")
       .agg(count(lit(1)).as("n_orders"), dsum($"o_totalprice").as("sum_price"))
@@ -1082,12 +1059,9 @@ object TableOps {
     * manifest key stats, the driver publishes a single manifest.
     * The whole INSERT is visible or none of it. Readout re-reads
     * through the same catalog. */
-  private val insertCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q424CatalogInsert(s: SparkSession, dir: String): DataFrame = {
     withCatalog(s)
-    val table = insertCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogi_").toString
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where(col("o_orderkey") % 4 === 0), t,
@@ -1099,7 +1073,7 @@ object TableOps {
            |SELECT * FROM $view WHERE o_orderkey % 4 = 1""".stripMargin)
       finally s.catalog.dropTempView(view)
       t
-    })
+    }
     s.sql(
       s"""SELECT o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -1125,18 +1099,15 @@ object TableOps {
     * rewrite, and the whole delete is one atomic commit — old
     * versions stay time-travelable past it. Readout proves the
     * survivor set; the oracle restates it in pure SQL. */
-  private val deleteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q425CatalogDelete(s: SparkSession, dir: String): DataFrame = {
     withCatalog(s)
-    val table = deleteCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogd_").toString
       TableLog.create(ordersSlice(s, dir)
         .where(col("o_orderkey") % 4 <= 1), t, "o_orderkey", numFiles = 4)
       s.sql(s"DELETE FROM graftlog.`$t` WHERE o_orderstatus = 'F'")
       t
-    })
+    }
     s.sql(
       s"""SELECT o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -1162,12 +1133,9 @@ object TableOps {
     * logged table born, loaded and queried without ONE API call.
     * CTAS and the DataFrame-writer append are pinned in
     * GraftLogCatalogSpec. */
-  private val createCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q426CatalogCreate(s: SparkSession, dir: String): DataFrame = {
     withCatalog(s)
-    val table = createCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogc_").toString + "/tbl"
       s.sql(
         s"""CREATE TABLE graftlog.`$t` (
@@ -1181,7 +1149,7 @@ object TableOps {
            |SELECT * FROM $view WHERE o_orderkey % 4 = 3""".stripMargin)
       finally s.catalog.dropTempView(view)
       t
-    })
+    }
     s.sql(
       s"""SELECT o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -1253,13 +1221,10 @@ object TableOps {
     * null-fill through the explicit-schema scan, post-evolution rows
     * carry values. Shares q337's oracle verbatim: the API evolution
     * and the SQL DDL state the same logical table. */
-  private val alterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q428CatalogAlterAdd(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val table = alterCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogalt_").toString + "/tbl"
       s.sql(
         s"""CREATE TABLE graftlog.`$t` (
@@ -1279,7 +1244,7 @@ object TableOps {
              |FROM $view WHERE o_orderkey % 4 = 1""".stripMargin)
       } finally s.catalog.dropTempView(view)
       t
-    })
+    }
     s.sql(
       s"""SELECT o_orderstatus, o_totalprice IS NULL AS pre_evolution,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -1304,12 +1269,9 @@ object TableOps {
     * rewrite's diff is key-range partitioned off the manifest stats:
     * no shuffle, no driver data, cost bounded by the rewritten
     * sliver ([[graft.sources.GraftLogChangeFeed]]). */
-  private val cdfStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q429ChangeFeedStream(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sinkName = cdfStreamCache.computeIfAbsent(dir, _ => {
+    val sinkName = {
       val t = Files.createTempDirectory("graft_tlogcdf_").toString
       val cp = Files.createTempDirectory("graft_tlogcdf_cp_").toString
       val name = s"q429_feed_${Integer.toHexString(dir.hashCode)}"
@@ -1329,7 +1291,7 @@ object TableOps {
       q.processAllAvailable()
       q.stop()
       name
-    })
+    }
     s.table(sinkName)
       .select($"o_orderkey", $"_commit_version".as("commit_version"),
         $"action", $"old_o_totalprice".as("old_price"),
@@ -1363,13 +1325,10 @@ object TableOps {
     * (the readback includes the pre-update version to pin that). The
     * ×2 price bump is exact in IEEE doubles, so the oracle replays it
     * in pure SQL. */
-  private val updateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q430CatalogUpdate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val table = updateCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogu_").toString
       TableLog.create(ordersSlice(s, dir).where(col("o_orderkey") % 4 <= 1),
         t, "o_orderkey", numFiles = 4)
@@ -1378,7 +1337,7 @@ object TableOps {
            |SET o_totalprice = o_totalprice * 2, o_orderstatus = 'U'
            |WHERE pmod(o_orderkey, 10) = 4""".stripMargin)
       t
-    })
+    }
     val now = s.sql(
       s"""SELECT CAST(2 AS BIGINT) AS version, o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -1424,13 +1383,10 @@ object TableOps {
     * counts). Same change recipe as q332, so it shares that oracle
     * verbatim — the API merge and the SQL MERGE state the same
     * table. */
-  private val sqlMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q431CatalogMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val table = sqlMergeCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogsm_").toString
       val base = ordersSlice(s, dir).where($"o_orderkey" % 4 === 0)
       TableLog.create(base, t, "o_orderkey", numFiles = 4)
@@ -1449,7 +1405,7 @@ object TableOps {
            |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
       finally s.catalog.dropTempView(view)
       t
-    })
+    }
     s.sql(
       s"""SELECT o_orderkey, o_custkey, o_orderstatus, o_orderpriority,
          |  o_totalprice
@@ -1470,9 +1426,6 @@ object TableOps {
     * GraftLogPartitionSpec pins the file-level pruning through the
     * ScanBuilder; this query pins end-to-end correctness (two append
     * commits, IN-filtered partition read) against the source data. */
-  private val partCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def partitionedDemo(s: SparkSession, dir: String): String =
     partCache.computeIfAbsent(dir, _ => {
       val t = Files.createTempDirectory("graft_tlogpt_").toString + "/tbl"
@@ -1561,12 +1514,9 @@ object TableOps {
     * their exact files) and the restated slice lands. The restatement
     * halves MEDIUM to every-third-order at double price, so the
     * oracle replays an unmistakable delta. */
-  private val overwriteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q434InsertOverwrite(s: SparkSession, dir: String): DataFrame = {
     withCatalog(s)
-    val table = overwriteCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogow_").toString + "/tbl"
       s.sql(
         s"""CREATE TABLE graftlog.`$t` (
@@ -1594,7 +1544,7 @@ object TableOps {
         s.catalog.dropTempView(view)
       }
       t
-    })
+    }
     s.sql(
       s"""SELECT o_orderpriority,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -1631,12 +1581,9 @@ object TableOps {
     * Incoming: URGENT and HIGH restated to every-fifth-order with
     * status 'R'; the other three priorities must come through
     * byte-identical (same files — spec-pinned). */
-  private val dynOverwriteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q435DynamicOverwrite(s: SparkSession, dir: String): DataFrame = {
     withCatalog(s)
-    val table = dynOverwriteCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogdy_").toString + "/tbl"
       s.sql(
         s"""CREATE TABLE graftlog.`$t` (
@@ -1666,7 +1613,7 @@ object TableOps {
         s.catalog.dropTempView(view)
       }
       t
-    })
+    }
     s.sql(
       s"""SELECT o_orderpriority, o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -1696,19 +1643,16 @@ object TableOps {
     * pre-truncate version still time-travels (read back in-query);
     * vacuum reclaims later under its retention rules. The readout is
     * (version, rows, key_sum) for both eras. */
-  private val truncateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q436Truncate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val table = truncateCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogtr_").toString
       TableLog.create(ordersSlice(s, dir).where($"o_orderkey" % 4 === 2),
         t, "o_orderkey", numFiles = 4)
       s.sql(s"TRUNCATE TABLE graftlog.`$t`")
       t
-    })
+    }
     val v1 = s.sql(
       s"""SELECT CAST(1 AS BIGINT) AS version,
          |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -1732,6 +1676,28 @@ object TableOps {
       |ORDER BY version""".stripMargin
 
   // ---------------------------------------------------------------- q437
+  /** Registers `catalog` as a warehouse-rooted GraftLogCatalog and
+    * returns its root. Spark builds a catalog plugin once per session
+    * and it keeps the root it was built with, so the root is chosen at
+    * the first call in a session and every later call reuses it. */
+  private def warehouseRoot(s: SparkSession, catalog: String): String = {
+    val key = s"spark.sql.catalog.$catalog.warehouse"
+    s.conf.getOption(key).getOrElse {
+      val root = Files.createTempDirectory(s"graft_${catalog}_").toString
+      s.conf.set(s"spark.sql.catalog.$catalog", "graft.sources.GraftLogCatalog")
+      s.conf.set(key, root)
+      root
+    }
+  }
+
+  /** Drops named warehouse tables left by an earlier call. The catalog
+    * refuses DROP TABLE, and a warehouse table is its directory, so the
+    * directory goes. */
+  private def dropWarehouseTables(root: String, ns: String,
+      names: String*): Unit =
+    names.foreach(n => org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$root/$ns/$n")))
+
   /** Warehouse-rooted NAMED tables — the reference's actual addressing
     * mode: BigQuery users query `project.dataset.table` (the id the
     * reference exports, `terraform/outputs.tf:13-15`), not a
@@ -1742,25 +1708,17 @@ object TableOps {
     * tree (spec-pinned) — the full BQ-shaped lifecycle with zero
     * paths in any statement. The readback aggregates through the
     * named table; DuckDB replays from the source. */
-  private val warehouseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
   def q437NamedCatalog(s: SparkSession, dir: String): DataFrame = {
-    warehouseCache.computeIfAbsent(dir, _ => {
-      val root = Files.createTempDirectory("graft_tlogwh_").toString
-      s.conf.set("spark.sql.catalog.graftwh",
-        "graft.sources.GraftLogCatalog")
-      s.conf.set("spark.sql.catalog.graftwh.warehouse", root)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS graftwh.sales")
-      val view = s"graft_wh_src_${Integer.toHexString(dir.hashCode)}"
-      ordersSlice(s, dir).createOrReplaceTempView(view)
-      try s.sql(
-        s"""CREATE TABLE graftwh.sales.orders_t
-           |TBLPROPERTIES ('key' = 'o_orderkey')
-           |AS SELECT * FROM $view WHERE o_orderkey % 4 <= 1""".stripMargin)
-      finally s.catalog.dropTempView(view)
-      true
-    })
+    val root = warehouseRoot(s, "graftwh")
+    dropWarehouseTables(root, "sales", "orders_t")
+    s.sql("CREATE NAMESPACE IF NOT EXISTS graftwh.sales")
+    val view = s"graft_wh_src_${Integer.toHexString(dir.hashCode)}"
+    ordersSlice(s, dir).createOrReplaceTempView(view)
+    try s.sql(
+      s"""CREATE TABLE graftwh.sales.orders_t
+         |TBLPROPERTIES ('key' = 'o_orderkey')
+         |AS SELECT * FROM $view WHERE o_orderkey % 4 <= 1""".stripMargin)
+    finally s.catalog.dropTempView(view)
     s.sql(
       s"""SELECT o_orderpriority,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -1788,44 +1746,38 @@ object TableOps {
     * (txnAppId ledger); two inserts + two chain runs here, and a
     * third no-op run proves the checkpoint replays clean. The oracle
     * replays the union of both slices. */
-  private val streamNameCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
   def q441StreamByName(s: SparkSession, dir: String): DataFrame = {
-    streamNameCache.computeIfAbsent(dir, _ => {
-      val root = Files.createTempDirectory("graft_tlogsn_").toString
-      s.conf.set("spark.sql.catalog.graftwhq",
-        "graft.sources.GraftLogCatalog")
-      s.conf.set("spark.sql.catalog.graftwhq.warehouse", root)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS graftwhq.feed")
-      val ddl = """(o_orderkey BIGINT, o_custkey BIGINT,
-        |  o_orderstatus STRING, o_orderpriority STRING,
-        |  o_totalprice DOUBLE) TBLPROPERTIES ('key' = 'o_orderkey')
-        |""".stripMargin
-      s.sql(s"CREATE TABLE graftwhq.feed.src $ddl")
-      s.sql(s"CREATE TABLE graftwhq.feed.dst $ddl")
-      val view = s"graft_sn_src_${Integer.toHexString(dir.hashCode)}"
-      ordersSlice(s, dir).createOrReplaceTempView(view)
-      def chain(): Unit = {
-        val q = s.readStream.table("graftwhq.feed.src")
-          .writeStream
-          .option("checkpointLocation", s"$root/_cp")
-          .option("txnAppId", "q441-chain")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .toTable("graftwhq.feed.dst")
-        q.awaitTermination()
-      }
-      try {
-        s.sql(s"""INSERT INTO graftwhq.feed.src
-                 |SELECT * FROM $view WHERE o_orderkey % 4 = 0""".stripMargin)
-        chain()
-        s.sql(s"""INSERT INTO graftwhq.feed.src
-                 |SELECT * FROM $view WHERE o_orderkey % 4 = 1""".stripMargin)
-        chain()
-        chain() // no new versions: replays clean, lands nothing
-      } finally s.catalog.dropTempView(view)
-      true
-    })
+    val root = warehouseRoot(s, "graftwhq")
+    dropWarehouseTables(root, "feed", "src", "dst")
+    // a fresh checkpoint per call: the recreated tables restart at v1
+    val cp = Files.createTempDirectory("graft_tlogsn_cp_").toString
+    s.sql("CREATE NAMESPACE IF NOT EXISTS graftwhq.feed")
+    val ddl = """(o_orderkey BIGINT, o_custkey BIGINT,
+      |  o_orderstatus STRING, o_orderpriority STRING,
+      |  o_totalprice DOUBLE) TBLPROPERTIES ('key' = 'o_orderkey')
+      |""".stripMargin
+    s.sql(s"CREATE TABLE graftwhq.feed.src $ddl")
+    s.sql(s"CREATE TABLE graftwhq.feed.dst $ddl")
+    val view = s"graft_sn_src_${Integer.toHexString(dir.hashCode)}"
+    ordersSlice(s, dir).createOrReplaceTempView(view)
+    def chain(): Unit = {
+      val q = s.readStream.table("graftwhq.feed.src")
+        .writeStream
+        .option("checkpointLocation", cp)
+        .option("txnAppId", "q441-chain")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable("graftwhq.feed.dst")
+      q.awaitTermination()
+    }
+    try {
+      s.sql(s"""INSERT INTO graftwhq.feed.src
+               |SELECT * FROM $view WHERE o_orderkey % 4 = 0""".stripMargin)
+      chain()
+      s.sql(s"""INSERT INTO graftwhq.feed.src
+               |SELECT * FROM $view WHERE o_orderkey % 4 = 1""".stripMargin)
+      chain()
+      chain() // no new versions: replays clean, lands nothing
+    } finally s.catalog.dropTempView(view)
     s.sql(
       s"""SELECT o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -1855,13 +1807,10 @@ object TableOps {
     * never appear in the restore manifest). The readback proves
     * v4 ≡ v2 while v3 differs; DuckDB replays all three eras from
     * the source rows. */
-  private val restoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q442CatalogRestore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val table = restoreCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogre_").toString
       TableLog.create(ordersSlice(s, dir).where($"o_orderkey" % 4 === 2),
         t, "o_orderkey", numFiles = 4)
@@ -1870,7 +1819,7 @@ object TableOps {
       s.sql(s"DELETE FROM graftlog.`$t` WHERE o_orderkey % 10 < 5")
       s.sql(s"CALL graftlog.restore('$t', 2)")
       t
-    })
+    }
     def era(v: Long): DataFrame = s.sql(
       s"""SELECT CAST($v AS BIGINT) AS version,
          |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -1904,13 +1853,10 @@ object TableOps {
     * matched-group filter (the price of touch-everything semantics;
     * q431 stays the selective fast path). Readout replays the whole
     * surviving table; DuckDB rebuilds it from the five arms. */
-  private val triMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q444MergeTriClause(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val table = triMergeCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogtm_").toString
       val base = ordersSlice(s, dir).where($"o_orderkey" % 4 === 1)
       TableLog.create(base, t, "o_orderkey", numFiles = 4)
@@ -1934,7 +1880,7 @@ object TableOps {
            |  UPDATE SET o_orderstatus = 'S'""".stripMargin)
       finally s.catalog.dropTempView(view)
       t
-    })
+    }
     s.sql(
       s"""SELECT o_orderkey, o_custkey, o_orderstatus, o_orderpriority,
          |  o_totalprice
@@ -1977,13 +1923,10 @@ object TableOps {
     * the same layout. The readout keys sums by priority in exact
     * BIGINTs; GraftLogPartitionSpec pins the exchange-free plan, this
     * query pins values cross-engine. */
-  private val spjCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   def q445StoragePartitionedJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val (fact, dim) = spjCache.computeIfAbsent(dir, _ => {
+    val (fact, dim) = {
       val f = Files.createTempDirectory("graft_tlogsp_").toString + "/fact"
       val d = Files.createTempDirectory("graft_tlogsp_").toString + "/dim"
       s.sql(
@@ -2013,7 +1956,7 @@ object TableOps {
         s.sql(s"INSERT INTO graftlog.`$d` SELECT * FROM $dv")
       } finally { s.catalog.dropTempView(fv); s.catalog.dropTempView(dv) }
       (f, d)
-    })
+    }
     val key = "spark.sql.sources.v2.bucketing.enabled"
     val saved = s.conf.get(key)
     s.conf.set(key, "true")
@@ -2055,19 +1998,16 @@ object TableOps {
     * verb — so a custkey range predicate, NOT the key, skips files
     * via the recorded custkey bounds; the catalog spec pins the file
     * counts, this query pins rows cross-engine. */
-  private val cstatCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q446ColumnStatsSkip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val table = cstatCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogcs_").toString
       TableLog.create(ordersSlice(s, dir).where($"o_orderkey" % 4 === 3),
         t, "o_orderkey", numFiles = 8)
       TableLog.compactZorder(s, t, "o_custkey", "o_orderkey", numFiles = 8)
       t
-    })
+    }
     s.sql(
       s"""SELECT o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -2094,13 +2034,10 @@ object TableOps {
     * stays byte-identical (read back in-query to prove isolation), and
     * the clone's own rewrites land in its own data dir. DuckDB replays
     * both lineages from the source rows. */
-  private val cloneCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   def q449ShallowClone(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val (src, dst) = cloneCache.computeIfAbsent(dir, _ => {
+    val (src, dst) = {
       val a = Files.createTempDirectory("graft_tlogcl_").toString + "/src"
       val b = Files.createTempDirectory("graft_tlogcl_").toString + "/dst"
       TableLog.create(ordersSlice(s, dir).where($"o_orderkey" % 8 === 6),
@@ -2116,7 +2053,7 @@ object TableOps {
       try s.sql(s"INSERT INTO graftlog.`$b` SELECT * FROM $v")
       finally s.catalog.dropTempView(v)
       (a, b)
-    })
+    }
     def era(tag: String, t: String): DataFrame = s.sql(
       s"""SELECT '$tag' AS side, CAST(count(*) AS BIGINT) AS n_rows,
          |  CAST(sum(o_orderkey) AS BIGINT) AS key_sum
@@ -2171,22 +2108,9 @@ object TableOps {
     * scan + KB sidecars instead of rewriting every touched file. The
     * readout replays all three eras; DuckDB rebuilds them from the
     * source rows. */
-  private val dvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q454DeletionVectors(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    withCatalog(s)
-    val table = dvCache.computeIfAbsent(dir, _ => {
-      val t = Files.createTempDirectory("graft_tlogdv_").toString
-      TableLog.create(ordersSlice(s, dir).where($"o_orderkey" % 8 === 1),
-        t, "o_orderkey", numFiles = 4)
-      s.sql(s"CALL graftlog.delete_dv('$t', 'o_custkey % 7 = 0')")
-      s.sql(
-        s"CALL graftlog.delete_dv('$t', \"o_orderstatus = 'F' AND " +
-          "o_orderkey % 5 = 1\")")
-      t
-    })
+    val table = dvTable(s, dir)
     def era(v: Long): DataFrame = s.sql(
       s"""SELECT CAST($v AS BIGINT) AS version, o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -2195,6 +2119,23 @@ object TableOps {
          |GROUP BY o_orderstatus""".stripMargin)
     era(1).unionByName(era(2)).unionByName(era(3))
       .orderBy($"version", $"o_orderstatus")
+  }
+
+  /** q454's three-era table (create, then two `delete_dv` calls),
+    * shared read-only with q456. Registers the `graftlog` catalog
+    * both readers address it through. */
+  private def dvTable(s: SparkSession, dir: String): String = {
+    withCatalog(s)
+    dvCache.computeIfAbsent(dir, _ => {
+      val t = Files.createTempDirectory("graft_tlogdv_").toString
+      TableLog.create(ordersSlice(s, dir).where(col("o_orderkey") % 8 === 1),
+        t, "o_orderkey", numFiles = 4)
+      s.sql(s"CALL graftlog.delete_dv('$t', 'o_custkey % 7 = 0')")
+      s.sql(
+        s"CALL graftlog.delete_dv('$t', \"o_orderstatus = 'F' AND " +
+          "o_orderkey % 5 = 1\")")
+      t
+    })
   }
 
   private val q454Oracle =
@@ -2221,13 +2162,10 @@ object TableOps {
     * by position (their files never rewrite), the updated images land
     * as new files, and total rows conserve. The readout replays both
     * eras; the oracle rebuilds them from source rows. */
-  private val morUpdCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q455MorUpdate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val table = morUpdCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogmu_").toString
       TableLog.create(ordersSlice(s, dir).where($"o_orderkey" % 8 === 5),
         t, "o_orderkey", numFiles = 4)
@@ -2235,7 +2173,7 @@ object TableOps {
         Map("o_orderstatus" -> lit("U"),
           "o_totalprice" -> ($"o_totalprice" * 3)), numFiles = 2)
       t
-    })
+    }
     def era(v: Long): DataFrame = s.sql(
       s"""SELECT CAST($v AS BIGINT) AS version, o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -2276,8 +2214,7 @@ object TableOps {
     * spec-pinned (DuckDB cannot see manifests). */
   def q456TableDetail(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    q454DeletionVectors(s, dir).count() // ensure the DV table exists
-    val table = dvCache.get(dir)
+    val table = dvTable(s, dir)
     (1L to 3L).map { v =>
       s.sql(
         s"""SELECT version, live_rows
@@ -2307,13 +2244,10 @@ object TableOps {
     * zero file rewrites — while partitioned or un-gated tables keep
     * copy-on-write. The readout replays both eras through time travel;
     * the spec pins the no-rewrite physics and the UNSET round-trip. */
-  private val morSqlCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q458MorDeleteSql(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val table = morSqlCache.computeIfAbsent(dir, _ => {
+    val table = {
       val t = Files.createTempDirectory("graft_tlogms_").toString + "/tbl"
       s.sql(
         s"""CREATE TABLE graftlog.`$t` (
@@ -2328,7 +2262,7 @@ object TableOps {
       finally s.catalog.dropTempView(v)
       s.sql(s"DELETE FROM graftlog.`$t` WHERE o_custkey % 6 = 1")
       t
-    })
+    }
     def era(v: Long): DataFrame = s.sql(
       s"""SELECT CAST($v AS BIGINT) AS version, o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -2361,12 +2295,9 @@ object TableOps {
     * rows exactly (v2's rewritten survivors never double-count), and
     * the oracle replays that contract — deleted rows still appear
     * (their insert predates the skipped delete), fresh rows follow. */
-  private val skipCcCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q459SkipChangeCommits(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sinkName = skipCcCache.computeIfAbsent(dir, _ => {
+    val sinkName = {
       val t = Files.createTempDirectory("graft_tlogsc_").toString
       val cp = Files.createTempDirectory("graft_tlogsc_cp_").toString
       val name = s"q459_skipcc_${Integer.toHexString(dir.hashCode)}"
@@ -2388,7 +2319,7 @@ object TableOps {
       q.processAllAvailable()
       q.stop()
       name
-    })
+    }
     s.table(sinkName)
       .select($"o_orderkey", $"o_orderstatus", $"o_orderpriority")
       .orderBy($"o_orderkey")
@@ -2414,13 +2345,10 @@ object TableOps {
     * fact-to-fact key join plans with NO exchange — at 100 TB this
     * deletes the single most expensive shuffle there is. Plan pinned
     * by spec; this query pins values cross-engine. */
-  private val bktCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   def q460BucketedKeyJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val (t1, t2) = bktCache.computeIfAbsent(dir, _ => {
+    val (t1, t2) = {
       val a = Files.createTempDirectory("graft_tlogbk_").toString + "/a"
       val b = Files.createTempDirectory("graft_tlogbk_").toString + "/b"
       s.sql(
@@ -2446,7 +2374,7 @@ object TableOps {
         s.sql(s"INSERT INTO graftlog.`$b` SELECT * FROM $vb")
       } finally { s.catalog.dropTempView(va); s.catalog.dropTempView(vb) }
       (a, b)
-    })
+    }
     val k = "spark.sql.sources.v2.bucketing.enabled"
     val saved = s.conf.get(k)
     s.conf.set(k, "true")
@@ -2482,13 +2410,10 @@ object TableOps {
     * the scan (GraftLogPartitionSpec pins the file counts; this query
     * pins values cross-engine). At 100 TB restating or scanning ten
     * days of an events table reads ten days' files, not the table. */
-  private val daysCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q461DaysPartitionedEvents(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = daysCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogdy_").toString + "/ev"
       s.sql(
         s"""CREATE TABLE graftlog.`$path` (event_id BIGINT, ts TIMESTAMP,
@@ -2502,7 +2427,7 @@ object TableOps {
       try s.sql(s"INSERT INTO graftlog.`$path` SELECT * FROM $v")
       finally s.catalog.dropTempView(v)
       path
-    })
+    }
     s.sql(
       s"""SELECT event_type,
          |  CAST(count(*) AS BIGINT) AS n_events,
@@ -2532,13 +2457,10 @@ object TableOps {
     * one, and an INSERT + DELETE after the rename prove DML composes
     * with the mapping. The oracle replays each era as the pure SQL
     * its history implies. */
-  private val renameCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q462RenameColumn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = renameCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogrn_").toString + "/t"
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where($"o_orderkey" % 4 === 0)
@@ -2555,7 +2477,7 @@ object TableOps {
       finally s.catalog.dropTempView(v)
       s.sql(s"DELETE FROM graftlog.`$path` WHERE price < 1000.0")    // v4
       path
-    })
+    }
     val now = s.sql(
       s"""SELECT CAST(2 AS BIGINT) AS era, o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -2597,13 +2519,10 @@ object TableOps {
     * — the full BigQuery-style evolve-narrow-evolve cycle without a
     * single rewrite. VERSION AS OF 1 still reads the dropped column:
     * history is immutable under metadata evolution too. */
-  private val dropCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q463DropColumn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = dropCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogdc_").toString + "/t"
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where($"o_orderkey" % 4 === 2)
@@ -2613,7 +2532,7 @@ object TableOps {
       s.sql(s"ALTER TABLE graftlog.`$path` DROP COLUMN o_orderpriority")
       s.sql(s"ALTER TABLE graftlog.`$path` ADD COLUMN note STRING")  // v3
       path
-    })
+    }
     val now = s.sql(
       s"""SELECT CAST(2 AS BIGINT) AS era, o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -2656,13 +2575,10 @@ object TableOps {
     * `terraform/cloud_scheduler.tf:4`) landed in the layout a 100-TB
     * events table actually needs. Exactly-once via the txn ledger;
     * the oracle replays the streamed slice from the source parquet. */
-  private val daysStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q466DaysStreamIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = daysStreamCache.computeIfAbsent(dir, _ => {
+    val t = {
       val root = Files.createTempDirectory("graft_tlogds_").toString
       val path = s"$root/ev"
       s.sql(
@@ -2683,7 +2599,7 @@ object TableOps {
         .start()
       q.awaitTermination()
       path
-    })
+    }
     s.sql(
       s"""SELECT event_type,
          |  CAST(count(*) AS BIGINT) AS n_events,
@@ -2716,13 +2632,10 @@ object TableOps {
     * enumerates exactly the erased rows. The readout pins both sides
     * — the surviving table and the `__erased` audit row — against an
     * oracle that replays the erasure in pure SQL. */
-  private val gdprCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q468GdprErasure(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = gdprCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tloggd_").toString + "/t"
       val slice = ordersSlice(s, dir).where($"o_orderkey" % 4 === 1)
         .select($"o_orderkey", $"o_custkey", $"o_orderstatus")
@@ -2733,7 +2646,7 @@ object TableOps {
       val victim = slice.agg(min($"o_custkey")).collect().head.getLong(0)
       s.sql(s"DELETE FROM graftlog.`$path` WHERE o_custkey = $victim") // v3
       path
-    })
+    }
     val now = s.sql(
       s"""SELECT o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -2776,13 +2689,10 @@ object TableOps {
     * the history implies, compaction invisible. At 100 TB this verb
     * is the housekeeping loop: daily debt folds daily, the bulk is
     * never re-priced. */
-  private val compactSmallCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q470CompactSmallSql(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = compactSmallCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogcs_").toString + "/t"
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where($"o_orderkey" % 4 === 3)
@@ -2797,7 +2707,7 @@ object TableOps {
         TableLog.state(path).active.maxBy(_.rows).relPath))
       s.sql(s"CALL graftlog.compact_small('$path', ${big}L, 1)")
       path
-    })
+    }
     // the fold is physical only: 2 live files, logical rows exact
     val files = s.sql(s"SELECT n_files FROM graftlog.`$t#detail`")
       .collect().head.getLong(0)
@@ -2882,13 +2792,10 @@ object TableOps {
     * is attempted and must fail). The oracle replays only the
     * surviving writes. Data quality as a TABLE property, not a
     * pipeline convention — the gate travels with the table. */
-  private val constraintCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q477CheckConstraint(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = constraintCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogck_").toString + "/t"
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where($"o_orderkey" % 4 === 0)
@@ -2911,7 +2818,7 @@ object TableOps {
       require(bad && TableLog.latestVersion(path) == before,
         "violating insert must fail without committing")
       path
-    })
+    }
     s.sql(
       s"""SELECT o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -2945,12 +2852,9 @@ object TableOps {
     * semantics literally. At 100 TB both ALTERs cost one manifest
     * line each — the schema change a real warehouse makes without a
     * backfill. */
-  private val defaultWidenCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q481DefaultWiden(s: SparkSession, dir: String): DataFrame = {
     withCatalog(s)
-    val t = defaultWidenCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogdw_").toString + "/tbl"
       s.sql(
         s"""CREATE TABLE graftlog.`$path` (o_orderkey BIGINT, ship INT)
@@ -2979,7 +2883,7 @@ object TableOps {
           x.nRemoves == 0) >= 2,
         s"expected two metadata-only ALTER commits, history: $h")
       path
-    })
+    }
     s.sql(
       s"""SELECT bonus, CAST(count(*) AS BIGINT) AS n_orders,
          |  CAST(sum(ship) AS BIGINT) AS ship_sum
@@ -3015,13 +2919,10 @@ object TableOps {
     * 100 TB this is the staging workflow every production training-
     * corpus ingestion runs: audit a multi-TB drop in place, publish
     * by metadata. */
-  private val wapCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q482BranchWap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = wapCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogwap_").toString + "/t"
       val slice = ordersSlice(s, dir)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
@@ -3061,7 +2962,7 @@ object TableOps {
         TableLog.latestVersion(path) == before + 1,
         "publish must land as exactly one fast-forward commit")
       path
-    })
+    }
     s.sql(
       s"""SELECT o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -3092,13 +2993,10 @@ object TableOps {
     * head included (publishing does not consume the branch; its
     * lifecycle is the operator's to end). Every count in the oracle
     * derives from the same orders slices. */
-  private val branchesMetaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q486BranchesMeta(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = branchesMetaCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogbrm_").toString + "/t"
       val slice = ordersSlice(s, dir)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
@@ -3110,7 +3008,7 @@ object TableOps {
         numFiles = 2)
       TableLog.publish(s, path, "drop_a")                              // v2
       path
-    })
+    }
     s.sql(s"SELECT branch_name, base_version, head_version, n_files, " +
       s"live_rows FROM graftlog.`$t#branches` ORDER BY branch_name")
   }
@@ -3147,13 +3045,10 @@ object TableOps {
     * this is how a table adopts partitioning YEARS into its life
     * without a stop-the-world rewrite: the old data migrates when
     * housekeeping touches it anyway. */
-  private val specEvoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q489PartitionEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = specEvoCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogpse_").toString + "/ev"
       val ev = Tables.events(s, dir)
         .select($"event_id", $"ts", $"event_type", $"value")
@@ -3168,7 +3063,7 @@ object TableOps {
       require(TableLog.state(path).active.forall(_.specId == 1),
         "compact must migrate every file to the current spec")
       path
-    })
+    }
     s.sql(
       s"""SELECT event_type,
          |  CAST(count(*) AS BIGINT) AS n_events,
@@ -3196,13 +3091,10 @@ object TableOps {
     * through both view layers into the base table's manifest-pruned
     * scan — a view costs nothing the underlying query didn't. The
     * oracle replays the surviving definition inline as CTEs. */
-  private val viewCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q490PersistentView(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = viewCache.computeIfAbsent(dir, _ => {
+    val t = {
       val base = Files.createTempDirectory("graft_tlogview_").toString
       val path = base + "/orders_t"
       val slice = ordersSlice(s, dir)
@@ -3227,7 +3119,7 @@ object TableOps {
         s"sum(CAST(o_totalprice AS DECIMAL(12,2))) AS sum_dec " +
         s"FROM graftlog.`$base/v_big` GROUP BY o_orderstatus")
       base
-    })
+    }
     s.sql(
       s"""SELECT o_orderstatus,
          |  CAST(n_orders AS BIGINT) AS n_orders,
@@ -3267,14 +3159,11 @@ object TableOps {
     * day's files, with no consumer-side version bookkeeping. The
     * fixture captures the REAL commit stamps and the oracle replays
     * the two appended slices as inserts. */
-  private val tsFeedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long, Long)]()
-
   def q491ChangesBetweenTimestamps(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
     graft.GraftFunctions.install(s)
-    val (t, fromTs, toTs) = tsFeedCache.computeIfAbsent(dir, _ => {
+    val (t, fromTs, toTs) = {
       val path = Files.createTempDirectory("graft_tlogtsf_").toString + "/t"
       val slice = ordersSlice(s, dir)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
@@ -3285,7 +3174,7 @@ object TableOps {
       Thread.sleep(15)
       TableLog.append(slice.where($"o_orderkey" % 7 === 2), path, 2)   // v3
       (path, TableLog.commitStamp(path, 1L), TableLog.commitStamp(path, 3L))
-    })
+    }
     s.sql(
       s"""SELECT action, CAST(count(*) AS BIGINT) AS n_rows,
          |  CAST(sum(o_orderkey) AS BIGINT) AS key_sum
@@ -3312,13 +3201,10 @@ object TableOps {
     * stop-the-world migration: the merge prices at the matched files,
     * the schema ride-along is free metadata. Oracle replays the
     * upsert arithmetic in SQL. */
-  private val mergeEvoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q492MergeEvolve(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = mergeEvoCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogmev_").toString + "/t"
       val slice = ordersSlice(s, dir)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
@@ -3336,7 +3222,7 @@ object TableOps {
       require(TableLog.latestVersion(path) == 2L,
         "evolving merge must be ONE commit")
       path
-    })
+    }
     s.sql(
       s"""SELECT o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -3377,13 +3263,10 @@ object TableOps {
     * deterministic; SET TBLPROPERTIES refuses NEW generated columns
     * (active files were not produced by the expression). The oracle
     * replays the generation expression over the same slices. */
-  private val genColCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q494GeneratedColumns(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = genColCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tloggen_").toString + "/t"
       TableLog.createEmpty(path,
         "o_orderkey BIGINT, o_totalprice DOUBLE, price_band STRING",
@@ -3410,7 +3293,7 @@ object TableOps {
       require(TableLog.latestVersion(path) == before,
         "a refused generated-column write moved the table")
       path
-    })
+    }
     s.sql(
       s"""SELECT price_band,
          |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -3444,13 +3327,10 @@ object TableOps {
     * team a writable corpus copy with its own retention policy,
     * priced at metadata. The oracle replays both tables' final
     * states from the orders slices. */
-  private val deepCloneCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   def q495DeepClone(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val (src, dst) = deepCloneCache.computeIfAbsent(dir, _ => {
+    val (src, dst) = {
       val base = Files.createTempDirectory("graft_tlogdeep_").toString
       val (srcP, dstP) = (base + "/src", base + "/dst")
       val slice = ordersSlice(s, dir)
@@ -3474,7 +3354,7 @@ object TableOps {
         slice.where($"o_orderkey" % 10 >= 6 && $"o_orderkey" % 10 < 8).count(),
         "the clone vacuum must not reclaim files the source still reads")
       (srcP, dstP)
-    })
+    }
     def side(label: String, path: String): DataFrame = s.sql(
       s"""SELECT '$label' AS side, CAST(count(*) AS BIGINT) AS n_rows,
          |  CAST(sum(o_orderkey) AS BIGINT) AS key_sum
@@ -3509,13 +3389,10 @@ object TableOps {
     * oracle replays it with row_number() and the pair-sum checksum
     * Σ id·o_orderkey pins the exact row↔id PAIRING, not just the id
     * set. */
-  private val identityCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q496IdentityColumn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = identityCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogid_").toString + "/t"
       TableLog.createEmpty(path,
         "id BIGINT, o_orderkey BIGINT, o_totalprice DOUBLE", "id",
@@ -3541,7 +3418,7 @@ object TableOps {
       require(TableLog.latestVersion(path) == before,
         "a refused identity write moved the table")
       path
-    })
+    }
     s.sql(
       s"""SELECT CAST(count(*) AS BIGINT) AS n_rows,
          |  CAST(min(id) AS BIGINT) AS min_id,
@@ -3585,13 +3462,10 @@ object TableOps {
     * column aborts with the table unmoved. The oracle replays the
     * allocation with row_number() and the generation CASE; the
     * pair-sum pins the exact row↔id pairing through the SQL path. */
-  private val sqlInsertCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q499SqlGeneratedInsert(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = sqlInsertCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogsqlins_")
         .toString + "/t"
       TableLog.createEmpty(path,
@@ -3628,7 +3502,7 @@ object TableOps {
       require(TableLog.latestVersion(path) == before,
         "a refused SQL insert moved the table")
       path
-    })
+    }
     s.sql(
       s"""SELECT price_band,
          |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -3672,13 +3546,10 @@ object TableOps {
     * (O(files) driver metadata, no data I/O) and the audit stays
     * priced at the branch delta. The oracle replays the surviving
     * slices. */
-  private val rebaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q500PublishRebase(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = rebaseCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogreb_").toString + "/t"
       val slice = ordersSlice(s, dir)
         .select($"o_orderkey", $"o_totalprice")
@@ -3707,7 +3578,7 @@ object TableOps {
       require(TableLog.latestVersion(path) == before,
         "a refused overlapping publish moved main")
       path
-    })
+    }
     s.sql(
       s"""SELECT CAST(o_orderkey % 7 AS BIGINT) AS k_mod,
          |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -3738,13 +3609,10 @@ object TableOps {
     * property per ref: O(1) metadata at any scale, and the vacuum
     * pin costs one historical state() per distinct pinned version.
     * The oracle replays both eras from the orders slices. */
-  private val tagCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q506SnapshotTags(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = tagCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogtag_").toString + "/t"
       val slice = ordersSlice(s, dir).select($"o_orderkey", $"o_totalprice")
       TableLog.create(slice.where($"o_orderkey" % 6 === 1),
@@ -3760,7 +3628,7 @@ object TableOps {
       val tagged = TableLog.listTags(path)
       require(tagged == Seq(("baseline", 1L)), s"tags wrong: $tagged")
       path
-    })
+    }
     def side(label: String, asOf: String): DataFrame = s.sql(
       s"""SELECT '$label' AS side, CAST(count(*) AS BIGINT) AS n_rows,
          |  CAST(sum(o_orderkey) AS BIGINT) AS key_sum
@@ -3794,13 +3662,10 @@ object TableOps {
     * oracle replays the update in pure SQL over the data plane. At
     * 100 TB: updating 0.1% of a days(ts) table costs sidecar KBs plus
     * the changed rows — the same economics q508 gives deletes. */
-  private val morUpdateSqlCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q513MorUpdateSql(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = morUpdateSqlCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogmu_").toString + "/t"
       val slice = ordersSlice(s, dir).where($"o_orderkey" % 9 === 5)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
@@ -3818,7 +3683,7 @@ object TableOps {
       require(st.active.exists(_.dv.isDefined),
         "merge-on-read SQL UPDATE landed no deletion vector")
       path
-    })
+    }
     s.sql(
       s"""SELECT o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -3850,13 +3715,10 @@ object TableOps {
     * so debt should fold back down off-peak). BOTH planes are
     * manifest folds: at 100 TB the advisor costs two O(files) driver
     * reads and never opens a data file. */
-  private val dvDebtCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q514DvDebtAdvisor(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = dvDebtCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogdd_").toString + "/t"
       val slice = Tables.events(s, dir)
         .select($"event_id", $"ts", $"user_id", $"event_type")
@@ -3869,7 +3731,7 @@ object TableOps {
       TableLog.deleteWhereDv(s, path,
         col("user_id") === w1 + 1L && col("event_type") === "error") // v3
       path
-    })
+    }
     val written = s.sql(
       s"""SELECT `days(ts)` AS day, row_count AS written
          |FROM graftlog.`$t#partitions` VERSION AS OF 1""".stripMargin)
@@ -3919,13 +3781,10 @@ object TableOps {
     * readout planes are O(files) manifest folds. At 100 TB this is
     * the difference between folding one day's debt and a full-table
     * rewrite. */
-  private val compactWhereCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q519CompactWhere(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = compactWhereCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogcw_").toString + "/t"
       // the slice materializes ONCE — the four per-day appends then
       // filter the frozen frame instead of rescanning the source
@@ -3946,7 +3805,7 @@ object TableOps {
         "\"ts >= TIMESTAMP'2024-01-02 00:00:00' AND " +
         "ts <= TIMESTAMP'2024-01-02 23:59:59'\", 1)")
       path
-    })
+    }
     // remaining sidecar debt per day: manifest fold, zero data reads
     // (fixture files are single-day, so head-tuple attribution holds)
     val dead = TableLog.state(t).active
@@ -4001,13 +3860,10 @@ object TableOps {
     * MoR DML that would poison an appends-only reader (double-counted
     * re-adds) is exactly what the content-identity diff rides
     * through. */
-  private val mvMorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q520IncrementalMvMor(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = mvMorCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogmv_").toString + "/t"
       // frozen once: the fixture's create/append/merge-source frames
       // all filter this slice — three source scans fold to one
@@ -4040,7 +3896,7 @@ object TableOps {
       require(TableLog.state(path).active.exists(_.dv.isDefined),
         "q520 fixture must exercise merge-on-read commits")
       path
-    })
+    }
     def cents(c: org.apache.spark.sql.Column) =
       round(c * 100).cast("long")
     // initial build: ONE scan of the creation-era snapshot (v1)
@@ -4111,13 +3967,10 @@ object TableOps {
     * full-table `zorder` rewrite is unaffordable for a layout
     * experiment, and the day-scoped one composes with q514's
     * advisor naming WHICH days are read-hot. */
-  private val compactZorderWhereCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q523CompactWhereZorder(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = compactZorderWhereCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogzw_").toString + "/t"
       val slice = Tables.events(s, dir)
         .select($"event_id", $"ts", $"user_id")
@@ -4135,7 +3988,7 @@ object TableOps {
         "ts <= TIMESTAMP'2024-01-02 23:59:59'\", 2, " +
         "zorder => 'event_id,user_id')")
       path
-    })
+    }
     // file count per day: manifest fold, zero data reads (files are
     // single-day by construction — the zorder scope is single-tuple)
     val nf = TableLog.state(t).active
@@ -4180,13 +4033,10 @@ object TableOps {
     * replayed manifest (no data I/O for loaded files), fresh files
     * read once, and the ledger rides the checkpointed manifest at
     * O(loaded files) — the grain the active set already pays. */
-  private val copyIntoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q524CopyInto(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = copyIntoCache.computeIfAbsent(dir, _ => {
+    val t = {
       val base = Files.createTempDirectory("graft_tlogci_")
       val path = base.toString + "/t"
       val src = Files.createDirectories(base.resolve("incoming"))
@@ -4233,7 +4083,7 @@ object TableOps {
       require(late.getLong(1) == 1L && late.getLong(2) == 2L,
         s"q524: late file must load alone: $late")
       path
-    })
+    }
     TableLog.snapshot(s, t)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_rows"),
@@ -4270,13 +4120,10 @@ object TableOps {
     * story for dedup infrastructure: a KB-scale MoR erasure updates
     * the near-dup index at the cost of the changed rows, not a
     * corpus re-signature. */
-  private val lshIndexMorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q527IncrementalLshIndex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = lshIndexMorCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tloglsh_").toString + "/t"
       val docs = Tables.documents(s, dir).select($"doc_id", $"text")
         .localCheckpoint(true)
@@ -4309,7 +4156,7 @@ object TableOps {
       require(TableLog.state(path).active.exists(_.dv.isDefined),
         "q527 fixture must exercise merge-on-read commits")
       path
-    })
+    }
     // index build: ONE signature pass over the creation-era snapshot
     var idx = DedupOps.minhashBandedFrom(DedupOps.minhashSignaturesFrom(
       TableLog.snapshot(s, t, version = 1L))).localCheckpoint(true)
@@ -4400,13 +4247,10 @@ object TableOps {
     * legacy pipeline wrote stays where it is, owned by its writer,
     * while the table format takes over atomicity, stats and time
     * travel from the next commit on. */
-  private val adoptCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q528AdoptParquet(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = adoptCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogad_").toString + "/t"
       val ev = Tables.events(s, dir).select($"event_id", $"event_type")
       // the legacy job: plain parquet, no log, no stats
@@ -4420,7 +4264,7 @@ object TableOps {
       // adopted references in the same snapshot
       TableLog.append(ev.where(pmod($"event_id", lit(7)) === 2), path, 2)
       path
-    })
+    }
     TableLog.snapshot(s, t)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_rows"),
@@ -4449,13 +4293,10 @@ object TableOps {
     * branch preview, the published table, and the emptied `#branches`
     * inventory against one oracle. Zero-copy at any scale: fork is
     * O(chunks), publish O(delta), drop O(branch files). */
-  private val branchLifeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q509BranchLifecycle(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = branchLifeCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogbl_").toString + "/t"
       val slice = ordersSlice(s, dir).select($"o_orderkey", $"o_totalprice")
       TableLog.create(slice.where($"o_orderkey" % 7 === 1),
@@ -4479,7 +4320,7 @@ object TableOps {
         .head().getLong(0)
       require(n > 0L, "drop_branch reclaimed nothing")
       path
-    })
+    }
     val published = s.sql(
       s"""SELECT 'published' AS side,
          |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -4521,13 +4362,10 @@ object TableOps {
     * and the generated column agrees with its expression on every
     * row. At 100 TB: the completion pass reads only each commit's
     * own staged sliver; the audit joins are sliver-grain. */
-  private val idMergeStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q507IdentityMergeStream(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = idMergeStreamCache.computeIfAbsent(dir, _ => {
+    val t = {
       val root = Files.createTempDirectory("graft_tlogims_").toString
       val path = s"$root/t"
       TableLog.createEmpty(path,
@@ -4559,7 +4397,7 @@ object TableOps {
            |  THEN INSERT (o_orderkey, o_orderstatus)
            |  VALUES (src.o_orderkey, src.st)""".stripMargin)
       path
-    })
+    }
     val perStatus = s.sql(
       s"""SELECT o_orderstatus AS grp,
          |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -4617,13 +4455,10 @@ object TableOps {
     * and the change-feed audit row enumerating exactly the erased
     * rows. At 100 TB: candidate scan once, sidecars in KBs, metadata
     * queries stay O(files) driver folds. */
-  private val gdprPartCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q508GdprErasurePartitioned(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = gdprPartCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tloggp_").toString + "/t"
       val slice = Tables.events(s, dir)
         .select($"event_id", $"ts", $"user_id", $"event_type")
@@ -4641,7 +4476,7 @@ object TableOps {
       require(TableLog.state(path).active.exists(_.dv.isDefined),
         "SQL DELETE did not route merge-on-read on the partitioned table")
       path
-    })
+    }
     val meta = s.sql(
       s"""SELECT `days(ts)` AS day, row_count
          |FROM graftlog.`$t#partitions`""".stripMargin)
@@ -4691,13 +4526,10 @@ object TableOps {
     * the changed rows — not the full-file rewrites the COW MERGE
     * pays. Reference: the BQ MERGE surface over the loaded table
     * (`src/load/main.py:36-51` writes what users then MERGE-maintain). */
-  private val morMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q516MorMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
-    val t = morMergeCache.computeIfAbsent(dir, _ => {
+    val t = {
       val path = Files.createTempDirectory("graft_tlogmm_").toString + "/t"
       val slice = Tables.events(s, dir)
         .select($"event_id", $"ts", $"user_id", $"event_type")
@@ -4729,7 +4561,7 @@ object TableOps {
       require(before.subsetOf(st.active.map(_.relPath).toSet),
         "merge-on-read MERGE rewrote an original file")
       path
-    })
+    }
     val meta = s.sql(
       s"""SELECT concat('day:', `days(ts)`) AS dim, row_count AS cnt
          |FROM graftlog.`$t#partitions`""".stripMargin)

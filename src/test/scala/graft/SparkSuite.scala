@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs — same confs as the driver's
-  * Verify harness so tests see driver-identical behavior. */
+/** Shared local SparkSession for specs — built by [[GraftSession]], as
+  * the Verify harness's is, so tests see the behavior Verify sees. */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSuite.session
@@ -16,21 +16,5 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Testdata timestamps are µs with no tz annotation; read them as
-      // TIMESTAMP (UTC session) straight off the scan — same instants
-      // DuckDB's naive read yields, and no NTZ cast blocking pushdown.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession(4)
 }

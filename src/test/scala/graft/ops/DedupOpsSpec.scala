@@ -343,6 +343,17 @@ class DedupOpsSpec extends SparkSuite {
     }
   }
 
+  test("q122 centrality on zero documents: an empty rank frame, no division by zero") {
+    // a schema-only copy of documents, built at test time under target/
+    val dir = new java.io.File("target/empty_documents").getAbsolutePath
+    spark.read.parquet(s"$sf0001/documents.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val got = DedupOps.q122SourceCentrality(spark, dir)
+    assert(got.columns.toSeq == Seq("source", "rank"))
+    assert(got.schema("rank").dataType == org.apache.spark.sql.types.LongType)
+    assert(got.collect().isEmpty)
+  }
+
   test("q126 hard negatives: per-vector argmax inside the band, replayed") {
     import spark.implicits._
     val pairs = DedupOps.q68EmbeddingNearDup(spark, sf0001).collect()
