@@ -1,10 +1,13 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode NFC normalization as a native Catalyst expression.
@@ -42,10 +45,72 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** Word n-gram spans as a native Catalyst expression: every run of `n`
+  * consecutive tokens, joined with one space, in start order — one
+  * element per start position, multiplicity kept. Null tokens and
+  * arrays under `n` tokens give an empty array (never null), so the
+  * caller needs no size guard.
+  *
+  * This is the shingle kernel of the near-dup family. The same spans
+  * as a `transform(sequence(…))` lambda are interpreted per element,
+  * with one boxed lambda-variable write and one `element_at` per
+  * token of every span. Here generated code calls one primitive loop,
+  * [[WordSpans.spans]], from inside whole-stage codegen, and the
+  * interpreted path calls the same loop. Null tokens are skipped
+  * within a span, as `concat_ws` skips them. */
+case class WordSpans(child: Expression, n: Int) extends UnaryExpression {
+  require(n >= 1, s"WordSpans needs n >= 1, got $n")
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"WordSpans needs an array<string> arg, got $t")
+  }
+
+  override def eval(input: InternalRow): Any =
+    WordSpans.spans(child.eval(input).asInstanceOf[ArrayData], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(isNull = FalseLiteral, code = code"""
+      |${c.code}
+      |${classOf[ArrayData].getName} ${ev.value} =
+      |  graft.expr.WordSpans.spans(${c.isNull} ? null : ${c.value}, $n);""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): WordSpans =
+    copy(child = newChild)
+}
+
+object WordSpans {
+  private val sep = UTF8String.fromString(" ")
+
+  /** The spans of one token array; null tokens give no spans. */
+  def spans(toks: ArrayData, n: Int): ArrayData = {
+    val out = new Array[Any](if (toks == null) 0 else math.max(0, toks.numElements() - n + 1))
+    val win = new Array[UTF8String](n)
+    var i = 0
+    while (i < out.length) {
+      var j = 0
+      while (j < n) { win(j) = toks.getUTF8String(i + j); j += 1 }
+      out(i) = UTF8String.concatWs(sep, win: _*)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
 object TextExprs {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
   /** Unicode NFC normalization — drop-in string Column function. */
   def nfc(c: Column): Column =
     ColumnBridge.column(NfcNormalize(ColumnBridge.expression(c)))
+
+  /** Word n-gram spans of a token array — see [[WordSpans]]. */
+  def wordSpans(tokens: Column, n: Int): Column =
+    ColumnBridge.column(WordSpans(ColumnBridge.expression(tokens), n))
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.expr.{ArrayExprs, TextExprs}
 
 /** Deduplication operators for training-data pipelines over the
   * `documents` table — the [NS] dedup family from SURVEY.md §2.2
@@ -31,16 +32,12 @@ object DedupOps {
   private def toks(c: Column): Column = split(lower(c), " ")
 
   /** All n-gram word spans in start-position order (NOT deduped — one
-    * element per position, multiplicity preserved); empty for docs
-    * under n tokens (guards Spark's descending `sequence` when
-    * size-n+1 < 1). */
-  def spansN(text: Column, n: Int): Column = {
-    val t = toks(text)
-    when(size(t) >= n,
-      transform(sequence(lit(1), size(t) - (n - 1)), i =>
-        concat_ws(" ", (0 until n).map(j => element_at(t, i + j)): _*)))
-      .otherwise(array().cast("array<string>"))
-  }
+    * element per position, multiplicity preserved), joined with one
+    * space; empty for null text and docs under n tokens. Tokens are
+    * `split(lower(text), " ")`, so repeated spaces leave empty tokens
+    * in the spans. The spans come from the native
+    * [[graft.expr.WordSpans]] kernel. */
+  def spansN(text: Column, n: Int): Column = TextExprs.wordSpans(toks(text), n)
 
   /** Distinct n-gram word shingles ([[spansN]] deduped). */
   def shinglesN(text: Column, n: Int): Column = array_distinct(spansN(text, n))
@@ -94,14 +91,15 @@ object DedupOps {
     }
   }
 
-  /** (doc_id, sig array<long>[k]): explode distinct shingles, reduce
-    * k salted-hash minima with one codegen'd hash aggregate. Map-side
+  /** (doc_id, sig array<long>[k]): explode distinct shingles (the
+    * native [[graft.expr.WordSpans]] kernel, deduped), reduce k
+    * salted-hash minima with one codegen'd hash aggregate. Map-side
     * partial agg means the shuffle carries k longs per doc, not
     * shingles — the shape that holds at 100 TB. (A scalar fold over
-    * the shingle array works too, but optimizer inlining re-evaluates
-    * such non-trivial projections wherever they're referenced, and
-    * interpreted HOF lambdas multiply that cost — measured 10-30× on
-    * this pipeline.) */
+    * the shingle array would be an interpreted higher-order lambda
+    * per hash per shingle, and optimizer inlining re-evaluates such
+    * non-trivial projections wherever they're referenced — measured
+    * 10-30× slower on this pipeline.) */
   def minhashSignatures(s: SparkSession, dir: String): DataFrame =
     minhashSignaturesFrom(Tables.documentsSpread(s, dir))
 
@@ -123,15 +121,12 @@ object DedupOps {
       .select($"doc_id", array((0 until minhashK).map(i => col(s"m$i")): _*).as("sig"))
   }
 
-  /** All i<j pairs within a doc_id-sorted bucket member array —
-    * `array<struct<doc_id,…>>` → `array<struct<a,b>>`. Caller must
-    * guarantee `size(members) >= 2` (Spark's `sequence` turns
-    * descending for start > stop). */
-  private[ops] def pairUp(members: Column): Column =
-    flatten(transform(sequence(lit(1), size(members) - 1), i =>
-      transform(sequence(i + 1, size(members)), j =>
-        struct(element_at(members, i.cast("int")).as("a"),
-          element_at(members, j.cast("int")).as("b")))))
+  /** All i<j pairs within a doc_id-sorted bucket member array, in
+    * member order — `array<struct<doc_id,…>>` → `array<struct<a,b>>`,
+    * `a`/`b` holding the original member structs; empty under two
+    * members. The pairs come from the native [[graft.expr.PairUp]]
+    * kernel. */
+  private[ops] def pairUp(members: Column): Column = ArrayExprs.pairUp(members)
 
   /** (doc_id, sig, band, bucket): each doc exploded to its
     * [[lshBands]] band keys. bucket key = the band's minima joined
@@ -172,7 +167,7 @@ object DedupOps {
     // before they can explode into k²/2 pairs.
     minhashBanded(s, dir)
       .groupBy($"band", $"bucket")
-      .agg(array_sort(collect_list(struct($"doc_id", $"sig"))).as("members"))
+      .agg(sort_array(collect_list(struct($"doc_id", $"sig"))).as("members"))
       .where(size($"members") >= 2 && size($"members") <= maxGroupSize)
       // see q66: keep the pair fan-out parallel despite tiny input bytes
       .repartition(s.sparkContext.defaultParallelism, $"band", $"bucket")
@@ -284,25 +279,34 @@ object DedupOps {
 
   /** Shared candidate stage for q66's Jaccard and q160's containment:
     * (doc_a, doc_b, na, nb, inter) for every doc pair sharing at
-    * least one non-stop shingle. Single shingle pass: per-doc shingle
-    * counts ride along via a window, then docs group per shingle and
-    * in-group pairs explode (same pattern as q65/q69 — a self-join
-    * would re-run the explode+shingle projection once per branch).
-    * The maxGroupSize guard drops stop-shingles before pairing. */
+    * least one non-stop shingle. Single shingle pass: each doc's
+    * shingle count `n` is the size of its distinct shingle array,
+    * taken before the explode (no window, so no sort of the exploded
+    * rows), then docs group per shingle and in-group pairs explode
+    * (same pattern as q65/q69 — a self-join would re-run the
+    * explode+shingle projection once per branch). The maxGroupSize
+    * guard drops stop-shingles before pairing. Members sort with
+    * `sort_array`, a codegen'd sort: `array_sort` would compare
+    * through an interpreted lambda. PlanSpec pins the plan free of
+    * windows and higher-order functions. */
   private def shinglePairCounts(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val sh = docs
-      .select($"doc_id", explode(shingles3($"text")).as("sh"))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy($"doc_id")))
+      .select($"doc_id", shingles3($"text").as("shs"))
+      // explode_outer, not explode: the optimizer infers `size(shs) > 0`
+      // for a plain explode of a column and pushes it to the scan,
+      // which builds every shingle array twice. A shingle is never
+      // null, so the outer row of a shingle-less doc is the only null.
+      .select($"doc_id", size($"shs").as("n"), explode_outer($"shs").as("sh"))
+      .where($"sh".isNotNull)
       // explicit exchange for the shingle aggregation: the implicit
       // ENSURE_REQUIREMENTS one is AQE-coalescible (the rows are few
       // MBs) and a one-task collect_list over 260k rows serializes
       // the pipeline
       .repartition(s.sparkContext.defaultParallelism, $"sh")
     sh.groupBy($"sh")
-      .agg(array_sort(collect_list(struct($"doc_id", $"n"))).as("members"))
+      .agg(sort_array(collect_list(struct($"doc_id", $"n"))).as("members"))
       .where(size($"members") >= 2 && size($"members") <= maxGroupSize)
       // explicit partition count: the bucket rows are tiny in BYTES, so
       // AQE coalesces this stage to ~1 partition — but each row fans
@@ -585,10 +589,11 @@ object DedupOps {
     * dense-cell grid graph. */
   private[ops] def ccFixpoint(s: SparkSession, pairs: DataFrame): DataFrame = {
     import s.implicits._
-    val edges = pairs
-      .union(pairs.select($"doc_b", $"doc_a"))
+    // materialize the pair set once: the union below reads it twice,
+    // and un-checkpointed each branch would re-run the pair build
+    val p = pairs.localCheckpoint()
+    val edges = p.union(p.select($"doc_b", $"doc_a"))
       .toDF("dst", "src")                  // (dst = labeled side, src = receiver)
-      .localCheckpoint()
     var labels = edges.select($"src".as("doc_id")).distinct()
       .select($"doc_id", $"doc_id".as("lbl"))
       .localCheckpoint()
@@ -1091,7 +1096,7 @@ object DedupOps {
       .select($"doc_id", $"bv", posexplode($"bv"))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
       .groupBy($"band", $"key")
-      .agg(array_sort(collect_list(struct($"doc_id", $"bv"))).as("members"))
+      .agg(sort_array(collect_list(struct($"doc_id", $"bv"))).as("members"))
       .where(size($"members") >= 2)
       // see q66: keep the pair fan-out parallel despite tiny input bytes
       .repartition(s.sparkContext.defaultParallelism, $"band", $"key")
@@ -1841,7 +1846,7 @@ object DedupOps {
     val exact = Tables.documents(s, dir)
       .select($"doc_id", md5(canon($"text")).as("fp"))
       .groupBy($"fp")
-      .agg(array_sort(collect_list(struct($"doc_id", lit(0L).as("n"))))
+      .agg(sort_array(collect_list(struct($"doc_id", lit(0L).as("n"))))
         .as("members"))
       .where(size($"members") >= 2 && size($"members") <= maxGroupSize)
       .select(explode(pairUp($"members")).as("p"))
@@ -2205,7 +2210,7 @@ object DedupOps {
       // input bytes)
       .repartition(s.sparkContext.defaultParallelism, $"sh")
     prefix.groupBy($"sh")
-      .agg(array_sort(collect_list(struct($"doc_id", $"pos", $"n")))
+      .agg(sort_array(collect_list(struct($"doc_id", $"pos", $"n")))
         .as("members"))
       .where(size($"members") >= 2 && size($"members") <= maxGroupSize)
       .repartition(s.sparkContext.defaultParallelism, $"sh")

@@ -536,16 +536,18 @@ object LinkOps {
   /** Frequent triple itemsets — the level-3 Apriori step on top of
     * q146's pairs: baskets containing all three of {a, b, c} at
     * least [[minTripleSupport]] times. The scale discipline is the
-    * Apriori PRUNE: candidate triples pass three broadcast semi
-    * joins against the frequent-PAIR set before the counting
-    * shuffle, because support(triple) ≤ support(any sub-pair) — at
-    * 100 TB the prune is what keeps the candidate stream from being
-    * every basket's |basket|³/6 fan-out. The prune provably cannot
+    * Apriori PRUNE: candidate triples pass three semi joins against
+    * the frequent-PAIR set before the counting shuffle, because
+    * support(triple) ≤ support(any sub-pair) — at 100 TB the prune
+    * is what keeps the candidate stream from being every basket's
+    * |basket|³/6 fan-out. The prune provably cannot
     * change the answer (monotonicity), so the oracle counts triples
     * with a plain HAVING and the hash match proves the pruned plan
     * transparent — q156's Bloom-prejoin device at the itemset level.
     * Triple generation itself is in-array (no fact self-join),
-    * bounded by basket size cubed. */
+    * bounded by basket size cubed. The pair set is checkpointed and
+    * counted once, and every prune join is [[countGated]]: it
+    * broadcasts under the session threshold and shuffles above it. */
   def q187FrequentTriples(s: SparkSession, dir: String): DataFrame =
     frequentTriplesOf(Tables.lineitem(s, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")))
@@ -561,6 +563,10 @@ object LinkOps {
       .groupBy($"u", $"v").agg(count(lit(1)).as("n"))
       .where($"n" >= minTripleSupport)
       .select($"u", $"v")
+      .localCheckpoint()
+    // one count gates all four prune joins: the pair set is measured,
+    // and its members number at most twice its pairs
+    val nPairs = freqPairs.count()
     // r16: drop basket members that appear in NO frequent pair BEFORE
     // the cubic expansion. Monotonicity-sound: a triple that survives
     // the sub-pair semi joins below has all three items inside
@@ -574,7 +580,7 @@ object LinkOps {
     val freqItems = freqPairs
       .select(explode(array($"u", $"v")).as("pk")).distinct()
     val triples = items
-      .join(broadcast(freqItems), Seq("pk"), "left_semi")
+      .join(countGated(freqItems, 2 * nPairs), Seq("pk"), "left_semi")
       .groupBy($"ok").agg(sort_array(collect_set($"pk")).as("ps"))
       .where(size($"ps") >= 3)
       .select(explode(expr(
@@ -585,10 +591,10 @@ object LinkOps {
         .as("t"))
       .select($"t.u", $"t.v", $"t.w")
     triples
-      .join(broadcast(freqPairs), Seq("u", "v"), "left_semi")
-      .join(broadcast(freqPairs.select($"u", $"v".as("w"))),
+      .join(countGated(freqPairs, nPairs), Seq("u", "v"), "left_semi")
+      .join(countGated(freqPairs.select($"u", $"v".as("w")), nPairs),
         Seq("u", "w"), "left_semi")
-      .join(broadcast(freqPairs.select($"u".as("v"), $"v".as("w"))),
+      .join(countGated(freqPairs.select($"u".as("v"), $"v".as("w")), nPairs),
         Seq("v", "w"), "left_semi")
       .groupBy($"u", $"v", $"w").agg(count(lit(1)).as("support"))
       .where($"support" >= minTripleSupport)

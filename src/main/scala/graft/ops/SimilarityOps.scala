@@ -1162,27 +1162,33 @@ object SimilarityOps {
     * whitening, drift axes (q147 watches centroids; this watches
     * SPREAD), and all-but-the-top-component denoising.
     *
-    * The corpus is touched EXACTLY ONCE: one pass builds
+    * The corpus is touched EXACTLY ONCE: one distributed pass builds
     * G[d,e] = (Σᵢ qᵢ[d]·qᵢ[e]) div n on the q172 integer grid — a
     * dims² cell aggregate with map-side combine (the shuffle
     * carries ≤ 64² rows per partition, never vectors), and the
     * div-n normalization bounds every later product independent of
-    * corpus size. Iteration then runs entirely on the 64²-row
-    * matrix: each round one broadcast join + 64-row aggregate, with
-    * the vector re-quantized to a ±2¹⁰ grid by integer division
-    * (Spark `div` and DuckDB `//` BOTH truncate toward zero, so the
-    * two engines agree on negative coordinates too) — every round
-    * is integer-exact and the oracle replays all rounds as CTEs. The
-    * iterate's sign/scale is fixed by the deterministic all-ones
-    * start and per-round max-normalization, making the component
-    * hash-comparable — classical eigenvectors are only defined up
-    * to sign. */
+    * corpus size. The matrix has dims² = 4096 cells whatever the
+    * corpus size (MLlib's `RowMatrix` splits its Gram work the same
+    * way), so it is collected once and the rounds run on the driver
+    * in exact `Long` arithmetic: per round gv = G·v over the cells
+    * whose column has a component (a missing component drops its
+    * cells, as the inner join of the SQL form does), then the vector
+    * is re-quantized to a ±2¹⁰ grid by integer division by max|gv|
+    * (Spark `div`, JVM `/` and DuckDB `//` all truncate toward zero,
+    * so the engines agree on negative coordinates too). Overflow
+    * and a zero max fail as ANSI arithmetic does; the oracle replays
+    * all rounds as CTEs. The iterate's sign/scale is fixed by the
+    * deterministic all-ones start and per-round max-normalization,
+    * making the component hash-comparable — classical eigenvectors
+    * are only defined up to sign. No vectors means no cells and an
+    * empty result. */
   def q188PowerIteration(s: SparkSession, dir: String): DataFrame =
     powerIterationOf(Tables.embeddings(s, dir))
 
   /** The iteration on any (vec_id, embedding) frame — separated so
     * the spec can plant an anisotropic corpus with a known dominant
-    * direction. */
+    * direction. Spark builds and collects the Gram cells; the
+    * [[powerRounds]] rounds then run on the driver. */
   private[ops] def powerIterationOf(emb: DataFrame): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
@@ -1197,15 +1203,24 @@ object SimilarityOps {
       .agg(sum($"xd" * $"xe").as("sde"))
       .crossJoin(broadcast(n))
       .select($"d", $"e", expr("sde div nn").as("gm"))
-    var v = s.range(64).select(($"id" + 1).as("d"), lit(1024L).as("v"))
+      .collect()
+      .map(r => (r.getInt(0), r.getInt(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))
+    var v: Map[Int, Option[Long]] = (1 to 64).map(_ -> Some(1024L)).toMap
     (1 to powerRounds).foreach { _ =>
-      val gv = gram.join(broadcast(v.select($"d".as("e"), $"v")), "e")
-        .groupBy($"d").agg(sum($"gm" * $"v").as("gv"))
-      val m = gv.agg(max(abs($"gv")).as("m"))
-      v = gv.crossJoin(broadcast(m))
-        .select($"d", expr("(gv * 1024) div m").as("v"))
+      // sum() semantics: null products are skipped, an all-null group is null
+      val gv = gram.filter(c => v.contains(c._2)).groupBy(_._1).map { case (d, cells) =>
+        d -> cells.flatMap { case (_, e, gm) => gm.zip(v(e)).map { case (g, x) =>
+          Math.multiplyExact(g, x) } }.reduceOption(Math.addExact(_: Long, _: Long))
+      }
+      val m = gv.values.flatten.map(Math.absExact(_: Long)).maxOption
+      v = gv.map { case (d, g) => d -> g.zip(m).map { case (x, mm) =>
+        if (mm == 0L) throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero.")
+        Math.multiplyExact(x, 1024L) / mm
+      } }
     }
-    v.select($"d".cast("long").as("dim"), $"v".as("component")).orderBy($"dim")
+    // ≤ dims rows: one partition sorts without a range-partition exchange
+    v.toSeq.map { case (d, c) => (d.toLong, c) }.toDF("dim", "component")
+      .coalesce(1).orderBy($"dim")
   }
 
   private val q188Oracle = {

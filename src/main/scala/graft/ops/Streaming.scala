@@ -39,7 +39,17 @@ object Streaming {
     * (set by [[eventsStream]]), consumed by [[drain]] to size the
     * stateful shuffle. Thread-local for the same reason as
     * [[scratch]]. */
-  private val streamInputBytes = ThreadLocal.withInitial[Long](() => 0L)
+  private[ops] val streamInputBytes = ThreadLocal.withInitial[Long](() => 0L)
+
+  /** A registry entry that starts its build from zero stream-input
+    * bytes: [[drain]] consumes the count, but a build that throws
+    * before its drain would otherwise leave it to inflate the next
+    * query's state width on this thread. */
+  private[ops] def freshBuild(q: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = (s, dir) => {
+    streamInputBytes.set(0L)
+    q(s, dir)
+  }
 
   /** Target stream-input bytes per state-store partition. Every
     * stateful-operator partition is a state-store INSTANCE with a
@@ -2014,7 +2024,7 @@ object Streaming {
     "q158_decayed_trending"  -> (q158DecayedTrending _),
     "q221_stream_heavy_hitters" -> (q221StreamHeavyHitters _),
     "q240_ttl_state" -> (q240TtlState _),
-  )
+  ).map { case (name, q) => name -> freshBuild(q) }
 
   val oracles: Map[String, String] = Map(
     "q407_state_audit" -> q407Oracle,

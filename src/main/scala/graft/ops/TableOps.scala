@@ -4178,7 +4178,7 @@ object TableOps {
     // candidate pairs at the final state — q65's emission over the
     // MAINTAINED index (bucket group → i<j pairs → signature match)
     idx.groupBy($"band", $"bucket")
-      .agg(array_sort(collect_list(struct($"doc_id", $"sig"))).as("members"))
+      .agg(sort_array(collect_list(struct($"doc_id", $"sig"))).as("members"))
       .where(size($"members") >= 2 &&
         size($"members") <= DedupOps.maxGroupSize)
       .select(explode(DedupOps.pairUp($"members")).as("p"))

@@ -550,6 +550,37 @@ class PlanSpec extends SparkSuite {
       .contains("BroadcastHashJoin"), "q290 labels broadcast")
   }
 
+  test("q66 jaccard pairs: native shingle and pair kernels, no window, no lambda") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    // the shingle count comes from the array size, not a per-doc
+    // window, and shingles/pairs come from WordSpans/PairUp, not
+    // interpreted transform(sequence(…)) lambdas
+    val opt = DedupOps.q66NgramJaccard(spark, sf0001).queryExecution.optimizedPlan
+    assert(opt.find(_.isInstanceOf[Window]).isEmpty, opt.treeString.take(900))
+    assert(!opt.exists(_.expressions.exists(_.exists(_.isInstanceOf[HigherOrderFunction]))),
+      opt.treeString.take(900))
+    val p = opt.treeString
+    assert(p.contains("wordspans") || p.contains("WordSpans"), p.take(900))
+    assert(p.contains("pairup") || p.contains("PairUp"), p.take(900))
+  }
+
+  test("q187 prune joins: broadcast is threshold-GATED, shuffle fallback when off") {
+    val semi = "(\\w+Join) \\[[^\\]]*\\], \\[[^\\]]*\\], LeftSemi".r
+    def semiJoins = semi.findAllMatchIn(plan(LinkOps.q187FrequentTriples(spark, sf0001)))
+      .map(_.group(1)).toSeq
+    // under the threshold the frequent-item and the three frequent-pair
+    // prune joins broadcast
+    assert(semiJoins.count(_ == "BroadcastHashJoin") == 4, semiJoins)
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val off = semiJoins
+      assert(off.length == 4 && !off.contains("BroadcastHashJoin"), off)
+      assert(off.forall(j => j == "ShuffledHashJoin" || j == "SortMergeJoin"), off)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   test("q294/q296: monitors scan only what the series needs") {
     val p294 = plan(EventOps.q294ForecastBaselines(spark, sf0001))
     val rs294 = "ReadSchema: struct<([^>]*)>".r.findFirstMatchIn(p294)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSuite
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 class SimilarityOpsSpec extends SparkSuite {
 
@@ -394,6 +395,27 @@ class SimilarityOpsSpec extends SparkSuite {
       rows.toDF("vec_id", "embedding")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(again == got)
+  }
+
+  test("q188 power iteration on zero vectors: the empty component frame") {
+    // a schema-only copy of embeddings, built at test time under target/
+    val dir = new java.io.File("target/empty_embeddings").getAbsolutePath
+    spark.read.parquet(s"$sf0001/embeddings.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val got = SimilarityOps.q188PowerIteration(spark, dir)
+    assert(got.schema == StructType(Seq(
+      StructField("dim", LongType, nullable = false), StructField("component", LongType))))
+    assert(got.collect().isEmpty)
+  }
+
+  test("q188 power iteration: overflow and an all-zero Gram fail as ANSI arithmetic") {
+    import spark.implicits._
+    // every coordinate rounds to 0 on the grid: max|G·v| = 0 divides
+    val zeros = Seq((1L, Seq(0f, 0f)), (2L, Seq(0f, 0f))).toDF("vec_id", "embedding")
+    intercept[ArithmeticException](SimilarityOps.powerIterationOf(zeros).collect())
+    // G ≈ 10¹⁸ per cell: the first product G·1024 overflows a long
+    val huge = Seq((1L, Seq(1e5f, 1e5f))).toDF("vec_id", "embedding")
+    intercept[ArithmeticException](SimilarityOps.powerIterationOf(huge).collect())
   }
 
   test("q191 balance report: full spine, shares sum to ~1e6, flags re-derive") {

@@ -16,6 +16,23 @@ class StreamingSpec extends SparkSuite {
       batchProcessingTimeMs = 0L, eventTimeWatermarkMs = Optional.empty[Long](),
       hasTimedOut = false)
 
+  test("a registry build starts from zero stream-input bytes after a failed build") {
+    // a build that registers its stream input and throws before drain()
+    val failing = Streaming.freshBuild { (_, _) =>
+      Streaming.streamInputBytes.set(Streaming.streamInputBytes.get() + (1L << 40))
+      throw new IllegalStateException("build failed")
+    }
+    intercept[IllegalStateException](failing(spark, sf0001))
+    assert(Streaming.streamInputBytes.get() == (1L << 40))
+    // the next query on this thread does not inherit the stale bytes
+    var seen = -1L
+    Streaming.freshBuild { (s, _) =>
+      seen = Streaming.streamInputBytes.get()
+      s.emptyDataFrame
+    }(spark, sf0001)
+    assert(seen == 0L)
+  }
+
   test("q34 foldGaps: two ordered batches fold into one O(1) state") {
     val st = freshState[(Long, Long, Long)]
     // batch 1: gaps 150, 150
