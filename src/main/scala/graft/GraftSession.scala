@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** The one local SparkSession recipe: `Bench`, `Verify`, `Explain` and
   * the specs' `SparkSuite` all build their session here, so every
-  * surface plans and reads with the same confs. */
+  * surface plans and reads with the same confs. A query that needs
+  * its own confs runs on [[scoped]] and never changes the session it
+  * was given. */
 object GraftSession {
 
   /** Cores for the mains: `SPARK_GRAFT_CPUS`, default 4. */
@@ -26,5 +29,16 @@ object GraftSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** A clone of `s` with `confs` set on the clone only. The clone sees
+    * everything the caller set up — runtime confs, temp views, catalog
+    * registrations — and a DataFrame built on it plans under `confs`
+    * whenever it runs, so there is nothing to restore and concurrent
+    * callers of `s` never see the change. */
+  def scoped(s: SparkSession, confs: (String, String)*): SparkSession = {
+    val c = SessionBridge.cloneSession(s)
+    confs.foreach { case (k, v) => c.conf.set(k, v) }
+    c
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Engine extensibility surface (SURVEY.md §2.2 "UDF / UDAF / UDTF")
   * and auxiliary source formats.
@@ -1349,30 +1349,24 @@ object ExtOps {
     * accumulators were maintained during the run anyway. The filter
     * is deliberately NON-pushable (an arithmetic predicate) so the
     * scan/filter boundary is crisp: the scan must emit every row, the
-    * filter its survivors — both oracle-checked. AQE is bracketed off
-    * for a static plan (restored after); the walk handles the plain
-    * scan→filter→project shape this probe pins. */
+    * filter its survivors — both oracle-checked. The probe runs on a
+    * session scoped to AQE off, for a static plan; the walk handles
+    * the plain scan→filter→project shape this probe pins. */
   def q416ExplainAnalyze(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
-    val saved = s.conf.getOption("spark.sql.adaptive.enabled")
-    try {
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      val probe = Tables.lineitem(s, dir)
-        .where(expr("l_quantity * 2D > 50.0"))
-        .select($"l_orderkey")
-      probe.collect() // the action that populates the metrics
-      val rows = probe.queryExecution.executedPlan.collect {
-        case sc: FileSourceScanExec =>
-          ("scan_parquet", sc.metrics("numOutputRows").value)
-        case f: FilterExec =>
-          ("filter", f.metrics("numOutputRows").value)
-      }
-      rows.toDF("operator", "output_rows").orderBy($"operator")
-    } finally saved match {
-      case Some(v) => s.conf.set("spark.sql.adaptive.enabled", v)
-      case None    => s.conf.unset("spark.sql.adaptive.enabled")
+    val probe = Tables.lineitem(
+        GraftSession.scoped(s, "spark.sql.adaptive.enabled" -> "false"), dir)
+      .where(expr("l_quantity * 2D > 50.0"))
+      .select($"l_orderkey")
+    probe.collect() // the action that populates the metrics
+    val rows = probe.queryExecution.executedPlan.collect {
+      case sc: FileSourceScanExec =>
+        ("scan_parquet", sc.metrics("numOutputRows").value)
+      case f: FilterExec =>
+        ("filter", f.metrics("numOutputRows").value)
     }
+    rows.toDF("operator", "output_rows").orderBy($"operator")
   }
 
   private val q416Oracle =

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Core relational operator sweep (SURVEY.md §2.2): scan, filter,
   * projection, joins (all variants), aggregation, windows, set ops,
@@ -2703,11 +2703,12 @@ object Relational {
     * sequences PLANS, it does not row-loop). The loop body's count
     * is monotone in the falling cutoff, so the script's fixpoint
     * equals the relational form the oracle states: the LARGEST
-    * grid cutoff whose count clears the target. */
+    * grid cutoff whose count clears the target. The script and its
+    * temp view live on a session scoped to scripting enabled. */
   def q387SqlScripting(s: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(s, dir).createOrReplaceTempView("g_scr_lineitem")
-    s.conf.set("spark.sql.scripting.enabled", "true")
-    val out = s.sql(
+    val ss = GraftSession.scoped(s, "spark.sql.scripting.enabled" -> "true")
+    Tables.lineitem(ss, dir).createOrReplaceTempView("g_scr_lineitem")
+    ss.sql(
       """BEGIN
         |  DECLARE qty DOUBLE = 50;
         |  DECLARE target BIGINT = 0;
@@ -2722,8 +2723,6 @@ object Relational {
         |  END WHILE;
         |  SELECT qty AS qty, n AS n_lines, target AS target;
         |END""".stripMargin)
-    s.catalog.dropTempView("g_scr_lineitem")
-    out
   }
 
   private val q387Oracle =
@@ -2916,20 +2915,14 @@ object Relational {
     * possibly match. Broadcast is disabled for the query (hint-level
     * would defeat the demonstration) and the application-side size
     * threshold lowered to fixture scale — at production scale the
-    * default 10 GiB gate fires on its own; both confs are restored
-    * in a finally. PlanSpec pins the injected filter on the fact
-    * side and SMJ/SHJ as the join. The oracle is the plain join-agg:
+    * default 10 GiB gate fires on its own; both confs live on the
+    * query's own [[runtimeFilterSession]], so the result plans under
+    * them whenever it runs. PlanSpec pins the injected filter on the
+    * fact side and SMJ/SHJ as the join. The oracle is the plain join-agg:
     * the filter is one-sided (no false negatives), so the result is
     * EXACTLY the unfiltered join's — which the hash proves. */
   def q399RuntimeFilter(s: SparkSession, dir: String): DataFrame =
-    withRuntimeFilterConfs(s) {
-      import scala.jdk.CollectionConverters._
-      val agg = runtimeFilterJoin(s, dir)
-      // execute INSIDE the conf bracket — planning is lazy, and the
-      // injection must happen under the demonstration confs, not
-      // whatever the session restores to. Group-grain rows (3).
-      s.createDataFrame(agg.collect().toSeq.asJava, agg.schema)
-    }
+    runtimeFilterJoin(runtimeFilterSession(s), dir)
 
   /** The join-agg under demonstration — separated so PlanSpec can pin
     * the injected filter on exactly the plan the query executes. */
@@ -2946,24 +2939,13 @@ object Relational {
       .orderBy($"l_returnflag")
   }
 
-  /** Conf bracket for the runtime-filter demonstration — separated so
+  /** The runtime-filter demonstration's session — separated so
     * PlanSpec builds the SAME plan the query runs. */
-  private[graft] def withRuntimeFilterConfs[T](s: SparkSession)(body: => T): T = {
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> s.conf.getOption(k))
-    try {
-      s.conf.set(keys(0), "true")
-      s.conf.set(keys(1), "0")
-      s.conf.set(keys(2), "-1")
-      body
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+  private[graft] def runtimeFilterSession(s: SparkSession): SparkSession =
+    GraftSession.scoped(s,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   private val q399Oracle =
     """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.tablelog.TableLog
 
 /** Transactional-table operators: the q90/q106/q133/q166/q180 table
@@ -1429,32 +1429,30 @@ object TableOps {
   private def partitionedDemo(s: SparkSession, dir: String): String =
     partCache.computeIfAbsent(dir, _ => {
       val t = Files.createTempDirectory("graft_tlogpt_").toString + "/tbl"
-      s.sql(
+      val ws = partitionWriteSession(s)
+      ws.sql(
         s"""CREATE TABLE graftlog.`$t` (
            |  o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,
            |  o_orderpriority STRING, o_totalprice DOUBLE)
            |PARTITIONED BY (o_orderpriority)
            |TBLPROPERTIES ('key' = 'o_orderkey')""".stripMargin)
-      val view = s"graft_part_src_${Integer.toHexString(dir.hashCode)}"
-      ordersSlice(s, dir).createOrReplaceTempView(view)
-      // AQE coalescing off during the inserts: at demo scale it would
-      // merge the clustered write shuffle into one task-file holding
-      // every priority (nothing to prune); real partitions dwarf the
-      // advisory size, so off reproduces the at-scale layout
-      val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-      val saved = s.conf.get(coalesceKey)
-      s.conf.set(coalesceKey, "false")
-      try {
-        s.sql(s"""INSERT INTO graftlog.`$t`
-                 |SELECT * FROM $view WHERE o_orderkey % 2 = 0""".stripMargin)
-        s.sql(s"""INSERT INTO graftlog.`$t`
-                 |SELECT * FROM $view WHERE o_orderkey % 2 = 1""".stripMargin)
-      } finally {
-        s.conf.set(coalesceKey, saved)
-        s.catalog.dropTempView(view)
-      }
+      ordersSlice(ws, dir).createOrReplaceTempView("src")
+      ws.sql(s"""INSERT INTO graftlog.`$t`
+                |SELECT * FROM src WHERE o_orderkey % 2 = 0""".stripMargin)
+      ws.sql(s"""INSERT INTO graftlog.`$t`
+                |SELECT * FROM src WHERE o_orderkey % 2 = 1""".stripMargin)
       t
     })
+
+  /** The session a partitioned table's inserts run on: a clone of `s`
+    * with AQE coalescing off (plus `confs`). At demo scale coalescing
+    * would merge the clustered write shuffle into one task-file
+    * holding every priority (nothing to prune); real partitions dwarf
+    * the advisory size, so off reproduces the at-scale layout. */
+  private def partitionWriteSession(s: SparkSession,
+      confs: (String, String)*): SparkSession =
+    GraftSession.scoped(s,
+      ("spark.sql.adaptive.coalescePartitions.enabled" -> "false") +: confs: _*)
 
   def q432PartitionedPrune(s: SparkSession, dir: String): DataFrame = {
     withCatalog(s)
@@ -1518,31 +1516,23 @@ object TableOps {
     withCatalog(s)
     val table = {
       val t = Files.createTempDirectory("graft_tlogow_").toString + "/tbl"
-      s.sql(
+      val ws = partitionWriteSession(s)
+      ws.sql(
         s"""CREATE TABLE graftlog.`$t` (
            |  o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,
            |  o_orderpriority STRING, o_totalprice DOUBLE)
            |PARTITIONED BY (o_orderpriority)
            |TBLPROPERTIES ('key' = 'o_orderkey')""".stripMargin)
-      val view = s"graft_ow_src_${Integer.toHexString(dir.hashCode)}"
-      ordersSlice(s, dir).createOrReplaceTempView(view)
-      val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-      val saved = s.conf.get(coalesceKey)
-      s.conf.set(coalesceKey, "false")
-      try {
-        s.sql(s"INSERT INTO graftlog.`$t` SELECT * FROM $view")
-        s.sql(
-          s"""INSERT OVERWRITE graftlog.`$t`
-             |PARTITION (o_orderpriority = '3-MEDIUM')
-             |SELECT o_orderkey, o_custkey, o_orderstatus,
-             |  o_totalprice * 2
-             |FROM $view
-             |WHERE o_orderpriority = '3-MEDIUM' AND o_orderkey % 3 = 0
-             |""".stripMargin)
-      } finally {
-        s.conf.set(coalesceKey, saved)
-        s.catalog.dropTempView(view)
-      }
+      ordersSlice(ws, dir).createOrReplaceTempView("src")
+      ws.sql(s"INSERT INTO graftlog.`$t` SELECT * FROM src")
+      ws.sql(
+        s"""INSERT OVERWRITE graftlog.`$t`
+           |PARTITION (o_orderpriority = '3-MEDIUM')
+           |SELECT o_orderkey, o_custkey, o_orderstatus,
+           |  o_totalprice * 2
+           |FROM src
+           |WHERE o_orderpriority = '3-MEDIUM' AND o_orderkey % 3 = 0
+           |""".stripMargin)
       t
     }
     s.sql(
@@ -1585,33 +1575,25 @@ object TableOps {
     withCatalog(s)
     val table = {
       val t = Files.createTempDirectory("graft_tlogdy_").toString + "/tbl"
-      s.sql(
+      // dynamic mode changes only what INSERT OVERWRITE replaces; the
+      // first insert appends either way
+      val ws = partitionWriteSession(s,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
+      ws.sql(
         s"""CREATE TABLE graftlog.`$t` (
            |  o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,
            |  o_orderpriority STRING, o_totalprice DOUBLE)
            |PARTITIONED BY (o_orderpriority)
            |TBLPROPERTIES ('key' = 'o_orderkey')""".stripMargin)
-      val view = s"graft_dyo_src_${Integer.toHexString(dir.hashCode)}"
-      ordersSlice(s, dir).createOrReplaceTempView(view)
-      val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-      val modeKey = "spark.sql.sources.partitionOverwriteMode"
-      val savedC = s.conf.get(coalesceKey)
-      s.conf.set(coalesceKey, "false")
-      try {
-        s.sql(s"INSERT INTO graftlog.`$t` SELECT * FROM $view")
-        s.conf.set(modeKey, "dynamic")
-        try s.sql(
-          s"""INSERT OVERWRITE graftlog.`$t`
-             |SELECT o_orderkey, o_custkey, 'R', o_orderpriority,
-             |  o_totalprice
-             |FROM $view
-             |WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
-             |  AND o_orderkey % 5 = 0""".stripMargin)
-        finally s.conf.set(modeKey, "static")
-      } finally {
-        s.conf.set(coalesceKey, savedC)
-        s.catalog.dropTempView(view)
-      }
+      ordersSlice(ws, dir).createOrReplaceTempView("src")
+      ws.sql(s"INSERT INTO graftlog.`$t` SELECT * FROM src")
+      ws.sql(
+        s"""INSERT OVERWRITE graftlog.`$t`
+           |SELECT o_orderkey, o_custkey, 'R', o_orderpriority,
+           |  o_totalprice
+           |FROM src
+           |WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
+           |  AND o_orderkey % 5 = 0""".stripMargin)
       t
     }
     s.sql(
@@ -1922,53 +1904,46 @@ object TableOps {
     * by o_orderpriority; joined side: a per-priority weight table in
     * the same layout. The readout keys sums by priority in exact
     * BIGINTs; GraftLogPartitionSpec pins the exchange-free plan, this
-    * query pins values cross-engine. */
+    * query pins values cross-engine. The tables are built and joined
+    * on a session scoped to v2 bucketing on. */
   def q445StoragePartitionedJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
+    val js = GraftSession.scoped(s, "spark.sql.sources.v2.bucketing.enabled" -> "true")
     val (fact, dim) = {
       val f = Files.createTempDirectory("graft_tlogsp_").toString + "/fact"
       val d = Files.createTempDirectory("graft_tlogsp_").toString + "/dim"
-      s.sql(
+      js.sql(
         s"""CREATE TABLE graftlog.`$f` (
            |  o_orderkey BIGINT, o_orderpriority STRING, o_totalprice DOUBLE)
            |PARTITIONED BY (o_orderpriority)
            |TBLPROPERTIES ('key' = 'o_orderkey')""".stripMargin)
-      s.sql(
+      js.sql(
         s"""CREATE TABLE graftlog.`$d` (
            |  w_key BIGINT, o_orderpriority STRING, weight BIGINT)
            |PARTITIONED BY (o_orderpriority)
            |TBLPROPERTIES ('key' = 'w_key')""".stripMargin)
-      val fv = s"graft_spj_fact_${Integer.toHexString(dir.hashCode)}"
-      val dv = s"graft_spj_dim_${Integer.toHexString(dir.hashCode)}"
-      ordersSlice(s, dir).where($"o_orderkey" % 4 === 2)
+      ordersSlice(js, dir).where($"o_orderkey" % 4 === 2)
         .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
-        .createOrReplaceTempView(fv)
-      ordersSlice(s, dir).select($"o_orderpriority").distinct()
+        .createOrReplaceTempView("fact_src")
+      ordersSlice(js, dir).select($"o_orderpriority").distinct()
         .select(ascii(substring($"o_orderpriority", 1, 1)).cast("long")
             .as("w_key"),
           $"o_orderpriority",
           (ascii(substring($"o_orderpriority", 1, 1)) % 7 + 1).cast("long")
             .as("weight"))
-        .createOrReplaceTempView(dv)
-      try {
-        s.sql(s"INSERT INTO graftlog.`$f` SELECT * FROM $fv")
-        s.sql(s"INSERT INTO graftlog.`$d` SELECT * FROM $dv")
-      } finally { s.catalog.dropTempView(fv); s.catalog.dropTempView(dv) }
+        .createOrReplaceTempView("dim_src")
+      js.sql(s"INSERT INTO graftlog.`$f` SELECT * FROM fact_src")
+      js.sql(s"INSERT INTO graftlog.`$d` SELECT * FROM dim_src")
       (f, d)
     }
-    val key = "spark.sql.sources.v2.bucketing.enabled"
-    val saved = s.conf.get(key)
-    s.conf.set(key, "true")
-    try s.sql(
+    js.sql(
       s"""SELECT f.o_orderpriority,
          |  CAST(count(*) AS BIGINT) AS n_orders,
          |  CAST(sum(f.o_orderkey * d.weight) AS BIGINT) AS weighted_keys
          |FROM graftlog.`$fact` f JOIN graftlog.`$dim` d
          |  ON f.o_orderpriority = d.o_orderpriority
          |GROUP BY f.o_orderpriority ORDER BY f.o_orderpriority""".stripMargin)
-      .localCheckpoint(true)
-    finally s.conf.set(key, saved)
   }
 
   private val q445Oracle =
@@ -2344,49 +2319,42 @@ object TableOps {
     * catalog's own `bucket` function, and under v2 bucketing the
     * fact-to-fact key join plans with NO exchange — at 100 TB this
     * deletes the single most expensive shuffle there is. Plan pinned
-    * by spec; this query pins values cross-engine. */
+    * by spec; this query pins values cross-engine. The tables are
+    * built and joined on a session scoped to v2 bucketing on. */
   def q460BucketedKeyJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withCatalog(s)
+    val js = GraftSession.scoped(s, "spark.sql.sources.v2.bucketing.enabled" -> "true")
     val (t1, t2) = {
       val a = Files.createTempDirectory("graft_tlogbk_").toString + "/a"
       val b = Files.createTempDirectory("graft_tlogbk_").toString + "/b"
-      s.sql(
+      js.sql(
         s"""CREATE TABLE graftlog.`$a` (o_orderkey BIGINT,
            |  o_totalprice DOUBLE)
            |TBLPROPERTIES ('key' = 'o_orderkey', 'bucket.count' = '8')
            |""".stripMargin)
-      s.sql(
+      js.sql(
         s"""CREATE TABLE graftlog.`$b` (o_orderkey BIGINT,
            |  o_custkey BIGINT, o_orderstatus STRING)
            |TBLPROPERTIES ('key' = 'o_orderkey', 'bucket.count' = '8')
            |""".stripMargin)
-      val va = s"graft_bkt_a_${Integer.toHexString(dir.hashCode)}"
-      val vb = s"graft_bkt_b_${Integer.toHexString(dir.hashCode)}"
-      ordersSlice(s, dir).where($"o_orderkey" % 4 === 2)
+      ordersSlice(js, dir).where($"o_orderkey" % 4 === 2)
         .select($"o_orderkey", $"o_totalprice")
-        .createOrReplaceTempView(va)
-      ordersSlice(s, dir).where($"o_orderkey" % 8 === 2)
+        .createOrReplaceTempView("a_src")
+      ordersSlice(js, dir).where($"o_orderkey" % 8 === 2)
         .select($"o_orderkey", $"o_custkey", $"o_orderstatus")
-        .createOrReplaceTempView(vb)
-      try {
-        s.sql(s"INSERT INTO graftlog.`$a` SELECT * FROM $va")
-        s.sql(s"INSERT INTO graftlog.`$b` SELECT * FROM $vb")
-      } finally { s.catalog.dropTempView(va); s.catalog.dropTempView(vb) }
+        .createOrReplaceTempView("b_src")
+      js.sql(s"INSERT INTO graftlog.`$a` SELECT * FROM a_src")
+      js.sql(s"INSERT INTO graftlog.`$b` SELECT * FROM b_src")
       (a, b)
     }
-    val k = "spark.sql.sources.v2.bucketing.enabled"
-    val saved = s.conf.get(k)
-    s.conf.set(k, "true")
-    try s.sql(
+    js.sql(
       s"""SELECT b.o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n_orders,
          |  CAST(sum(a.o_orderkey * b.o_custkey) AS BIGINT) AS cross_sum
          |FROM graftlog.`$t1` a JOIN graftlog.`$t2` b
          |  ON a.o_orderkey = b.o_orderkey
          |GROUP BY b.o_orderstatus ORDER BY b.o_orderstatus""".stripMargin)
-      .localCheckpoint(true)
-    finally s.conf.set(k, saved)
   }
 
   private val q460Oracle =

@@ -24,4 +24,11 @@ object SessionBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `cloneSession` is `private[sql]`: a child session that starts
+    * with a copy of the parent's runtime confs, temp views and
+    * catalog registrations (`newSession` drops all three), and whose
+    * later conf changes stay on the child. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 }

@@ -848,17 +848,15 @@ class PlanSpec extends SparkSuite {
 
   test("q399 runtime filter: bloom probe injected on the fact side " +
       "below its exchange; the join stays a shuffle join") {
-    val (p, bloomBeforeExchange) =
-      Relational.withRuntimeFilterConfs(spark) {
-        val df = Relational.runtimeFilterJoin(spark, sf0001)
-        df.collect()
-        val plan = df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==")(0)
-        // the probe (might_contain over the creation side's
-        // bloom_filter_agg subquery) must guard the fact scan
-        (plan, plan.contains("might_contain") &&
-          plan.contains("bloom_filter_agg"))
-      }
+    val df = Relational.runtimeFilterJoin(
+      Relational.runtimeFilterSession(spark), sf0001)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0)
+    // the probe (might_contain over the creation side's
+    // bloom_filter_agg subquery) must guard the fact scan
+    val bloomBeforeExchange = p.contains("might_contain") &&
+      p.contains("bloom_filter_agg")
     assert(bloomBeforeExchange, p.take(1200))
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
       "broadcast would bypass the demonstration")

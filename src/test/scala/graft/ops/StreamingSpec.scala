@@ -17,20 +17,28 @@ class StreamingSpec extends SparkSuite {
       hasTimedOut = false)
 
   test("a registry build starts from zero stream-input bytes after a failed build") {
-    // a build that registers its stream input and throws before drain()
+    // a build that registers its stream input and a scratch dir, then
+    // throws before drain()
+    val dir = java.nio.file.Files.createTempDirectory("graft_failed_build_")
     val failing = Streaming.freshBuild { (_, _) =>
       Streaming.streamInputBytes.set(Streaming.streamInputBytes.get() + (1L << 40))
+      Streaming.scratch.get() += dir
       throw new IllegalStateException("build failed")
     }
     intercept[IllegalStateException](failing(spark, sf0001))
     assert(Streaming.streamInputBytes.get() == (1L << 40))
+    // the failed build's scratch is deleted, not left for the next query
+    assert(!java.nio.file.Files.exists(dir))
     // the next query on this thread does not inherit the stale bytes
     var seen = -1L
+    var scratchAtStart = -1
     Streaming.freshBuild { (s, _) =>
       seen = Streaming.streamInputBytes.get()
+      scratchAtStart = Streaming.scratch.get().size
       s.emptyDataFrame
     }(spark, sf0001)
     assert(seen == 0L)
+    assert(scratchAtStart == 0)
   }
 
   test("q34 foldGaps: two ordered batches fold into one O(1) state") {
@@ -93,7 +101,7 @@ class StreamingSpec extends SparkSuite {
       id -> (if (id % 21 == 0) "batch boilerplate duplicate" else t)
     }.toMap
     val keepers = fpOf.groupBy(_._2).values.map(_.keys.min).toSet
-    val got = Streaming.q121StreamAdmission(spark, sf0001).collect()
+    val got = Streaming.queries("q121_stream_admission")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     // every doc appears exactly twice: one first-delivery verdict +
     // one cross-delivery rejection — the state survived the batch boundary
@@ -111,7 +119,7 @@ class StreamingSpec extends SparkSuite {
   test("q87 stream-static join equals the batch join+aggregate (stream-batch parity)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val got = Streaming.q87StreamStaticJoin(spark, sf0001).collect()
+    val got = Streaming.queries("q87_stream_static_join")(spark, sf0001).collect()
     val want = graft.Tables.events(spark, sf0001)
       .join(graft.Tables.customer(spark, sf0001)
         .select($"c_custkey", $"c_mktsegment"), $"user_id" === $"c_custkey")
@@ -126,7 +134,7 @@ class StreamingSpec extends SparkSuite {
 
   test("q144 incremental MV equals the batch recompute and took two merges") {
     import spark.implicits._
-    val got = Streaming.q144IncrementalMv(spark, sf0001).collect()
+    val got = Streaming.queries("q144_incremental_mv")(spark, sf0001).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getInt(3))))
       .toMap
     assert(got.values.forall(_._3 == 2), "expected exactly two micro-batches")
@@ -145,7 +153,7 @@ class StreamingSpec extends SparkSuite {
       "one micro-batch per weekly delivery") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val rows = Streaming.q158DecayedTrending(spark, sf0001).collect()
+    val rows = Streaming.queries("q158_decayed_trending")(spark, sf0001).collect()
     assert(rows.nonEmpty)
     val ev = graft.Tables.events(spark, sf0001)
       .select($"event_type", to_date($"ts").as("day"))
@@ -172,7 +180,7 @@ class StreamingSpec extends SparkSuite {
 
   test("q177 transformWithState: state survives the delivery boundary") {
     import spark.implicits._
-    val rows = Streaming.q177TransformWithState(spark, sf0001).collect()
+    val rows = Streaming.queries("q177_transform_with_state")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.nonEmpty)
     val whole = graft.Tables.events(spark, sf0001)
@@ -211,7 +219,8 @@ class StreamingSpec extends SparkSuite {
     val d2 = Seq((7L, 20 * M), (7L, 120 * M)).toDF("user_id", "us")
       .select($"user_id", org.apache.spark.sql.functions
         .timestamp_micros($"us").as("ts"))
-    val got = Streaming.timeoutSessionsOf(spark, Seq(d1, d2)).collect()
+    val got = Streaming.freshBuild((s, _) => Streaming.timeoutSessionsOf(s, Seq(d1, d2)))(
+      spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1).getTime,
         r.getTimestamp(2).getTime, r.getLong(3)))
     // ONE merged session 0-20min with all 3 events, one singleton at 120
@@ -223,7 +232,7 @@ class StreamingSpec extends SparkSuite {
 
   test("q181 MapState: per-type entries accumulate across deliveries") {
     import spark.implicits._
-    val rows = Streaming.q181MapStateProfile(spark, sf0001).collect()
+    val rows = Streaming.queries("q181_mapstate_profile")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(rows.nonEmpty)
     val whole = graft.Tables.events(spark, sf0001)
@@ -244,7 +253,7 @@ class StreamingSpec extends SparkSuite {
 
   test("q182 ListState: delivery-2 buffer interleaves both deliveries by event time") {
     import spark.implicits._
-    val rows = Streaming.q182RecentFeatures(spark, sf0001).collect()
+    val rows = Streaming.queries("q182_recent_features")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getString(1).split('|').toList))
     assert(rows.nonEmpty)
     val hist = graft.Tables.events(spark, sf0001)
@@ -266,7 +275,7 @@ class StreamingSpec extends SparkSuite {
 
   test("q184 bootstrap: single stream emission carries the batch-seeded history") {
     import spark.implicits._
-    val rows = Streaming.q184BootstrappedState(spark, sf0001).collect()
+    val rows = Streaming.queries("q184_bootstrapped_state")(spark, sf0001).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(rows.nonEmpty)
     val whole = graft.Tables.events(spark, sf0001)
@@ -284,9 +293,9 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("q194 bounded-state dedup equals q33 when redelivery is inside the delay") {
-    val a = Streaming.q33StreamDedup(spark, sf0001).collect()
+    val a = Streaming.queries("q33_stream_dedup")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-    val b = Streaming.q194DedupWithinWatermark(spark, sf0001).collect()
+    val b = Streaming.queries("q194_dedup_within_watermark")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
     // the fixture redelivers immediately (self-union), well inside the
     // 1h delay, so the bounded-state variant must match the unbounded
@@ -308,7 +317,7 @@ class StreamingSpec extends SparkSuite {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     try {
-      val got = Streaming.q221StreamHeavyHitters(spark, dir.toString)
+      val got = Streaming.queries("q221_stream_heavy_hitters")(spark, dir.toString)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       // singleton 8 evicted by item 4104 (inherits est 2/err 1); singleton
       // 16 evicted by the heavy item, which then counts 49 more arrivals
@@ -328,9 +337,9 @@ class StreamingSpec extends SparkSuite {
 
   test("q240 TTL expiry resets the second wave that q177 accumulates") {
     import spark.implicits._
-    val ttl = Streaming.q240TtlState(spark, sf0001).collect()
+    val ttl = Streaming.queries("q240_ttl_state")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val cum = Streaming.q177TransformWithState(spark, sf0001).collect()
+    val cum = Streaming.queries("q177_transform_with_state")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val ev = graft.Tables.events(spark, sf0001)
       .select($"user_id", $"event_id", $"value").collect()
@@ -387,7 +396,7 @@ class StreamingSpec extends SparkSuite {
 
   test("q358 stream semi join: each converted view once, parity with batch EXISTS") {
     import spark.implicits._
-    val rows = Streaming.q358StreamSemiJoin(spark, sf0001).collect()
+    val rows = Streaming.queries("q358_stream_semi_join")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     // exactly-once membership: a view with many purchases still emits once
     assert(rows.map(_._2).distinct.length == rows.length,
@@ -408,7 +417,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("q388 dim refresh: batch 1 joins the upgraded snapshot, batch 0 the original") {
-    val rows = Streaming.q388DimRefresh(spark, sf0001).collect()
+    val rows = Streaming.queries("q388_dim_refresh")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
     val b0 = rows.filter(_._1 == 0L)
     val b1 = rows.filter(_._1 == 1L)
@@ -433,13 +442,13 @@ class StreamingSpec extends SparkSuite {
     val even = ev.where($"event_id" % 2 === 0).count()
     val odd = ev.where($"event_id" % 2 === 1).count()
     val purchases = ev.where($"event_type" === "purchase").count()
-    val got = Streaming.q397ProgressAudit(spark, sf0001).collect()
+    val got = Streaming.queries("q397_progress_audit")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((0L, even), (1L, odd)))
     // numInputRows counts source rows, not the filtered output
     assert(got.map(_._2).sum != purchases)
     // the listener was removed: a second run sees only its own events
-    val again = Streaming.q397ProgressAudit(spark, sf0001).collect()
+    val again = Streaming.queries("q397_progress_audit")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(again.toSeq == got.toSeq)
   }
@@ -451,7 +460,7 @@ class StreamingSpec extends SparkSuite {
     val evenUsers = ev.where($"event_id" % 2 === 0)
       .select($"user_id").distinct().count()
     val allUsers = ev.select($"user_id").distinct().count()
-    val got = Streaming.q407StateAudit(spark, sf0001).collect()
+    val got = Streaming.queries("q407_state_audit")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
     assert(got.toSeq == Seq(
       (0L, evenUsers, evenUsers),
