@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.Tables
 import graft.expr.{ArrayExprs, TextExprs}
 
@@ -510,7 +511,8 @@ object DedupOps {
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
   // ---------------------------------------------------------------- q79
-  /** Iteration bound for q79's component loop. With pointer jumping
+  /** Iteration bound for the distributed component loop (pair sets
+    * over the broadcast gate; see [[ccFixpoint]]). With pointer jumping
     * (see [[ccLabelsWorking]]) the distance-to-root at least halves
     * per round, so rounds ≈ log₂(component diameter): 20 rounds
     * covers diameters up to ~a million — far beyond any real near-dup
@@ -530,12 +532,14 @@ object DedupOps {
     * and keeper choice.
     *
     * Scale shape: labels are (doc_id, lbl) longs — text never enters
-    * the loop; each round is one hash join + one hash aggregate; the
-    * edge set is localCheckpoint'd so the shingle pipeline runs ONCE,
-    * and each round's labels are localCheckpoint'd so lineage (and
-    * plan size) stays constant. Convergence = one count per round —
-    * the standard distributed-CC control loop; rounds = component
-    * diameter.
+    * the loop; the edge set is localCheckpoint'd so the shingle
+    * pipeline runs ONCE. A pair set under the broadcast gate is
+    * clustered on the driver (union-find, see [[ccFixpoint]]); above
+    * it each round is one hash join + one hash aggregate + one
+    * pointer-jumping self-join, each round's labels are
+    * localCheckpoint'd so lineage (and plan size) stays constant, and
+    * convergence = one count per round — the standard distributed-CC
+    * control loop; rounds ≈ log₂(component diameter).
     *
     * Output: every document, its cluster_id, and is_keeper
     * (singletons keep themselves). Oracle: DuckDB WITH RECURSIVE
@@ -568,7 +572,11 @@ object DedupOps {
 
   /** Fixpoint labels for the working set only: (doc_id, lbl) for docs
     * in at least one pair. Tiny by construction — callers broadcast
-    * it against the corpus rather than shuffling the corpus.
+    * it against the corpus rather than shuffling the corpus — so
+    * whenever the pair set clears the session's broadcast gate the
+    * labels come from [[ccFixpoint]]'s driver-side union-find, which
+    * holds no more than the callers' broadcasts already do; only a
+    * pair set over the gate runs the distributed loop below.
     *
     * Each round does min-label propagation (take the min of own and
     * neighbors' labels) PLUS pointer jumping: labels are themselves
@@ -586,7 +594,19 @@ object DedupOps {
   /** The min-label + pointer-jumping fixpoint over an ARBITRARY
     * undirected pair set `(doc_a, doc_b)` — shared by the full build
     * (q79/q74/q120), q127's contracted delta graph, and q386's
-    * dense-cell grid graph. */
+    * dense-cell grid graph.
+    *
+    * The pair set is checkpointed and counted once. When its rows
+    * clear the session's broadcast gate ([[LinkOps.underBroadcastGate]],
+    * 48 B a row — the test `countGated` applies) and both endpoints
+    * are bigint ids, the pairs are collected and [[ccOnDriver]]
+    * finishes there: every consumer broadcasts the labels anyway, and
+    * each distributed round (a join, an aggregate, a self-join, a
+    * checkpoint and a convergence count) costs scheduling, not data,
+    * on a graph that small. Over the gate — or with the threshold
+    * disabled, the PlanSpec 100-TB stand-in — the distributed loop
+    * runs, with its [[maxCcIterations]] fail-fast. Both paths return
+    * the same rows under the same schema. */
   private[ops] def ccFixpoint(s: SparkSession, pairs: DataFrame): DataFrame = {
     import s.implicits._
     // materialize the pair set once: the union below reads it twice,
@@ -594,6 +614,14 @@ object DedupOps {
     val p = pairs.localCheckpoint()
     val edges = p.union(p.select($"doc_b", $"doc_a"))
       .toDF("dst", "src")                  // (dst = labeled side, src = receiver)
+    // the loop's output schema: doc_id is the receiver column as is;
+    // lbl (a min, then a left-join coalesce) is always nullable
+    val id = edges.schema("src")
+    val schema = StructType(Seq(id.copy(name = "doc_id"),
+      StructField("lbl", id.dataType, nullable = true)))
+    if (p.schema.forall(_.dataType == LongType) &&
+        LinkOps.underBroadcastGate(s, p.count()))
+      return ccOnDriver(s, p.collect(), schema)
     var labels = edges.select($"src".as("doc_id")).distinct()
       .select($"doc_id", $"doc_id".as("lbl"))
       .localCheckpoint()
@@ -624,6 +652,66 @@ object DedupOps {
         "rounds scale with log2(component diameter); this indicates a logic bug, " +
         "not a plausible input")
     labels
+  }
+
+  /** [[ccFixpoint]]'s fixed point computed on the driver: union-find
+    * over the collected pairs, iterative with path halving over
+    * primitive arrays (no recursion, so a 10⁵-node chain is as safe
+    * as a pair), each root kept at its component's minimum id — the
+    * label min-label propagation converges to. A null endpoint is a
+    * node of its own that, as in the loop, only receives: the loop's
+    * join never matches a null key, so the null node passes no label
+    * on and takes the min of its non-null partners' labels (null when
+    * it has none). */
+  private def ccOnDriver(s: SparkSession, pairs: Array[Row],
+                         schema: StructType): DataFrame = {
+    val index = scala.collection.mutable.LongMap.empty[Int]
+    val ids = scala.collection.mutable.ArrayBuilder.make[Long]
+    def node(v: Long): Int = index.getOrElse(v, {
+      val i = index.size
+      index.update(v, i)
+      ids += v
+      i
+    })
+    val links = scala.collection.mutable.ArrayBuilder.make[Int]
+    val nullPartners = scala.collection.mutable.ArrayBuilder.make[Int]
+    var nullNode = false
+    pairs.foreach { r =>
+      (r.isNullAt(0), r.isNullAt(1)) match {
+        case (false, false) => links += node(r.getLong(0)) += node(r.getLong(1))
+        case (false, true) => nullNode = true; nullPartners += node(r.getLong(0))
+        case (true, false) => nullNode = true; nullPartners += node(r.getLong(1))
+        case (true, true) => nullNode = true
+      }
+    }
+    val id = ids.result()
+    val parent = Array.tabulate(id.length)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) {
+        parent(x) = parent(parent(x))
+        x = parent(x)
+      }
+      x
+    }
+    val l = links.result()
+    var k = 0
+    while (k < l.length) {
+      val ra = find(l(k))
+      val rb = find(l(k + 1))
+      if (ra != rb) {
+        if (id(ra) < id(rb)) parent(rb) = ra else parent(ra) = rb
+      }
+      k += 2
+    }
+    val rows = new java.util.ArrayList[Row](id.length + 1)
+    id.indices.foreach(i => rows.add(Row(id(i), id(find(i)))))
+    if (nullNode) {
+      val np = nullPartners.result()
+      rows.add(Row(null,
+        if (np.isEmpty) null else np.map(i => id(find(i))).min))
+    }
+    s.createDataFrame(rows, schema)
   }
 
   // ---------------------------------------------------------------- q127
@@ -2058,10 +2146,10 @@ object DedupOps {
     import s.implicits._
     // ONE shingle pass feeds both the CC fixpoint and the per-cluster
     // edge count (previously each branch re-ran the candidate
-    // pipeline). Measured at sf0.1 the wall time is unchanged (~9.4 s
-    // either way — the fixpoint's per-round jobs dominate, not the
-    // shingle pass), but the cut is strictly less work and matters
-    // where shingling dominates: long documents, wide corpora.
+    // pipeline). Under the broadcast gate the fixpoint costs one count
+    // and one collect of this checkpoint, not a set of jobs per round
+    // (see ccFixpoint); over it, the per-round jobs dominate, as
+    // measured at sf0.1 before the driver path existed.
     val pairs = jaccardPairs(s, dir).select($"doc_a", $"doc_b")
       .localCheckpoint()
     val labels = ccFixpoint(s, pairs)

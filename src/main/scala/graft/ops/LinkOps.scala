@@ -186,14 +186,21 @@ object LinkOps {
     * shuffle fallback otherwise (and always when the threshold is
     * disabled, the PlanSpec 100-TB stand-in). */
   private[graft] def countGated(df: DataFrame, rows: Long,
-                                bytesPerRow: Long = 48L): DataFrame = {
-    val raw = df.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+                                bytesPerRow: Long = 48L): DataFrame =
+    if (underBroadcastGate(df.sparkSession, rows, bytesPerRow)) broadcast(df)
+    else df
+
+  /** The size test behind [[countGated]] (and `DedupOps.ccFixpoint`'s
+    * driver path): `rows × bytesPerRow` fits the session's
+    * autoBroadcastJoinThreshold. A threshold ≤ 0 — disabled, the
+    * PlanSpec 100-TB stand-in — never fits. */
+  private[graft] def underBroadcastGate(s: SparkSession, rows: Long,
+                                        bytesPerRow: Long = 48L): Boolean = {
+    val raw = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     val threshold =
       if (raw.trim.startsWith("-")) -1L
       else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
-    if (threshold > 0 && rows * bytesPerRow <= threshold) broadcast(df)
-    else df
+    threshold > 0 && rows * bytesPerRow <= threshold
   }
 
   /** The oriented-wedge closure on an already-materialized canonical
@@ -659,6 +666,14 @@ object LinkOps {
     // unique within an item so ties cannot reach the later fields.
     // cos2_ppm ∈ [0, 10⁶] (cos² ≤ 1), so the negation cannot
     // overflow.
+    // Skew assumption: collect_list holds ALL of an item's candidates
+    // in one non-spillable aggregation buffer before the slice. A
+    // candidate is a distinct partner that clears recMinSupport, so
+    // the buffer is bounded by the item's frequent co-purchase
+    // partners — small for this part catalogue, unbounded in general.
+    // A bestseller co-bought with most of a large catalogue needs a
+    // per-partition partial top-k before this aggregate (or the
+    // spillable window it replaced).
     directed
       .join(broadcast(sup.select($"pk".as("item"), $"s".as("sa"))), "item")
       .join(broadcast(sup.select($"pk".as("rec"), $"s".as("sb"))), "rec")

@@ -2364,7 +2364,9 @@ object SimilarityOps {
     * factor (a fixed minPts dies at sf0.001 and saturates at sf0.1).
     * Sparse-cell points are noise even beside a dense cell — the
     * documented border-point simplification vs true DBSCAN. CC =
-    * [[DedupOps.ccFixpoint]] (pointer jumping, rounds ≈ log₂
+    * [[DedupOps.ccFixpoint]]: union-find on the driver while the
+    * dense-cell edge set clears the broadcast gate (it is bounded by
+    * the grid), else the pointer-jumping loop (rounds ≈ log₂
     * diameter); the oracle replays the grid and closes components
     * with a recursive CTE. Dims 1–2 are a stand-in for a learned 2-D
     * projection (the method is dimension-count-agnostic; the grid

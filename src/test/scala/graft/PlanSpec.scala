@@ -567,18 +567,54 @@ class PlanSpec extends SparkSuite {
 
   test("q187 prune joins: broadcast is threshold-GATED, shuffle fallback when off") {
     val semi = "(\\w+Join) \\[[^\\]]*\\], \\[[^\\]]*\\], LeftSemi".r
-    def semiJoins = semi.findAllMatchIn(plan(LinkOps.q187FrequentTriples(spark, sf0001)))
-      .map(_.group(1)).toSeq
+    def semiJoins(s: org.apache.spark.sql.SparkSession) =
+      semi.findAllMatchIn(plan(LinkOps.q187FrequentTriples(s, sf0001)))
+        .map(_.group(1)).toSeq
     // under the threshold the frequent-item and the three frequent-pair
     // prune joins broadcast
-    assert(semiJoins.count(_ == "BroadcastHashJoin") == 4, semiJoins)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val off = semiJoins
-      assert(off.length == 4 && !off.contains("BroadcastHashJoin"), off)
-      assert(off.forall(j => j == "ShuffledHashJoin" || j == "SortMergeJoin"), off)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    val on = semiJoins(spark)
+    assert(on.count(_ == "BroadcastHashJoin") == 4, on)
+    val off = semiJoins(GraftSession.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+    assert(off.length == 4 && !off.contains("BroadcastHashJoin"), off)
+    assert(off.forall(j => j == "ShuffledHashJoin" || j == "SortMergeJoin"), off)
+  }
+
+  test("q74 Spark jobs: the CC fixpoint finishes on the driver under the broadcast gate") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // jobs q74 starts (build + collect) under its own job group; a
+    // flush job started afterwards proves every earlier start event
+    // has reached the listener
+    def jobsOf(s: org.apache.spark.sql.SparkSession): Int = {
+      val group = s"q74-jobs-${System.nanoTime}"
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val flushed = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some(g) if g == group => started.incrementAndGet()
+            case Some(g) if g == group + "-flush" => flushed.countDown()
+            case _ =>
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "q74")
+        DedupOps.q74ClusterKeepers(s, sf0001).collect()
+        sc.setJobGroup(group + "-flush", "listener flush")
+        sc.parallelize(Seq(1), 1).count()
+        assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        started.get
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    }
+    val driver = jobsOf(spark)
+    assert(driver <= 16, s"q74 started $driver jobs under the gate")
+    val loop = jobsOf(GraftSession.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+    assert(loop >= 25, s"q74 started $loop jobs with the gate off")
+    info(s"q74 at sf0.001: $driver jobs under the gate, $loop with it off")
   }
 
   test("q294/q296: monitors scan only what the series needs") {
@@ -702,38 +738,35 @@ class PlanSpec extends SparkSuite {
     // executor), the label joins must fall back to a co-partitioned
     // shuffle join — a hard broadcast() hint would keep broadcasting
     // and blow the driver at scale
-    import spark.implicits._
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      // one LPA round, inspected directly (lpaOf materializes each
-      // round via localCheckpoint, so the returned frame's plan is a
-      // checkpoint scan — the join lives in the round plan)
-      val edges = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
-      val labels = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("node", "label")
-      val scores = Seq((1L, 1024L), (2L, 512L)).toDF("pk", "av")
-      for ((name, df) <- Seq(
-        ("lpaRound", LinkOps.lpaRound(edges, labels)),
-        ("q320", LinkOps.q320Modularity(spark, sf0001)),
-        // the round-5 verdict's surviving forced-broadcast class:
-        // wedge-closure degree joins and HITS score joins are
-        // node-cardinality and must also fall back to a shuffle join
-        ("triangleCountsOnEdges", LinkOps.triangleCountsOnEdges(edges)),
-        ("trussSupportsOnEdges", LinkOps.trussSupportsOnEdges(edges)),
-        ("hitsHalfStep", LinkOps.hitsHalfStep(
-          edges.toDF("ok", "pk"), scores, "pk", "ok", "av", "hv")))) {
-        val p = plan(df)
-        // (q320's 1-row scalar m keeps its explicit broadcast cross
-        // join — a hinted BNLJ is fine at any scale for one row; the
-        // label joins are equi-joins and would surface as
-        // BroadcastHashJoin if still hinted)
-        assert(!p.contains("BroadcastHashJoin"),
-          s"$name still broadcasts with the threshold off: " + p.take(400))
-        assert(!p.contains("CartesianProduct"), s"$name: " + p.take(400))
-        assert(p.contains("ShuffledHashJoin") || p.contains("SortMergeJoin"),
-          s"$name label join must shuffle co-partitioned: " + p.take(400))
-      }
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    val off = GraftSession.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    import off.implicits._
+    // one LPA round, inspected directly (lpaOf materializes each
+    // round via localCheckpoint, so the returned frame's plan is a
+    // checkpoint scan — the join lives in the round plan)
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
+    val labels = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("node", "label")
+    val scores = Seq((1L, 1024L), (2L, 512L)).toDF("pk", "av")
+    for ((name, df) <- Seq(
+      ("lpaRound", LinkOps.lpaRound(edges, labels)),
+      ("q320", LinkOps.q320Modularity(off, sf0001)),
+      // the round-5 verdict's surviving forced-broadcast class:
+      // wedge-closure degree joins and HITS score joins are
+      // node-cardinality and must also fall back to a shuffle join
+      ("triangleCountsOnEdges", LinkOps.triangleCountsOnEdges(edges)),
+      ("trussSupportsOnEdges", LinkOps.trussSupportsOnEdges(edges)),
+      ("hitsHalfStep", LinkOps.hitsHalfStep(
+        edges.toDF("ok", "pk"), scores, "pk", "ok", "av", "hv")))) {
+      val p = plan(df)
+      // (q320's 1-row scalar m keeps its explicit broadcast cross
+      // join — a hinted BNLJ is fine at any scale for one row; the
+      // label joins are equi-joins and would surface as
+      // BroadcastHashJoin if still hinted)
+      assert(!p.contains("BroadcastHashJoin"),
+        s"$name still broadcasts with the threshold off: " + p.take(400))
+      assert(!p.contains("CartesianProduct"), s"$name: " + p.take(400))
+      assert(p.contains("ShuffledHashJoin") || p.contains("SortMergeJoin"),
+        s"$name label join must shuffle co-partitioned: " + p.take(400))
+    }
   }
 
   test("q322 PQ encode: pure literal-codebook projection, zero Exchange") {
@@ -898,38 +931,28 @@ class PlanSpec extends SparkSuite {
     val pa = plan(agg).split("== Initial Plan ==")(0)
     assert(pa.contains("AQEShuffleRead coalesced"), pa.take(600))
     // (b) skew split: one hot orderkey inflated 30000×, thresholds
-    // lowered to fixture scale (restored after) — AQE must mark the
+    // lowered to fixture scale on a scoped session — AQE must mark the
     // join's hot side skew=true instead of letting one task drag
-    val keys = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set(keys(0), "16KB")
-      spark.conf.set(keys(1), "8KB")
-      spark.conf.set(keys(2), "2")
-      spark.conf.set(keys(3), "-1")
-      // spread across 8 map tasks first: AQE splits a skewed reduce
-      // partition along MAPPER boundaries, so a single-mapper input
-      // can never be split no matter how skewed it is
-      val hot = graft.Tables.lineitem(spark, sf0001)
-        .withColumn("k", when($"l_orderkey" === 1L, 1L).otherwise($"l_orderkey"))
-        .select($"k", explode(when($"k" === 1L,
-          sequence(lit(1), lit(30000))).otherwise(array(lit(1)))).as("rep"))
-        .repartition(8, $"rep")
-      val dim = graft.Tables.orders(spark, sf0001)
-        .select($"o_orderkey".as("k"), $"o_totalprice")
-      val j = hot.join(dim, Seq("k"))
-        .agg(count(lit(1)).as("n"))
-      j.collect()
-      val pj = plan(j).split("== Initial Plan ==")(0)
-      assert(pj.contains("skew=true"), pj.take(1200))
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+    val skew = GraftSession.scoped(spark,
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    // spread across 8 map tasks first: AQE splits a skewed reduce
+    // partition along MAPPER boundaries, so a single-mapper input
+    // can never be split no matter how skewed it is
+    val hot = graft.Tables.lineitem(skew, sf0001)
+      .withColumn("k", when($"l_orderkey" === 1L, 1L).otherwise($"l_orderkey"))
+      .select($"k", explode(when($"k" === 1L,
+        sequence(lit(1), lit(30000))).otherwise(array(lit(1)))).as("rep"))
+      .repartition(8, $"rep")
+    val dim = graft.Tables.orders(skew, sf0001)
+      .select($"o_orderkey".as("k"), $"o_totalprice")
+    val j = hot.join(dim, Seq("k"))
+      .agg(count(lit(1)).as("n"))
+    j.collect()
+    val pj = plan(j).split("== Initial Plan ==")(0)
+    assert(pj.contains("skew=true"), pj.take(1200))
   }
 
   test("q401 SQL UDF: both functions inline at analysis — the plan " +

@@ -142,6 +142,22 @@ class DedupOpsSpec extends SparkSuite {
     assert(r == (1L to 64L).map(d => d -> ((1L, d == 1L))).toMap)
   }
 
+  test("q79 converges on a 64-doc chain in the distributed loop (threshold -1): log2 rounds") {
+    import spark.implicits._
+    // the pair set is under the broadcast gate, so at the default
+    // threshold ccFixpoint finishes on the driver; with the gate off
+    // the same fixture runs the pointer-jumping loop, which must still
+    // converge well inside the 20-round fail-fast
+    def windowText(from: Int): String = (from until from + 20).map(i => s"w$i").mkString(" ")
+    val tmp = java.nio.file.Files.createTempDirectory("dedup_longchain_loop").toString
+    (0 until 64).map(k => ((k + 1).toLong, windowText(1 + 5 * k))).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val loop = graft.GraftSession.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val r = DedupOps.q79NeardupClusters(loop, tmp).collect()
+      .map(x => x.getLong(0) -> ((x.getLong(1), x.getBoolean(2)))).toMap
+    assert(r == (1L to 64L).map(d => d -> ((1L, d == 1L))).toMap)
+  }
+
   test("q55 span dedup: planted boilerplate spans counted; short/unique docs zero") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("span_dedup").toString

@@ -3,7 +3,7 @@ package graft.tablelog
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.SparkSuite
+import graft.{GraftSession, SparkSuite}
 
 /** Manifest NDV sketches ([[TableLog.ndvEstimate]], `AddFile.ndvs`):
   * per-file HLL registers folded to snapshot grain with zero data
@@ -78,37 +78,28 @@ class NdvStatsSpec extends SparkSuite {
     TableLog.create((0L until n).map(i => (i, i % 5)).toDF("k", "j"), dimLo, "k", 4)
     TableLog.create((0L until 50L * n).map(i => (i, i % n)).toDF("k", "j"),
       big, "k", 8)
+    // the leaves (20k-row facts/dim) may sit under the default 10 MB
+    // threshold either way; the PIN is the TOP join — big (1M rows)
+    // never broadcasts, so its build side is the estimated join
+    // output, whose size under CBO comes straight from the NDV
+    val cbo = GraftSession.scoped(spark, "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> (512 * 1024).toString)
     def planFor(fact: String, dim: String): String = {
       val q =
         s"""SELECT count(*) FROM (
            |  SELECT f.k AS fk FROM graftlog.`$fact` f
            |  JOIN graftlog.`$dim` d ON f.j = d.j
            |) i JOIN graftlog.`$big` b ON i.fk = b.j""".stripMargin
-      spark.sql(q).queryExecution.sparkPlan.toString
+      cbo.sql(q).queryExecution.sparkPlan.toString
     }
-    val prevCbo = spark.conf.getOption("spark.sql.cbo.enabled")
-    val prevThr = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    // the leaves (20k-row facts/dim) may sit under the default 10 MB
-    // threshold either way; the PIN is the TOP join — big (1M rows)
-    // never broadcasts, so its build side is the estimated join
-    // output, whose size under CBO comes straight from the NDV
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (512 * 1024).toString)
-    try {
-      val hiPlan = planFor(hi, dimHi)
-      val loPlan = planFor(lo, dimLo)
-      assert(!hiPlan.contains("SortMergeJoin"),
-        s"high-NDV join output (≈$n rows by the sketches) should " +
-          s"broadcast into the big probe, not sort-merge:\n$hiPlan")
-      assert(loPlan.contains("SortMergeJoin"),
-        "low-NDV join output (≈n²/5 rows by the sketches) must NOT " +
-          s"broadcast — the NDV channel is what separates the plans:\n$loPlan")
-    } finally {
-      prevCbo.fold(spark.conf.unset("spark.sql.cbo.enabled"))(v =>
-        spark.conf.set("spark.sql.cbo.enabled", v))
-      prevThr.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        v => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v))
-    }
+    val hiPlan = planFor(hi, dimHi)
+    val loPlan = planFor(lo, dimLo)
+    assert(!hiPlan.contains("SortMergeJoin"),
+      s"high-NDV join output (≈$n rows by the sketches) should " +
+        s"broadcast into the big probe, not sort-merge:\n$hiPlan")
+    assert(loPlan.contains("SortMergeJoin"),
+      "low-NDV join output (≈n²/5 rows by the sketches) must NOT " +
+        s"broadcast — the NDV channel is what separates the plans:\n$loPlan")
   }
 
   test("the NDV channel stays alive under deletion vectors: a MoR " +
