@@ -35,7 +35,14 @@ object GraftSession {
     * everything the caller set up — runtime confs, temp views, catalog
     * registrations — and a DataFrame built on it plans under `confs`
     * whenever it runs, so there is nothing to restore and concurrent
-    * callers of `s` never see the change. */
+    * callers of `s` never see the change.
+    *
+    * One read escapes the clone: a logical plan's `stats` are computed
+    * lazily under the ACTIVE session's conf. So caller code that reads
+    * `clone.table(t).queryExecution.optimizedPlan.stats` outside the
+    * clone's own execution sees the caller's `spark.sql.cbo.enabled`,
+    * not the clone's. No query in `ops/` reads `stats`; a test that
+    * does keeps its conf on the session it reads from. */
   def scoped(s: SparkSession, confs: (String, String)*): SparkSession = {
     val c = SessionBridge.cloneSession(s)
     confs.foreach { case (k, v) => c.conf.set(k, v) }

@@ -1,10 +1,12 @@
 package graft.ops
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StreamingQueryListener, StreamingQueryProgress, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.graftbridge.SessionBridge
 import graft.{GraftSession, Tables}
@@ -29,13 +31,13 @@ object Streaming {
 
   private val sinkId = new AtomicInteger(0)
 
-  /** Scratch dirs created while BUILDING the current query (landing
-    * symlink dirs, sentinel parquet, staged deliveries), deleted by
+  /** Scratch dirs created by [[scratchDir]] while BUILDING the current
+    * query (landing dirs, sentinel parquet, checkpoints), deleted by
     * [[freshBuild]] when that query's build ends, however it ends.
     * Thread-local so parallel test suites can't delete each other's
     * in-flight sources; a 59-query bench session leaks nothing. */
   private[ops] val scratch = ThreadLocal.withInitial(() =>
-    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path])
+    scala.collection.mutable.ArrayBuffer.empty[Path])
 
   /** Input bytes of the stream sources built for the current query
     * (set by [[eventsStream]]), consumed by [[drain]] to size the
@@ -58,6 +60,42 @@ object Streaming {
     finally { val dirs = scratch.get(); dirs.foreach(rmTree); dirs.clear() }
   }
 
+  /** A temp dir that [[freshBuild]] deletes when this query's build
+    * ends, however it ends. */
+  private[ops] def scratchDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    scratch.get() += d
+    d
+  }
+
+  /** The mtime [[deliver]] stamps on `delivery_0`. */
+  private val firstDeliveryMs = 1000000000000L
+
+  /** Land `df` in `landing` as the one flat file `delivery_<i>.parquet`
+    * — the reference's ingest contract (stage a batch, then publish it
+    * atomically where the loader watches; Extract.land's shape). The
+    * file is written in a stage dir inside `landing` (a `_` name, which
+    * the file source never lists), renamed into place, and stamped
+    * with mtime `firstDeliveryMs + i` minutes: the file source replays
+    * by mtime, so `maxFilesPerTrigger=1` reads deliveries in index
+    * order, never in write-timing order. The stage dir is deleted
+    * before this returns. */
+  private[ops] def deliver(landing: Path, i: Int, df: DataFrame): Unit = {
+    import scala.jdk.CollectionConverters._
+    val stage = landing.resolve(s"_stage_$i")
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      val ls = Files.list(stage)
+      val part = try ls.iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      finally ls.close()
+      val dst = Files.move(part, landing.resolve(s"delivery_$i.parquet"))
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(firstDeliveryMs + i * 60000L))
+      ()
+    } finally rmTree(stage)
+  }
+
   /** The state store `transformWithState` requires. */
   private val rocksDb = "spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -78,12 +116,12 @@ object Streaming {
     * walk stream is closed before deleting (it holds a directory
     * handle; leaking one per scratch-dir cleanup is exactly the slow
     * drip a long bench/verify session can't afford). */
-  private def rmTree(p: java.nio.file.Path): Unit = {
+  private def rmTree(p: Path): Unit = {
     import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-      val walk = java.nio.file.Files.walk(p)
+    if (Files.exists(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
+      val walk = Files.walk(p)
       val paths = try walk.iterator().asScala.toSeq finally walk.close()
-      paths.reverse.foreach(java.nio.file.Files.deleteIfExists)
+      paths.reverse.foreach(Files.deleteIfExists)
     }
   }
 
@@ -96,13 +134,12 @@ object Streaming {
     // the file source lists a DIRECTORY (at scale: the landing dir,
     // partitioned by batch); locally the table is a single parquet
     // file, so expose it through a symlinked landing dir
-    val landing = java.nio.file.Files.createTempDirectory("graft_events_landing_")
-    scratch.get() += landing
-    java.nio.file.Files.createSymbolicLink(
+    val landing = scratchDir("graft_events_landing_")
+    Files.createSymbolicLink(
       landing.resolve("events.parquet"), java.nio.file.Paths.get(path))
     val schema: StructType = s.read.parquet(path).schema
     streamInputBytes.set(streamInputBytes.get() +
-      java.nio.file.Files.size(java.nio.file.Paths.get(path)))
+      Files.size(java.nio.file.Paths.get(path)))
     val raw = s.readStream.schema(schema).parquet(landing.toString)
     if (schema("ts").dataType == LongType)
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -122,8 +159,7 @@ object Streaming {
     * Append mode flushes all real results on the bounded fixture.
     * The scratch dir is registered for [[freshBuild]]'s cleanup. */
   private def sentinelStream(s: SparkSession, rows: DataFrame): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sentinel_")
-    scratch.get() += tmp
+    val tmp = scratchDir("graft_sentinel_")
     rows.write.mode("overwrite").parquet(tmp.toString)
     s.readStream.schema(s.read.parquet(tmp.toString).schema).parquet(tmp.toString)
   }
@@ -727,10 +763,9 @@ object Streaming {
   def q121StreamAdmission(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val path = s"$dir/documents.parquet"
-    val landing = java.nio.file.Files.createTempDirectory("graft_docs_landing_")
-    scratch.get() += landing
+    val landing = scratchDir("graft_docs_landing_")
     Seq("delivery_a.parquet", "delivery_b.parquet").foreach { n =>
-      java.nio.file.Files.createSymbolicLink(
+      Files.createSymbolicLink(
         landing.resolve(n), java.nio.file.Paths.get(path))
     }
     val schema = s.read.parquet(path).schema
@@ -788,21 +823,9 @@ object Streaming {
     * that makes a 6-hourly 100 TB feed maintainable. */
   def q144IncrementalMv(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val landing = java.nio.file.Files.createTempDirectory("graft_mv_landing_")
-    scratch.get() += landing
+    val landing = scratchDir("graft_mv_landing_")
     val ev = s.read.parquet(s"$dir/events.parquet")
-    Seq(0, 1).foreach { par =>
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_mv_stage_$par")
-      scratch.get() += stage
-      ev.where($"event_id" % 2 === par).coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val ls = java.nio.file.Files.list(stage)
-      val part = try ls.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally ls.close()
-      java.nio.file.Files.move(part, landing.resolve(s"delivery_$par.parquet"))
-    }
+    Seq(0, 1).foreach(par => deliver(landing, par, ev.where($"event_id" % 2 === par)))
     val stream = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(landing.toString)
     var mv: DataFrame = null
@@ -824,12 +847,9 @@ object Streaming {
       }
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    val out = mv
-      .select($"event_type", $"n_events", $"sum_value_micro",
+    mv.select($"event_type", $"n_events", $"sum_value_micro",
         lit(nBatches).as("n_batches"))
       .orderBy($"event_type")
-    mv.unpersist(blocking = false)
-    out
   }
 
   // ---------------------------------------------------------------- q388
@@ -850,26 +870,10 @@ object Streaming {
     * grain (q240's collect discipline). */
   def q388DimRefresh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val landing = java.nio.file.Files.createTempDirectory("graft_dimr_landing_")
-    scratch.get() += landing
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dimr_dim_")
-    scratch.get() += dimDir
+    val landing = scratchDir("graft_dimr_landing_")
+    val dimDir = scratchDir("graft_dimr_dim_")
     val ev = s.read.parquet(s"$dir/events.parquet")
-    Seq(0, 1).foreach { par =>
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_dimr_stage_$par")
-      scratch.get() += stage
-      ev.where($"event_id" % 2 === par).coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val ls = java.nio.file.Files.list(stage)
-      val part = try ls.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally ls.close()
-      val dst = landing.resolve(s"delivery_$par.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + par * 60000L))
-    }
+    Seq(0, 1).foreach(par => deliver(landing, par, ev.where($"event_id" % 2 === par)))
     val types = ev.select($"event_type").distinct()
     def writeDim(hot: Boolean): Unit =
       types.select($"event_type",
@@ -938,7 +942,6 @@ object Streaming {
     * row per type); history is never re-read. */
   def q158DecayedTrending(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
     val ev = graft.Tables.events(s, dir)
       .select($"event_type", to_date($"ts").as("day"))
     val d0 = ev.agg(min($"day")).head().getDate(0)
@@ -947,19 +950,9 @@ object Streaming {
     val dMax = staged.agg(max($"day_idx")).head().getInt(0)
     val weeks = staged.select(($"day_idx" / 7).cast("int").as("wk"))
       .distinct().orderBy($"wk").collect().map(_.getInt(0))
-    val landing = java.nio.file.Files.createTempDirectory("graft_trend_landing_")
-    scratch.get() += landing
-    weeks.foreach { wk =>
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_trend_stage_$wk")
-      scratch.get() += stage
-      staged.where($"day_idx" >= wk * 7 && $"day_idx" < (wk + 1) * 7)
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val ls = java.nio.file.Files.list(stage)
-      val part = try ls.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally ls.close()
-      java.nio.file.Files.move(part, landing.resolve(s"delivery_$wk.parquet"))
-    }
+    val landing = scratchDir("graft_trend_landing_")
+    weeks.foreach(wk => deliver(landing, wk,
+      staged.where($"day_idx" >= wk * 7 && $"day_idx" < (wk + 1) * 7)))
     val stream = s.readStream
       .schema(s.read.parquet(landing.toString).schema)
       .option("maxFilesPerTrigger", 1).parquet(landing.toString)
@@ -983,11 +976,8 @@ object Streaming {
       }
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    val out = mv
-      .select($"event_type", $"trend_score", lit(nBatches).as("n_batches"))
+    mv.select($"event_type", $"trend_score", lit(nBatches).as("n_batches"))
       .orderBy($"event_type")
-    mv.unpersist(blocking = false)
-    out
   }
 
   private val q158Oracle =
@@ -1049,25 +1039,9 @@ object Streaming {
     * point of the RocksDB backend). */
   def q177TransformWithState(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val landing = java.nio.file.Files.createTempDirectory("graft_tws_landing_")
-    scratch.get() += landing
+    val landing = scratchDir("graft_tws_landing_")
     val ev = s.read.parquet(s"$dir/events.parquet")
-    Seq(0, 1).foreach { par =>
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_tws_stage_$par")
-      scratch.get() += stage
-      ev.where($"event_id" % 2 === par).coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val ls = java.nio.file.Files.list(stage)
-      val part = try ls.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally ls.close()
-      val dst = landing.resolve(s"delivery_$par.parquet")
-      java.nio.file.Files.move(part, dst)
-      // deliveries must replay oldest-first deterministically
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + par * 60000L))
-    }
+    Seq(0, 1).foreach(par => deliver(landing, par, ev.where($"event_id" % 2 === par)))
     val stream = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(landing.toString)
       .select($"user_id", expr("CAST(round(value * 1000000D) AS BIGINT)").as("vq"))
@@ -1180,9 +1154,7 @@ object Streaming {
   private[ops] def timeoutSessionsOf(s: SparkSession,
       deliveries: Seq[DataFrame]): DataFrame = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val landing = java.nio.file.Files.createTempDirectory("graft_tmo_landing_")
-    scratch.get() += landing
+    val landing = scratchDir("graft_tmo_landing_")
     // TWO sentinel deliveries after the real ones: the first advances
     // the watermark past every real session; the second exists so one
     // more micro-batch RUNS with that advanced watermark —
@@ -1194,18 +1166,7 @@ object Streaming {
         timestamp_micros(lit(ts)).as("ts"))
     }
     (deliveries ++ sentinels).zipWithIndex.foreach { case (df, i) =>
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_tmo_stage${i}_")
-      scratch.get() += stage
-      df.select($"user_id", $"ts".cast("timestamp").as("ts")).coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val ls = java.nio.file.Files.list(stage)
-      val part = try ls.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally ls.close()
-      val dst = landing.resolve(s"delivery_$i.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+      deliver(landing, i, df.select($"user_id", $"ts".cast("timestamp").as("ts")))
     }
     val schema = s.read.parquet(landing.toString).schema
     val raw = s.readStream.schema(schema)
@@ -1264,24 +1225,9 @@ object Streaming {
     * waves relationally. */
   def q181MapStateProfile(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val landing = java.nio.file.Files.createTempDirectory("graft_map_landing_")
-    scratch.get() += landing
+    val landing = scratchDir("graft_map_landing_")
     val ev = s.read.parquet(s"$dir/events.parquet")
-    Seq(0, 1).foreach { par =>
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_map_stage_$par")
-      scratch.get() += stage
-      ev.where($"event_id" % 2 === par).coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val ls = java.nio.file.Files.list(stage)
-      val part = try ls.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally ls.close()
-      val dst = landing.resolve(s"delivery_$par.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + par * 60000L))
-    }
+    Seq(0, 1).foreach(par => deliver(landing, par, ev.where($"event_id" % 2 === par)))
     val stream = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(landing.toString)
       .select($"user_id", $"event_type").as[(Long, String)]
@@ -1346,24 +1292,9 @@ object Streaming {
     * produce. Oracle replays both emissions from the parity split. */
   def q182RecentFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val landing = java.nio.file.Files.createTempDirectory("graft_rf_landing_")
-    scratch.get() += landing
+    val landing = scratchDir("graft_rf_landing_")
     val ev = s.read.parquet(s"$dir/events.parquet")
-    Seq(0, 1).foreach { par =>
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_rf_stage_$par")
-      scratch.get() += stage
-      ev.where($"event_id" % 2 === par).coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val ls = java.nio.file.Files.list(stage)
-      val part = try ls.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally ls.close()
-      val dst = landing.resolve(s"delivery_$par.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + par * 60000L))
-    }
+    Seq(0, 1).foreach(par => deliver(landing, par, ev.where($"event_id" % 2 === par)))
     val schema = ev.schema
     val raw = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(landing.toString)
@@ -1451,20 +1382,10 @@ object Streaming {
     * Same oracle rows as q177's second emission wave. */
   def q184BootstrappedState(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val landing = java.nio.file.Files.createTempDirectory("graft_bs_landing_")
-    scratch.get() += landing
+    val landing = scratchDir("graft_bs_landing_")
     val ev = s.read.parquet(s"$dir/events.parquet")
     // only the odd half streams; the even half is "history"
-    val stage = java.nio.file.Files.createTempDirectory("graft_bs_stage_")
-    scratch.get() += stage
-    ev.where($"event_id" % 2 === 1).coalesce(1)
-      .write.mode("overwrite").parquet(stage.toString)
-    val ls = java.nio.file.Files.list(stage)
-    val part = try ls.iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    finally ls.close()
-    java.nio.file.Files.move(part, landing.resolve("delivery_1.parquet"))
+    deliver(landing, 1, ev.where($"event_id" % 2 === 1))
     val history = ev.where($"event_id" % 2 === 0)
       .groupBy($"user_id")
       .agg(count(lit(1)).as("n"),
@@ -1559,18 +1480,9 @@ object Streaming {
     * is real, not decoration — same posture as q65's bucket cap). */
   def q221StreamHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val landing = java.nio.file.Files.createTempDirectory("graft_ss_landing_")
-    scratch.get() += landing
+    val landing = scratchDir("graft_ss_landing_")
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val stage = java.nio.file.Files.createTempDirectory("graft_ss_stage_")
-    scratch.get() += stage
-    ev.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val ls = java.nio.file.Files.list(stage)
-    val part = try ls.iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    finally ls.close()
-    java.nio.file.Files.move(part, landing.resolve("delivery_0.parquet"))
+    deliver(landing, 0, ev)
     val stream = s.readStream.schema(ev.schema)
       .parquet(landing.toString)
       .select(($"user_id" % ssBuckets).as("bucket"), $"user_id", $"event_id")
@@ -1630,23 +1542,9 @@ object Streaming {
     * pins the contrast against q177 directly. */
   def q240TtlState(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val landing = java.nio.file.Files.createTempDirectory("graft_ttl_landing_")
-    val cp = java.nio.file.Files.createTempDirectory("graft_ttl_cp_")
-    scratch.get() += landing
-    scratch.get() += cp
+    val landing = scratchDir("graft_ttl_landing_")
+    val cp = scratchDir("graft_ttl_cp_")
     val ev = s.read.parquet(s"$dir/events.parquet")
-    def deliver(par: Int): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_ttl_stage_$par")
-      scratch.get() += stage
-      ev.where($"event_id" % 2 === par).coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val ls = java.nio.file.Files.list(stage)
-      val part = try ls.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally ls.close()
-      java.nio.file.Files.move(part, landing.resolve(s"delivery_$par.parquet"))
-    }
     val rows = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]
     // the stream runs its own restart loop, not drain(), so it is
     // built on its own RocksDB-scoped session
@@ -1671,9 +1569,12 @@ object Streaming {
       // state (foreachBatch is at-least-once), duplicating the first
       // wave and never reading the second (observed exactly once
       // under heavy box load). Progress events post only after the
-      // commit lands, so a progressed batch with input rows makes
-      // stop() safe. A deadline turns a wedged stream into a loud
-      // failure, and the stream stops however the wait ends.
+      // commit lands, so the progress of the batch that CONSUMED the
+      // delivery — the file source's end offset moved past its start
+      // offset — makes stop() safe. That holds for a delivery of zero
+      // rows too, which an input-row count would wait on forever. A
+      // deadline turns a wedged stream into a loud failure, and the
+      // stream stops however the wait ends.
       val q = stream.writeStream
         .foreachBatch { (df: DataFrame, _: Long) =>
           val batch = df.collect()
@@ -1684,21 +1585,23 @@ object Streaming {
         .option("checkpointLocation", cp.toString)
         .start()
       val deadline = System.nanoTime() + 120L * 1000000000L
-      try while (!q.recentProgress.exists(_.numInputRows > 0)) {
+      def consumed(p: StreamingQueryProgress): Boolean =
+        p.sources.exists(src => src.endOffset != null && src.endOffset != src.startOffset)
+      try while (!q.recentProgress.exists(consumed)) {
         if (System.nanoTime() > deadline)
           throw new IllegalStateException("q240 delivery batch never committed")
         Thread.sleep(100)
       } finally q.stop()
       q.awaitTermination()
     }
-    deliver(0); runOnce()
+    deliver(landing, 0, ev.where($"event_id" % 2 === 0)); runOnce()
     // strictly exceeds the 800 ms TTL. ~4× margin rather than 2×:
     // the test's correctness rides on wall-clock gaps, and one
     // full-suite run on a heavily loaded box flaked at 1600 ms —
     // the wider quiet period keeps the expiry unambiguous under
     // scheduler contention without meaningfully slowing the suite
     Thread.sleep(3000)
-    deliver(1); runOnce()
+    deliver(landing, 1, ev.where($"event_id" % 2 === 1)); runOnce()
     rows.toSeq.toDF("user_id", "n_so_far", "sum_so_far_micro")
       .orderBy($"user_id", $"n_so_far", $"sum_so_far_micro")
   }
@@ -1793,6 +1696,57 @@ object Streaming {
       |ORDER BY user_id, session_start""".stripMargin
 
   // ---------------------------------------------------------------- q397
+  /** Longest wait for a finished audit's termination event to reach
+    * its listener: a guard against a wedged listener bus, never a
+    * pacing delay. */
+  private val auditWedgeSeconds = 60L
+
+  /** Run `pipe` into a memory sink under `Trigger.AvailableNow` and
+    * return `probe` of each of its progress events it is defined at,
+    * in arrival order, as a `StreamingQueryListener` saw them while
+    * the query ran. The
+    * listener bus delivers asynchronously but in FIFO order, and a
+    * run's `QueryTerminatedEvent` is posted after its last progress
+    * event, so once the listener has seen this run's termination it
+    * has seen every batch: there is no poll and no expected batch
+    * count, and a delivery of zero rows ends as fast as a full one.
+    * The bounded wait only turns a wedged bus into a loud failure.
+    * The run is told apart from other streams on the session by its
+    * `runId`, taken from its own start event (posted before any of
+    * its progress). The listener and the sink's temp view are removed
+    * however the run ends. */
+  private def progressAudit[T](pipe: DataFrame)(
+      probe: PartialFunction[StreamingQueryProgress, T]): Seq[T] = {
+    import scala.jdk.CollectionConverters._
+    import StreamingQueryListener._
+    val s = pipe.sparkSession
+    val name = s"graft_mem_${sinkId.incrementAndGet()}"
+    val runId = new AtomicReference[java.util.UUID]()
+    val ended = new CountDownLatch(1)
+    val seen = new ConcurrentLinkedQueue[T]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (e.name == name) runId.set(e.runId)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.runId == runId.get) probe.lift(e.progress).foreach(seen.add)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.runId == runId.get) ended.countDown()
+    }
+    s.streams.addListener(listener)
+    try {
+      pipe.writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+      if (!ended.await(auditWedgeSeconds, TimeUnit.SECONDS))
+        throw new IllegalStateException(
+          s"$name: no termination event on the listener bus after $auditWedgeSeconds s")
+    } finally {
+      s.streams.removeListener(listener)
+      s.catalog.dropTempView(name)
+    }
+    seen.asScala.toSeq
+  }
+
   /** Streaming progress audit via `StreamingQueryListener` — the
     * event-driven observability surface (SLA alerting, ingest
     * dashboards, the replacement for the reference's Cloud Run
@@ -1804,55 +1758,21 @@ object Streaming {
     * audit must read exactly two batches whose input rows are the
     * delivery sizes — numInputRows counts SOURCE rows, so the
     * downstream purchase filter must not dent it (that asymmetry is
-    * the oracle's whole content). The listener bus is asynchronous;
-    * the query polls until both progress events land (bounded
-    * deadline) — the same discipline any production listener needs.
-    * Spec cross-checks the listener rows against the query's own
-    * `recentProgress`. */
+    * the oracle's whole content). The bus is asynchronous;
+    * [[progressAudit]] reads until the run's own termination event,
+    * the discipline any production listener needs. Batches without
+    * input rows are not reported. */
   def q397ProgressAudit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val landing = java.nio.file.Files.createTempDirectory("graft_audit_landing_")
-    scratch.get() += landing
+    val landing = scratchDir("graft_audit_landing_")
     val ev = s.read.parquet(s"$dir/events.parquet")
-    Seq(0, 1).foreach { par =>
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_audit_stage_$par")
-      scratch.get() += stage
-      ev.where($"event_id" % 2 === par).coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val ls = java.nio.file.Files.list(stage)
-      val part = try ls.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally ls.close()
-      java.nio.file.Files.move(part, landing.resolve(s"delivery_$par.parquet"))
-    }
-    val stream = s.readStream.schema(ev.schema)
+    Seq(0, 1).foreach(par => deliver(landing, par, ev.where($"event_id" % 2 === par)))
+    val pipe = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(landing.toString)
-    val pipe = stream.where($"event_type" === "purchase")
-      .select($"event_id", $"value")
-    val name = s"graft_mem_${sinkId.incrementAndGet()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == name) // other sessions' streams don't pollute
-          seen.add((e.progress.batchId, e.progress.numInputRows))
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
-    s.streams.addListener(listener)
-    try {
-      val q = pipe.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      // the bus delivers asynchronously — poll for both data batches
-      val deadline = System.currentTimeMillis() + 30000
-      while (seen.asScala.count(_._2 > 0) < 2 &&
-        System.currentTimeMillis() < deadline) Thread.sleep(50)
-    } finally s.streams.removeListener(listener)
-    s.catalog.dropTempView(name)
-    seen.asScala.toSeq.filter(_._2 > 0).distinct.sortBy(_._1)
-      .toDF("batch_id", "input_rows")
+      .where($"event_type" === "purchase").select($"event_id", $"value")
+    progressAudit(pipe) {
+      case p if p.numInputRows > 0 => (p.batchId, p.numInputRows)
+    }.sortBy(_._1).toDF("batch_id", "input_rows")
   }
 
   private val q397Oracle =
@@ -1875,54 +1795,20 @@ object Streaming {
     * oracle-checked — and that check is the operational contract: a
     * dedup whose state grows faster than new-key arrival is leaking
     * (no watermark eviction), which is how unbounded-state incidents
-    * actually present. Async bus handled with the q397 polling
-    * discipline. */
+    * actually present. Read through q397's [[progressAudit]]. */
   def q407StateAudit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val landing = java.nio.file.Files.createTempDirectory("graft_state_landing_")
-    scratch.get() += landing
+    val landing = scratchDir("graft_state_landing_")
     val ev = s.read.parquet(s"$dir/events.parquet")
-    Seq(0, 1).foreach { par =>
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_state_stage_$par")
-      scratch.get() += stage
-      ev.where($"event_id" % 2 === par).coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val ls = java.nio.file.Files.list(stage)
-      val part = try ls.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally ls.close()
-      java.nio.file.Files.move(part, landing.resolve(s"delivery_$par.parquet"))
-    }
-    val stream = s.readStream.schema(ev.schema)
+    Seq(0, 1).foreach(par => deliver(landing, par, ev.where($"event_id" % 2 === par)))
+    val pipe = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(landing.toString)
-    val pipe = stream.select($"user_id", $"event_id")
-      .dropDuplicates("user_id")
-    val name = s"graft_mem_${sinkId.incrementAndGet()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Long, Long, Long, Long)]()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == name && e.progress.stateOperators.nonEmpty)
-          seen.add((e.progress.batchId, e.progress.numInputRows,
-            e.progress.stateOperators(0).numRowsTotal,
-            e.progress.stateOperators(0).numRowsUpdated))
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
-    s.streams.addListener(listener)
-    try {
-      val q = pipe.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val deadline = System.currentTimeMillis() + 30000
-      while (seen.asScala.count(_._2 > 0) < 2 &&
-        System.currentTimeMillis() < deadline) Thread.sleep(50)
-    } finally s.streams.removeListener(listener)
-    s.catalog.dropTempView(name)
-    seen.asScala.toSeq.filter(_._2 > 0).distinct.sortBy(_._1)
-      .toDF("batch_id", "input_rows", "state_keys_total", "state_keys_new")
+      .select($"user_id", $"event_id").dropDuplicates("user_id")
+    progressAudit(pipe) {
+      case p if p.numInputRows > 0 && p.stateOperators.nonEmpty =>
+        (p.batchId, p.numInputRows, p.stateOperators(0).numRowsTotal,
+          p.stateOperators(0).numRowsUpdated)
+    }.sortBy(_._1).toDF("batch_id", "input_rows", "state_keys_total", "state_keys_new")
   }
 
   private val q407Oracle =

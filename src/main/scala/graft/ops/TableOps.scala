@@ -348,22 +348,6 @@ object TableOps {
        |ORDER BY k.candidate""".stripMargin
 
   // ---------------------------------------------------------------- q335
-  /** Land `df` as one flat parquet file the streaming file source can
-    * pick up (the Extract.land shape: stage, then move the part file
-    * into the watched dir under a stable name). */
-  private def landFile(df: DataFrame, landing: String, name: String): Unit = {
-    val scratch = Files.createTempDirectory("graft_land_")
-    df.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-    val part = {
-      val s = Files.list(scratch)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.find(_.toString.endsWith(".parquet")).get
-      } finally s.close()
-    }
-    Files.move(part, java.nio.file.Paths.get(landing, name))
-  }
-
   /** Exactly-once streaming ingest INTO the transactional log — the
     * reference's event-driven load (reference `src/load/main.py:23-40`,
     * at-least-once into BigQuery) upgraded twice over: checkpointed
@@ -381,14 +365,14 @@ object TableOps {
     import s.implicits._
     val table = {
       val t = Files.createTempDirectory("graft_tlogs_").toString
-      val landing = Files.createTempDirectory("graft_tlogl_").toString
+      val landing = Files.createTempDirectory("graft_tlogl_")
       val slice = ordersSlice(s, dir)
-      landFile(slice.where($"o_orderkey" % 4 === 0), landing, "batch_a.parquet")
-      landFile(slice.where($"o_orderkey" % 4 === 1), landing, "batch_b.parquet")
+      Seq(0, 1).foreach(k =>
+        Streaming.deliver(landing, k, slice.where($"o_orderkey" % 4 === k)))
       TableLog.create(slice.limit(0), t, "o_orderkey", numFiles = 1)
       def runOnce(checkpoint: String): Unit = {
         val q = s.readStream.schema(slice.schema)
-          .option("maxFilesPerTrigger", "1").parquet(landing)
+          .option("maxFilesPerTrigger", "1").parquet(landing.toString)
           .writeStream
           .foreachBatch { (batch: DataFrame, id: Long) =>
             TableLog.appendTxn(batch, t, numFiles = 1,
@@ -1022,14 +1006,14 @@ object TableOps {
     import s.implicits._
     val table = {
       val t = Files.createTempDirectory("graft_tlogsk_").toString
-      val landing = Files.createTempDirectory("graft_tlogskl_").toString
+      val landing = Files.createTempDirectory("graft_tlogskl_")
       val slice = ordersSlice(s, dir)
-      landFile(slice.where($"o_orderkey" % 4 === 0), landing, "batch_a.parquet")
-      landFile(slice.where($"o_orderkey" % 4 === 1), landing, "batch_b.parquet")
+      Seq(0, 1).foreach(k =>
+        Streaming.deliver(landing, k, slice.where($"o_orderkey" % 4 === k)))
       TableLog.create(slice.limit(0), t, "o_orderkey", numFiles = 1)
       def runOnce(checkpoint: String): Unit = {
         val q = s.readStream.schema(slice.schema)
-          .option("maxFilesPerTrigger", "1").parquet(landing)
+          .option("maxFilesPerTrigger", "1").parquet(landing.toString)
           .writeStream
           .format("graft.sources.GraftLogStreamProvider")
           .option("path", t)

@@ -57,22 +57,18 @@ class PartitionedLoadSpec extends SparkSuite {
     // boolean attribute does not
     Seq(("2024-03-02", "y"), ("2024-03-01", "n"), ("2024-03-03", "n"))
       .toDF("d", "active").write.parquet(s"$root/dim")
-    val dim = spark.read.parquet(s"$root/dim")
     // DPP's benefit heuristic compares estimated sizes and skips
     // kilobyte-scale fixtures; force the estimate so the PLAN property
     // (a DynamicPruning subquery in PartitionFilters) is what's pinned
-    spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
-    spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio", "100000")
-    try {
-      val joined = Load.partitionedTable(spark, table)
-        .join(dim.where($"active" === "y"), col("load_date") === to_date($"d"))
-      val rows = joined.collect()
-      assert(rows.length == 1 && rows.head.getAs[Long]("id") == 2L)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.toLowerCase.contains("dynamicpruning"), plan.take(800))
-    } finally {
-      spark.conf.unset("spark.sql.optimizer.dynamicPartitionPruning.useStats")
-      spark.conf.unset("spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio")
-    }
+    val dpp = graft.GraftSession.scoped(spark,
+      "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
+      "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "100000")
+    val dim = dpp.read.parquet(s"$root/dim")
+    val joined = Load.partitionedTable(dpp, table)
+      .join(dim.where($"active" === "y"), col("load_date") === to_date($"d"))
+    val rows = joined.collect()
+    assert(rows.length == 1 && rows.head.getAs[Long]("id") == 2L)
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.toLowerCase.contains("dynamicpruning"), plan.take(800))
   }
 }

@@ -468,4 +468,91 @@ class StreamingSpec extends SparkSuite {
     // the invariant a leaking dedup would break: total grows by new
     assert(got(1)._2 == got(0)._2 + got(1)._3)
   }
+
+  test("deliver lands frames as delivery_<i> in index mtime order; no stage dir is left") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val landing = java.nio.file.Files.createTempDirectory("graft_deliver_spec_")
+    try {
+      // written last-first, so write timing alone would replay 2, 1, 0
+      Seq(2, 1, 0).foreach(i => Streaming.deliver(landing, i, Seq(i.toLong).toDF("v")))
+      val ls = java.nio.file.Files.list(landing)
+      val files = try ls.iterator().asScala.toSeq.sortBy(_.getFileName.toString)
+        finally ls.close()
+      assert(files.map(_.getFileName.toString) ==
+        Seq("delivery_0.parquet", "delivery_1.parquet", "delivery_2.parquet"))
+      val mtimes = files.map(java.nio.file.Files.getLastModifiedTime(_).toMillis)
+      assert(mtimes.zip(mtimes.tail).forall { case (a, b) => a < b }, mtimes)
+      // one file per trigger replays each delivery's rows in index order
+      val batches = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
+      spark.readStream.schema("v BIGINT").option("maxFilesPerTrigger", 1)
+        .parquet(landing.toString).writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          batches += b.as[Long].collect().toSeq; ()
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      assert(batches.toSeq == Seq(Seq(0L), Seq(1L), Seq(2L)))
+    } finally {
+      val walk = java.nio.file.Files.walk(landing)
+      val paths = try walk.iterator().asScala.toSeq finally walk.close()
+      paths.sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
+  test("ops/ stages deliveries, stamps mtimes, makes Streaming scratch dirs and " +
+      "audits stream progress in one helper each; q397/q407 do not poll") {
+    val ops = new java.io.File("src/main/scala/graft/ops").listFiles().toSeq
+      .filter(_.getName.endsWith(".scala")).sortBy(_.getName)
+    def linesOf(f: java.io.File): Vector[String] = {
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().toVector finally src.close()
+    }
+    val streaming = linesOf(new java.io.File("src/main/scala/graft/ops/Streaming.scala"))
+    // the lines of Streaming's `def name`: its signature through its
+    // closing brace, the first later line back at the def's indentation
+    def body(name: String): Set[(String, Int)] = {
+      val start = streaming.indexWhere(l =>
+        l.contains(s"def $name(") || l.contains(s"def $name["))
+      assert(start >= 0, s"no def $name in Streaming.scala")
+      val indent = streaming(start).takeWhile(_ == ' ').length
+      val end = streaming.indexWhere(l =>
+        l.trim.nonEmpty && l.takeWhile(_ == ' ').length <= indent, start + 1)
+      (start to end).map("Streaming.scala" -> _).toSet
+    }
+    def sites(token: String): Seq[(String, Int)] = ops.flatMap { f =>
+      linesOf(f).zipWithIndex.collect { case (l, i) if l.contains(token) => f.getName -> i }
+    }
+    def onlyIn(token: String, helper: Set[(String, Int)],
+        files: String => Boolean = _ => true): Unit = {
+      val at = sites(token).filter(a => files(a._1))
+      assert(at.nonEmpty && at.forall(helper), s"$token at ${at.mkString(", ")}")
+    }
+    onlyIn("Files.move(", body("deliver"))
+    onlyIn("setLastModifiedTime(", body("deliver"))
+    onlyIn("createTempDirectory(", body("scratchDir"), _ == "Streaming.scala")
+    onlyIn("scratch.get() +=", body("scratchDir"))
+    onlyIn("StreamingQueryListener {", body("progressAudit"))
+    assert(sites("StreamingQueryListener {").length == 1)
+    Seq("q397ProgressAudit", "q407StateAudit").foreach { q =>
+      val sleeps = body(q).filter { case (_, i) => streaming(i).contains("Thread.sleep") }
+      assert(sleeps.isEmpty, s"$q polls at $sleeps")
+    }
+  }
+
+  test("q240, q397 and q407 return promptly on zero-row deliveries") {
+    // a schema-only copy of events, built at test time under target/
+    val dir = new java.io.File("target/empty_events").getAbsolutePath
+    spark.read.parquet(s"$sf0001/events.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    Seq("q240_ttl_state", "q397_progress_audit", "q407_state_audit").foreach { name =>
+      val t0 = System.nanoTime()
+      val rows = Streaming.queries(name)(spark, dir).collect()
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(rows.isEmpty, s"$name: ${rows.toSeq}")
+      // the old waits were 120 s (q240) and 30 s (q397, q407)
+      assert(secs < 25, f"$name took $secs%.1f s on zero rows")
+      info(f"$name: $secs%.1f s on zero rows")
+    }
+  }
 }

@@ -154,29 +154,27 @@ class ChunkedCheckpointSpec extends SparkSuite {
 
   test("temporal partition values render zone-free: DST-gap instants " +
       "and pre-epoch instants bucket by exact micros floorDiv") {
-    val tzBefore = spark.conf.get("spark.sql.session.timeZone")
-    try {
-      // America/New_York's 2024 spring-forward gap is local
-      // 02:00–03:00 on Mar 10; this instant's UTC wall clock (02:30)
-      // falls inside it — the session-zone round-trip the old
-      // rendering took shifts it by an hour
-      spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-      val cases = Seq(
-        ("2024-03-10T02:30:00Z", "2024-03-10", "2024-03", "2024-03-10-02"),
-        ("1969-12-31T23:30:00Z", "1969-12-31", "1969-12", "1969-12-31-23"))
-      cases.foreach { case (inst, d, m, h) =>
-        val micros = java.time.Instant.parse(inst).getEpochSecond * 1000000L
-        val df = spark.sql(s"SELECT timestamp_micros(${micros}L) AS ts")
-        def rendered(spec: String): String =
-          df.select(TableLog.partValueCol(spec, df.schema)).head.getString(0)
-        assert(rendered("days:ts") == d, s"days($inst)")
-        assert(rendered("months:ts") == m, s"months($inst)")
-        assert(rendered("hours:ts") == h, s"hours($inst)")
-        // and the SQL rendering equals the task writer's arithmetic
-        assert(d == TableLog.renderDay(TableLog.epochDayOfMicros(micros)))
-        assert(h == TableLog.renderHour(TableLog.epochHourOfMicros(micros)))
-      }
-    } finally spark.conf.set("spark.sql.session.timeZone", tzBefore)
+    // America/New_York's 2024 spring-forward gap is local
+    // 02:00–03:00 on Mar 10; this instant's UTC wall clock (02:30)
+    // falls inside it — the session-zone round-trip the old
+    // rendering took shifts it by an hour
+    val ny = graft.GraftSession.scoped(spark,
+      "spark.sql.session.timeZone" -> "America/New_York")
+    val cases = Seq(
+      ("2024-03-10T02:30:00Z", "2024-03-10", "2024-03", "2024-03-10-02"),
+      ("1969-12-31T23:30:00Z", "1969-12-31", "1969-12", "1969-12-31-23"))
+    cases.foreach { case (inst, d, m, h) =>
+      val micros = java.time.Instant.parse(inst).getEpochSecond * 1000000L
+      val df = ny.sql(s"SELECT timestamp_micros(${micros}L) AS ts")
+      def rendered(spec: String): String =
+        df.select(TableLog.partValueCol(spec, df.schema)).head().getString(0)
+      assert(rendered("days:ts") == d, s"days($inst)")
+      assert(rendered("months:ts") == m, s"months($inst)")
+      assert(rendered("hours:ts") == h, s"hours($inst)")
+      // and the SQL rendering equals the task writer's arithmetic
+      assert(d == TableLog.renderDay(TableLog.epochDayOfMicros(micros)))
+      assert(h == TableLog.renderHour(TableLog.epochHourOfMicros(micros)))
+    }
   }
 
   test("a spec evolution between checkpoints must not republish stale " +
