@@ -28,9 +28,9 @@ object DedupOps {
 
   /** Canonical text: lowercase, collapsed whitespace (same canon as
     * TextOps.q63Fingerprint). */
-  private def canon(c: Column): Column = regexp_replace(lower(c), " +", " ")
+  private def canon(c: Column): Column = regexp_replace(TextExprs.lower(c), " +", " ")
 
-  private def toks(c: Column): Column = split(lower(c), " ")
+  private def toks(c: Column): Column = split(TextExprs.lower(c), " ")
 
   /** All n-gram word spans in start-position order (NOT deduped — one
     * element per position, multiplicity preserved), joined with one
@@ -1610,7 +1610,7 @@ object DedupOps {
     val w = Window.partitionBy(md5($"text"))
     val base = Tables.documents(s, dir)
       .select($"doc_id", $"text",
-        size(split(lower($"text"), " ")).cast("long").as("ntok"))
+        size(split(TextExprs.lower($"text"), " ")).cast("long").as("ntok"))
       .withColumn("ex_keep", $"doc_id" === min($"doc_id").over(w))
       .drop("text")
     val cc = q79NeardupClusters(s, dir).select($"doc_id", $"is_keeper".as("cc_keep"))

@@ -5,6 +5,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.expr.TextExprs
 
 /** Multimodal-column plumbing for training-data pipelines: media
   * payloads ride as opaque `binary` columns next to typed metadata,
@@ -841,7 +842,7 @@ object MultimodalOps {
     val planted = pairPlants.toDF("pair_id", "caption", "img")
     val base = Tables.documents(s, dir)
       .select($"doc_id".as("pair_id"),
-        lower(substring($"text", 1, 64)).as("caption"),
+        TextExprs.lower(substring($"text", 1, 64)).as("caption"),
         $"text".as("img"))
       .unionByName(planted)
     // hashes evaluate ONCE: the frame feeds four join sides (caption

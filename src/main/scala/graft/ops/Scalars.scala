@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.expr.TextExprs
 
 /** Scalar-function sweep (SURVEY.md §2.2): string, date/time, math,
   * array, and JSON functions — all `org.apache.spark.sql.functions`
@@ -25,8 +26,8 @@ object Scalars {
     Tables.documents(s, dir)
       .select(
         $"doc_id",
-        upper($"lang").as("lang_upper"),
-        lower($"source").as("source_lower"),
+        TextExprs.upper($"lang").as("lang_upper"),
+        TextExprs.lower($"source").as("source_lower"),
         substring($"text", 1, 12).as("prefix12"),
         length($"text").cast("long").as("text_len"),
         concat_ws("-", $"lang", $"source").as("tag"),

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.expr.TextExprs
 
 /** Bounded-memory sketch operators: Count-Min frequency estimation
   * and Bloom-filter join pre-filtering. Both exist for the same
@@ -45,7 +46,7 @@ object SketchOps {
   val cmsDepth = 3
   val cmsWidth = 1024
 
-  private def tokCol(c: Column): Column = split(lower(c), " ")
+  private def tokCol(c: Column): Column = split(TextExprs.lower(c), " ")
 
   /** CM bucket of `tok` for sketch row `j` (column int). */
   private def cmsBucket(j: Column, tok: Column): Column =
@@ -687,8 +688,8 @@ object SketchOps {
     import s.implicits._
     kmvJaccardOf(Tables.documents(s, dir)
       .select($"source",
-        expr("CAST(conv(substring(md5(regexp_replace(lower(text)," +
-          " ' +', ' ')), 1, 15), 16, 10) AS BIGINT)").as("h")))
+        conv(substring(md5(regexp_replace(TextExprs.lower($"text"), " +", " ")),
+          1, 15), 16, 10).cast("bigint").as("h")))
   }
 
   /** Sketch size: 64 hashes ⇒ ~1/√64 ≈ 12% relative error. */

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.expr.TextExprs
 
 /** Text-analysis operators for training-data pipelines over the
   * `documents` table: token statistics, quality scoring, language ID,
@@ -16,7 +17,7 @@ object TextOps {
   val stopwords: Seq[String] =
     Seq("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
 
-  private def toks(c: Column): Column = split(lower(c), " ")
+  private def toks(c: Column): Column = split(TextExprs.lower(c), " ")
 
   // ---------------------------------------------------------------- q60
   /** Per-document token statistics. */
@@ -875,7 +876,7 @@ object TextOps {
     import s.implicits._
     Tables.documents(s, dir)
       .select($"doc_id",
-        md5(regexp_replace(lower($"text"), " +", " ")).as("fingerprint"),
+        md5(regexp_replace(TextExprs.lower($"text"), " +", " ")).as("fingerprint"),
         length($"text").cast("long").as("n_chars_actual"))
       .orderBy($"doc_id")
   }
@@ -966,9 +967,9 @@ object TextOps {
     Tables.documents(s, dir)
       .select($"doc_id",
         size(split($"text", " ")).cast("long").as("n_ws_tokens"),
-        size(regexp_extract_all(lower($"text"), lit(bpeishPattern), lit(0)))
+        size(regexp_extract_all(TextExprs.lower($"text"), lit(bpeishPattern), lit(0)))
           .cast("long").as("n_bpe_tokens"),
-        (size(regexp_extract_all(lower($"text"), lit(bpeishPattern), lit(0))).cast("double") /
+        (size(regexp_extract_all(TextExprs.lower($"text"), lit(bpeishPattern), lit(0))).cast("double") /
           size(split($"text", " "))).as("bpe_per_word"))
       .orderBy($"doc_id")
   }
@@ -1638,8 +1639,8 @@ object TextOps {
         explode(expr(s"regexp_extract_all(t0, '$q116UrlRe', 0)")).as("url"))
       .select($"doc_id", $"url",
         concat(
-          lower(expr("regexp_extract(url, '^([a-zA-Z]+)://', 1)")), lit("://"),
-          lower(expr("regexp_extract(url, '^[a-zA-Z]+://([^/?#]+)', 1)")),
+          TextExprs.lower(expr("regexp_extract(url, '^([a-zA-Z]+)://', 1)")), lit("://"),
+          TextExprs.lower(expr("regexp_extract(url, '^[a-zA-Z]+://([^/?#]+)', 1)")),
           expr("regexp_replace(regexp_extract(url, '^[a-zA-Z]+://[^/?#]+([^?#]*)', 1), '/+$', '')"))
           .as("canon_url"))
       .groupBy($"canon_url")
@@ -2622,12 +2623,12 @@ object TextOps {
     import s.implicits._
     val docs = Tables.documentsSpread(s, dir)
     val vocab = docs.where($"doc_id" % 2 === 0)
-      .select(explode(split(lower($"text"), " ")).as("tok"))
+      .select(explode(split(TextExprs.lower($"text"), " ")).as("tok"))
       .groupBy($"tok").agg(count(lit(1)).as("c"))
       .where($"c" >= oovVocabFloor)
       .select($"tok", lit(1).as("known"))
     docs.where($"doc_id" % 2 === 1)
-      .select($"lang", explode(split(lower($"text"), " ")).as("tok"))
+      .select($"lang", explode(split(TextExprs.lower($"text"), " ")).as("tok"))
       .join(broadcast(vocab), Seq("tok"), "left")
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_tokens"),
@@ -3112,7 +3113,7 @@ object TextOps {
     val s = docs.sparkSession
     import s.implicits._
     docs
-      .select($"doc_id", explode(split(lower($"text"), " ")).as("tok"))
+      .select($"doc_id", explode(split(TextExprs.lower($"text"), " ")).as("tok"))
       .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
       .groupBy($"doc_id")
       .agg(sum($"c").as("n_tokens"), count(lit(1)).as("n_distinct"),
@@ -3289,7 +3290,7 @@ object TextOps {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val counts = Tables.documentsSpread(s, dir)
-      .select(explode(split(lower($"text"), " ")).as("w"))
+      .select(explode(split(TextExprs.lower($"text"), " ")).as("w"))
       .groupBy($"w").agg(count(lit(1)).as("f"))
     val ranked = counts
       .withColumn("r", row_number().over(
@@ -4160,7 +4161,7 @@ object TextOps {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val freq = Tables.documents(s, dir)
-      .select(explode(split(lower($"text"), " ")).as("tok"))
+      .select(explode(split(TextExprs.lower($"text"), " ")).as("tok"))
       .where($"tok" =!= "")
       .groupBy($"tok").agg(count(lit(1)).as("f"))
     val w = Window.orderBy($"f".desc, $"tok")
@@ -4564,7 +4565,7 @@ object TextOps {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val words = Tables.documentsSpread(s, dir)
-      .select($"lang", explode(split(lower($"text"), " ")).as("tok"))
+      .select($"lang", explode(split(TextExprs.lower($"text"), " ")).as("tok"))
       .where($"tok" =!= "")
     val vocab = words.groupBy($"tok").agg(count(lit(1)).as("f"))
       .withColumn("r", row_number().over(Window.orderBy($"f".desc, $"tok")))
@@ -6330,7 +6331,7 @@ object TextOps {
     val train8 = docs
       .select(explode(DedupOps.shinglesN($"text", 8)).as("g"))
       .select(md5($"g").as("gh")).distinct()
-    val tk = split(lower($"text"), " ")
+    val tk = split(TextExprs.lower($"text"), " ")
     val eligible = docs.where(size(tk) >= 16)
       .select($"doc_id", $"source", slice(tk, 5, 8).as("w"))
     val gens = eligible
@@ -6463,7 +6464,7 @@ object TextOps {
 
   def q478PrefixCacheSharing(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tk = split(lower($"text"), " ")
+    val tk = split(TextExprs.lower($"text"), " ")
     val docs = Tables.documentsSpread(s, dir)
       .select($"doc_id", $"source", tk.as("toks"))
       .where(size($"toks") >= prefixCacheToks)
@@ -6582,7 +6583,7 @@ object TextOps {
       .select($"doc_id", $"text")
     val corpus = base.unionByName(
       base.select(($"doc_id" + 3000000L).as("doc_id"), $"text"))
-      .withColumn("n_toks", size(split(lower($"text"), " ")).cast("long"))
+      .withColumn("n_toks", size(split(TextExprs.lower($"text"), " ")).cast("long"))
       .withColumn("fp", md5($"text"))
     // stage 1: exact dedup — keeper = min doc_id per fingerprint
     val keeper = corpus.withColumn("keep_id",
@@ -6784,9 +6785,9 @@ object TextOps {
     // the planted minority script: zh words reverse, everything else
     // lowercases as usual (toks() lowercases — transform first)
     val text2 = when($"lang" === "zh",
-      array_join(transform(split(lower($"text"), " "),
+      array_join(transform(split(TextExprs.lower($"text"), " "),
         w => reverse(w)), " "))
-      .otherwise(lower($"text"))
+      .otherwise(TextExprs.lower($"text"))
     val corpus = docs.select($"doc_id", $"lang", text2.as("text"))
     val bucket = conv(substring(md5(concat(lit("bpe:"),
       $"doc_id".cast("string"))), 1, 4), 16, 10).cast("long") % 100

@@ -685,7 +685,9 @@ object GraftLogSinkWriterFactory {
   import org.apache.spark.sql.connector.write.DataWriter
 
   /** One task-attempt writer: parquet files under `<table>/data/`,
-    * key min/max tracked while writing — shared by the streaming
+    * each file's stats observed while writing by the same
+    * [[graft.tablelog.FileStats]] accumulator the staged batch write
+    * uses (no NDV sketches here) — shared by the streaming
     * sink (epoch = micro-batch), the catalog's batch INSERT
     * (epoch = 0), and the row-level-operation replacement write.
     *
@@ -780,12 +782,10 @@ object GraftLogSinkWriterFactory {
     val messageType = messageTypeOf(schema)
     val factory =
       new org.apache.parquet.example.data.simple.SimpleGroupFactory(messageType)
-    // stats-indexed columns: (name, domain) + schema ordinal
-    val sCols: Seq[(String, Char)] =
-      TableLog.statCols(schema, keyCol, partCols)
-    val sIdx: Array[Int] = sCols.map(c => schema.fieldIndex(c._1)).toArray
-    val sTypes: Array[org.apache.spark.sql.types.DataType] =
-      sIdx.map(schema.fields(_).dataType)
+    // stats-indexed columns: the same layout and accumulator the
+    // staged batch write uses, without NDV sketches
+    val statLayout =
+      new graft.tablelog.StatLayout(schema, keyCol, partCols, sketches = false)
 
     new DataWriter[InternalRow] {
       import org.apache.parquet.hadoop.ParquetWriter
@@ -797,22 +797,7 @@ object GraftLogSinkWriterFactory {
           org.apache.parquet.hadoop.example.ExampleParquetWriter
             .builder(new HadoopPath(abs.toString))
             .withType(messageType).withConf(new Configuration()).build()
-        var rows = 0L
-        var mn = Long.MaxValue
-        var mx = Long.MinValue
-        // per-column min/max observations (null = all-null so far),
-        // same stat domains and ordering the stage() path records
-        val cMin = new Array[Any](sCols.length)
-        val cMax = new Array[Any](sCols.length)
-        def observe(j: Int, typ: Char, v: Any): Unit = {
-          if (cMin(j) == null || TableLog.cmpStat(typ, v, cMin(j)) < 0)
-            cMin(j) = v
-          if (cMax(j) == null || TableLog.cmpStat(typ, v, cMax(j)) > 0)
-            cMax(j) = v
-        }
-        def colStats: Seq[TableLog.ColStat] =
-          sCols.zipWithIndex.flatMap { case ((c, t), j) =>
-            TableLog.mkColStat(c, t, cMin(j), cMax(j)) }
+        val stats = new graft.tablelog.FileStats(statLayout, off)
       }
 
       // one open file per live partition tuple (key null = the single
@@ -894,23 +879,7 @@ object GraftLogSinkWriterFactory {
               s"graftlog sink: unsupported column type $o for '${f.name}'")
           }
         }
-        if (keyIdx >= 0) {
-          st.mn = math.min(st.mn, k); st.mx = math.max(st.mx, k)
-        } else { st.mn = 0L; st.mx = 0L } // transitional: re-staged
-        var j = 0
-        while (j < sIdx.length) {
-          val i = sIdx(j) + off
-          if (!r.isNullAt(i)) st.observe(j, sCols(j)._2,
-            sTypes(j) match {
-              case LongType    => r.getLong(i)
-              case IntegerType => r.getInt(i)
-              case DoubleType  => r.getDouble(i)
-              case FloatType   => r.getFloat(i)
-              case _           => r.getUTF8String(i).clone()
-            })
-          j += 1
-        }
-        st.rows += 1L
+        st.stats.add(r)
         st.writer.write(g)
       }
 
@@ -925,13 +894,14 @@ object GraftLogSinkWriterFactory {
           // stat (min = max = id proves file purity to the scan)
           val parts =
             if (tuple == null || partCols.isEmpty) Nil
-            else Seq(TableLog.PartStat(tuple, st.rows))
+            else Seq(TableLog.PartStat(tuple, st.stats.rows))
           val cols =
             if (tuple != null && partCols.isEmpty)
-              st.colStats :+ TableLog.ColStat("__bucket", 'l',
+              st.stats.colStats :+ TableLog.ColStat("__bucket", 'l',
                 tuple.head, tuple.head)
-            else st.colStats
-          GraftLogSinkCommitMessage(st.relPath, st.rows, st.mn, st.mx,
+            else st.stats.colStats
+          val (mn, mx) = st.stats.keyBounds
+          GraftLogSinkCommitMessage(st.relPath, st.stats.rows, mn, mx,
             parts, cols)
         }.toSeq
         open.clear()

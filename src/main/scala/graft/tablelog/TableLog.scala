@@ -49,10 +49,10 @@ import org.apache.spark.sql.types.StructType
   * the full active set so replay cost is O(checkpoint + recent
   * commits), not O(history). Per-file `[minKey, maxKey]` stats on
   * the declared key column let readers skip files before Spark ever
-  * plans the scan ([[TableLog.prunedFiles]]). Commit stats come
-  * from ONE Spark aggregation over only the staged files (grouped
-  * by `input_file_name`), so stats cost is proportional to the
-  * commit, not the table.
+  * plans the scan ([[TableLog.prunedFiles]]). Commit stats are
+  * gathered by the tasks that write the new files, as the rows
+  * stream past ([[FileStats]]), so stats cost no extra read and is
+  * proportional to the commit, not the table.
   */
 object TableLog {
 
@@ -1339,12 +1339,6 @@ object TableLog {
 
   // ------------------------------------------------------------ data stage
 
-  /** Write `df` range-partitioned on the key into a fresh immutable
-    * stage dir and return its AddFiles. Range partitioning makes the
-    * per-file `[min, max]` key stats tight, which is what makes
-    * [[prunedFiles]] skip anything; stats come from ONE aggregation
-    * over only the staged files, grouped by `input_file_name` — cost
-    * proportional to the commit, not the table. */
   /** Hash count for the per-file bloom sidecars. */
   val bloomHashes = 4
 
@@ -1359,10 +1353,8 @@ object TableLog {
   private def sidecarRel(relPath: String, c: String): String =
     s"$relPath.$c.bloom"
 
-  /** `input_file_name()` URI → bare part-file name — ONE definition
-    * for every touched-file match (stage stats/blooms, delete, merge,
-    * cdc), so a future scheme/encoding fix cannot diverge between
-    * copy-on-write paths. */
+  /** `input_file_name()` URI → bare part-file name, for the adopt
+    * stats scan over files this engine did not write. */
   private def fileNameOf(uri: String): String =
     Paths.get(new java.net.URI(uri).getPath).getFileName.toString
 
@@ -1397,7 +1389,19 @@ object TableLog {
     concat(element_at(parts, -2), lit("/"), element_at(parts, -1))
   }
 
-  /** `layout`: optional file-layout expression. When set, files are
+  /** Write `df` range-partitioned on the key into a fresh immutable
+    * stage dir and return its AddFiles, in ONE Spark job: each task
+    * writes its range partition as one file through Spark's own
+    * parquet writer (the write support, codec and bytes of
+    * `df.write.parquet`) and returns that file's AddFile, its stats
+    * gathered by [[FileStats]] while the rows stream past — nothing
+    * reads the new files back. Range partitioning makes the per-file
+    * `[min, max]` key stats tight, which is what makes [[prunedFiles]]
+    * skip anything. An empty range partition stages no file (an empty
+    * input stages none at all); a task that fails mid-write deletes
+    * its partial file and sidecar.
+    *
+    * `layout`: optional file-layout expression. When set, files are
     * range-partitioned and sorted by IT instead of the key column —
     * the OPTIMIZE-ZORDER device ([[compactZorder]]) — while key
     * stats (and bloom sidecars) are still collected as usual, so
@@ -1433,136 +1437,108 @@ object TableLog {
           partCols.map(partValueCol(_, df.schema)) :+ col(keyCol): _*)
       case None => df.repartitionByRange(numFiles, col(keyCol))
     }
-    writer.write.parquet(stageDir.toString)
-    val partFiles = {
-      val s = Files.list(stageDir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.toString)
-          .filter(_.endsWith(".parquet")).toSeq
-      } finally s.close()
-    }
-    if (partFiles.isEmpty) return Nil // empty commit: no data files staged
-    // Bloom sidecars: one distinct-(file, position) agg over ONLY the
-    // staged files — cost proportional to the commit, like the stats
-    // pass. Bits land beside the data file, NOT in the manifest (a
-    // 1 M-row file at production width is ~MBs of bitset — sidecars
-    // keep the log at file-grain metadata).
-    bloom.foreach { case (c, m) =>
-      val perFile = spark.read.parquet(partFiles: _*)
-        .select(input_file_name().as("f"),
-          explode(array(bloomPosCols(c, m): _*)).as("p"))
-        .distinct().groupBy("f")
-        .agg(collect_list(col("p")).as("ps"))
-        .collect()
-      perFile.foreach { r =>
-        val name = fileNameOf(r.getString(0))
-        val bits = new java.util.BitSet(m)
-        r.getSeq[Int](1).foreach(bits.set)
-        Files.write(stageDir.resolve(s"$name.$c.bloom"), bits.toByteArray)
-      }
-    }
-    // non-key column min/max ride the SAME stats aggregation (two
-    // extra agg cells per indexed column — still one pass over only
-    // the staged files, proportional to the commit, never the table)
-    val sCols = statCols(df.schema, keyCol, partCols)
-    val statExprs = sCols.flatMap { case (c, _) =>
-      Seq(min(col(c)), max(col(c))) }
-    def colsOf(r: org.apache.spark.sql.Row, base: Int): Seq[ColStat] =
-      sCols.zipWithIndex.flatMap { case ((c, t), j) =>
-        mkColStat(c, t, r.get(base + 2 * j), r.get(base + 2 * j + 1)) }
-    // NDV sketches ride the SAME stats pass: one HLL agg cell per
-    // eligible column (key + integral/string stat columns — the types
-    // hll_sketch_agg hashes; doubles stay un-sketched, disclosed)
-    val ndvCols: Seq[String] = (keyCol +: sCols.collect {
-      case (c, t) if t == 'l' || t == 's' => c }).filter(_.nonEmpty).distinct
-    // per column: the HLL sketch cell plus an exact null-count cell
-    // (join-cardinality estimation demands the pair; nulls are
-    // additive across files, so the fold stays metadata-only)
-    val ndvExprs = ndvCols.flatMap(c => Seq(
-      org.apache.spark.sql.functions.hll_sketch_agg(col(c), ndvLgK),
-      sum(when(col(c).isNull, 1L).otherwise(0L))))
-    def b64(bytes: Array[Byte]): String =
-      java.util.Base64.getEncoder.encodeToString(bytes)
-    def ndvsOf(r: org.apache.spark.sql.Row, base: Int): Seq[(String, String)] =
-      ndvCols.zipWithIndex.flatMap { case (c, j) =>
-        Option(r.get(base + 2 * j)).map(b =>
-          c -> (b64(b.asInstanceOf[Array[Byte]]) + ":" +
-            r.getLong(base + 2 * j + 1)))
-      }
-    val written: Seq[AddFile] =
-      if (partCols.isEmpty)
-        spark.read.parquet(partFiles: _*)
-          .groupBy(input_file_name().as("f"))
-          .agg(count(lit(1)).as("rows"),
-            Seq(min(col(keyCol)).cast("long").as("mn"),
-              max(col(keyCol)).cast("long").as("mx")) ++
-              statExprs ++ ndvExprs: _*)
-          .collect() // file-grain: ≤ numFiles rows
-          .map { r =>
-            val name = fileNameOf(r.getString(0))
-            AddFile(s"data/$stageId/$name", r.getLong(1), r.getLong(2),
-              r.getLong(3), cols = colsOf(r, 4), specId = specId,
-              ndvs = ndvsOf(r, 4 + 2 * sCols.length))
-          }.toSeq
+    // trailing columns the task reads but never writes: the rendered
+    // partition tuple and the bloom bit positions, evaluated by the
+    // same codegen'd expressions the probe side uses
+    val extras =
+      partCols.map(c =>
+        coalesce(partValueCol(c, df.schema), lit(NullPartValue))) ++
+        bloom.toSeq.flatMap { case (c, m) => bloomPosCols(c, m) }
+    val out =
+      if (extras.isEmpty) writer else writer.select(col("*") +: extras: _*)
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      org.apache.spark.sql.graftbridge.SessionBridge.newHadoopConf(spark, Map.empty))
+    val task = new StageTask(table, stageDir.toString, s"data/$stageId",
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+        .prepareWrite(spark, job, Map.empty, writer.schema),
+      new org.apache.spark.util.SerializableConfiguration(job.getConfiguration),
+      writer.schema, new StatLayout(writer.schema, keyCol, partCols, sketches = true),
+      partCols.length, bloom, specId)
+    val qe = out.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+      Some("stage")) {
+      qe.toRdd.mapPartitionsWithIndex(task.write).collect().toSeq
+    }.sortBy(_.relPath)
+  }
+
+  /** One [[stage]] write as its tasks see it: where the file goes, the
+    * parquet writer factory and Hadoop conf `prepareWrite` set up on
+    * the driver, and where each row carries its stats columns. A row
+    * holds the data columns, then `nParts` rendered partition values,
+    * then the bloom bit positions. */
+  private final class StageTask(table: String, stageDir: String,
+      relDir: String,
+      factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+      conf: org.apache.spark.util.SerializableConfiguration,
+      dataSchema: StructType, layout: StatLayout, nParts: Int,
+      bloom: Option[(String, Int)], specId: Int) extends Serializable {
+
+    def write(pid: Int, rows: Iterator[org.apache.spark.sql.catalyst.InternalRow])
+        : Iterator[AddFile] =
+      if (!rows.hasNext) Iterator.empty
       else {
-        // one stats pass at (file, partition-tuple) grain — the fold
-        // to file grain is driver-side over ≤ 64·numFiles cells, so
-        // partition stats cost the same single aggregation as key
-        // stats, proportional to the commit and never the table
-        val tupleExpr = array(partCols.map(c =>
-          coalesce(partValueCol(c, df.schema), lit(NullPartValue))): _*)
-        spark.read.parquet(partFiles: _*)
-          .groupBy(input_file_name().as("f"), tupleExpr.as("t"))
-          .agg(count(lit(1)).as("rows"),
-            Seq(min(col(keyCol)).cast("long").as("mn"),
-              max(col(keyCol)).cast("long").as("mx")) ++
-              statExprs ++ ndvExprs: _*)
-          .collect()
-          .groupBy(r => fileNameOf(r.getString(0)))
-          .map { case (name, rs) =>
-            require(rs.length <= maxPartTuplesPerFile,
-              s"$table: staged file $name holds ${rs.length} distinct " +
-                s"partition tuples (cap $maxPartTuplesPerFile) — the " +
-                "partition column is too high-cardinality to stratify " +
-                "at file grain; raise numFiles or drop the partitioning")
-            val parts = rs.map(r =>
-                PartStat(r.getSeq[String](1).toList, r.getLong(2)))
-              .sortBy(_.values.mkString("/")).toSeq
-            // fold the per-tuple column observations to file grain in
-            // the shared stat ordering, skipping all-null tuple cells
-            val cols = sCols.zipWithIndex.flatMap { case ((c, t), j) =>
-              val mns = rs.map(_.get(5 + 2 * j)).filter(_ != null)
-              val mxs = rs.map(_.get(5 + 2 * j + 1)).filter(_ != null)
-              if (mns.isEmpty || mxs.isEmpty) None
-              else mkColStat(c, t,
-                mns.reduce((a, b) => if (cmpStat(t, a, b) <= 0) a else b),
-                mxs.reduce((a, b) => if (cmpStat(t, a, b) >= 0) a else b))
+        import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+        val tc = org.apache.spark.TaskContext.get()
+        val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+          conf.value, new TaskAttemptID(new TaskID(
+            new JobID(relDir.stripPrefix("data/"), tc.stageId()), TaskType.MAP,
+            pid), tc.attemptNumber()))
+        // unique per task attempt: a retried partition never collides
+        val name = f"part-$pid%05d-${tc.taskAttemptId()}" +
+          factory.getFileExtension(ctx)
+        val path = new org.apache.hadoop.fs.Path(stageDir, name)
+        val sidecar =
+          bloom.map { case (c, _) => Paths.get(stageDir, sidecarRel(name, c)) }
+        val n = dataSchema.length
+        val data =
+          if (nParts == 0 && bloom.isEmpty) None
+          else Some(org.apache.spark.sql.catalyst.ProjectingInternalRow(
+            dataSchema, 0 until n))
+        val bits = bloom.map { case (_, m) => new java.util.BitSet(m) }
+        // one accumulator per partition tuple (Nil: unpartitioned)
+        val byTuple = scala.collection.mutable.LinkedHashMap
+          .empty[List[String], FileStats]
+        val w = factory.newInstance(path.toString, dataSchema, ctx)
+        try {
+          rows.foreach { r =>
+            val t = List.tabulate(nParts)(j => r.getUTF8String(n + j).toString)
+            byTuple.getOrElseUpdate(t, {
+              require(byTuple.size < maxPartTuplesPerFile,
+                s"$table: staged file $name holds more than " +
+                  s"$maxPartTuplesPerFile distinct partition tuples — " +
+                  "the partition column is too high-cardinality to " +
+                  "stratify at file grain; raise numFiles or drop the " +
+                  "partitioning")
+              new FileStats(layout)
+            }).add(r)
+            bits.foreach { b =>
+              var j = 0
+              while (j < bloomHashes) { b.set(r.getInt(n + nParts + j)); j += 1 }
             }
-            // per-tuple sketches UNION to file grain by register max;
-            // null counts sum exactly
-            val ndvBase = 5 + 2 * sCols.length
-            val ndvs = ndvCols.zipWithIndex.flatMap { case (c, j) =>
-              val cells = rs.map(r =>
-                (r.get(ndvBase + 2 * j), r.getLong(ndvBase + 2 * j + 1)))
-              val bs = cells.map(_._1).filter(_ != null)
-                .map(_.asInstanceOf[Array[Byte]])
-              if (bs.isEmpty) None
-              else {
-                val u = new org.apache.datasketches.hll.Union(ndvLgK)
-                bs.foreach(b => u.update(
-                  org.apache.datasketches.hll.HllSketch.heapify(b)))
-                Some(c -> (java.util.Base64.getEncoder.encodeToString(
-                  u.getResult(org.apache.datasketches.hll.TgtHllType.HLL_4)
-                    .toCompactByteArray) + ":" + cells.map(_._2).sum))
-              }
+            data match {
+              case Some(d) => d.project(r); w.write(d)
+              case None    => w.write(r)
             }
-            AddFile(s"data/$stageId/$name", rs.map(_.getLong(2)).sum,
-              rs.map(_.getLong(3)).min, rs.map(_.getLong(4)).max, parts,
-              cols = cols, specId = specId, ndvs = ndvs)
-          }.toSeq
+          }
+          w.close()
+          sidecar.foreach(p => Files.write(p, bits.get.toByteArray))
+        } catch {
+          case e: Throwable =>
+            try w.close() catch { case _: Throwable => () }
+            path.getFileSystem(conf.value).delete(path, false)
+            sidecar.foreach(Files.deleteIfExists)
+            throw e
+        }
+        val tuples = byTuple.toSeq.sortBy(_._1.mkString("/"))
+        val accs = tuples.map(_._2)
+        val bounds = accs.map(_.keyBounds)
+        Iterator.single(AddFile(s"$relDir/$name", accs.map(_.rows).sum,
+          bounds.map(_._1).min, bounds.map(_._2).max,
+          if (nParts == 0) Nil else tuples.map { case (t, a) => PartStat(t, a.rows) },
+          cols = FileStats.foldCols(layout, accs), specId = specId,
+          // one tuple's sketch is the aggregate's own; several union
+          ndvs = if (nParts == 0) accs.head.ndvs else FileStats.unionNdvs(accs)))
       }
-    written.sortBy(_.relPath)
   }
 
   /** Declared CHECK constraints of a property map: (name, SQL). */
@@ -1791,8 +1767,8 @@ object TableLog {
   // ------------------------------------------------------------ operations
 
   /** Partition specs must name schema columns and render stably — the
-    * manifest stores partition values as strings, and the stage-time
-    * stats pass, the DSv2 task writer, and the scan-time predicate
+    * manifest stores partition values as strings, and the staged
+    * write, the DSv2 task writer, and the scan-time predicate
     * compare must all produce the SAME rendering. Identity keeps the
     * STRING/BIGINT/INT restriction (floats/binary don't stringify
     * stably); days/months require TIMESTAMP or DATE source columns
@@ -3906,7 +3882,7 @@ object TableLog {
     * per-tuple counts (summing to `liveRows`), and a tuple whose rows
     * all die drops from the stats outright — pruning only ever
     * TIGHTENS. Dying rows render their tuple through the same
-    * [[partValueCol]] the stage-time stats pass used; a rendered
+    * [[partValueCol]] the staged write used; a rendered
     * tuple the file's stats don't record refuses loudly (the two
     * renderings diverged — silent drift would rot pruning exactness).
     * `hits` maps fileId → (dead position, rendered tuple — Nil on
@@ -4045,7 +4021,7 @@ object TableLog {
 
   /** The rendered-partition-tuple column of `snap`'s spec over a
     * LOGICAL frame — the same [[partValueCol]] rendering the
-    * stage-time stats pass records (partition source columns never
+    * staged write records (partition source columns never
     * rename, so logical = physical for them). */
   private def dvTupleCol(snap: Snapshot): Column = {
     val schema = StructType.fromDDL(snap.schemaDdl)

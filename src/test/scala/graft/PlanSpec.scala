@@ -579,42 +579,74 @@ class PlanSpec extends SparkSuite {
     assert(off.forall(j => j == "ShuffledHashJoin" || j == "SortMergeJoin"), off)
   }
 
-  test("q74 Spark jobs: the CC fixpoint finishes on the driver under the broadcast gate") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  /** (jobs started, input bytes read) by `body` under its own job
+    * group; a flush job started afterwards proves every earlier event
+    * has reached the listener. Under AQE every query stage is a job. */
+  private def jobsOf(body: => Unit): (Int, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     val sc = spark.sparkContext
-    // jobs q74 starts (build + collect) under its own job group; a
-    // flush job started afterwards proves every earlier start event
-    // has reached the listener
-    def jobsOf(s: org.apache.spark.sql.SparkSession): Int = {
-      val group = s"q74-jobs-${System.nanoTime}"
-      val started = new java.util.concurrent.atomic.AtomicInteger
-      val flushed = new java.util.concurrent.CountDownLatch(1)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-            case Some(g) if g == group => started.incrementAndGet()
-            case Some(g) if g == group + "-flush" => flushed.countDown()
-            case _ =>
-          }
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, "q74")
-        DedupOps.q74ClusterKeepers(s, sf0001).collect()
-        sc.setJobGroup(group + "-flush", "listener flush")
-        sc.parallelize(Seq(1), 1).count()
-        assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        started.get
-      } finally {
-        sc.clearJobGroup()
-        sc.removeSparkListener(listener)
-      }
+    val group = s"plan-jobs-${System.nanoTime}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val bytesRead = new java.util.concurrent.atomic.AtomicLong
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == group =>
+            started.incrementAndGet(); e.stageIds.foreach(stages.add)
+          case Some(g) if g == group + "-flush" => flushed.countDown()
+          case _ =>
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytesRead.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
     }
-    val driver = jobsOf(spark)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(group + "-flush", "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (started.get, bytesRead.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("q74 Spark jobs: the CC fixpoint finishes on the driver under the broadcast gate") {
+    val (driver, _) = jobsOf(DedupOps.q74ClusterKeepers(spark, sf0001).collect())
     assert(driver <= 16, s"q74 started $driver jobs under the gate")
-    val loop = jobsOf(GraftSession.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+    val (loop, _) = jobsOf(DedupOps.q74ClusterKeepers(
+      GraftSession.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1"), sf0001).collect())
     assert(loop >= 25, s"q74 started $loop jobs with the gate off")
     info(s"q74 at sf0.001: $driver jobs under the gate, $loop with it off")
+  }
+
+  test("a TableLog write is one staging job: no job reads the staged files back") {
+    import spark.implicits._
+    val df = (0L until 500L).map(i => (i, s"v${i % 7}", i * 0.5)).toDF("k", "v", "d")
+    def create(numFiles: Int, bloomCol: Option[String] = None): (Int, Long) = {
+      val t = java.nio.file.Files.createTempDirectory("plan_stage_").toString + "/t"
+      val r = jobsOf(tablelog.TableLog.create(df, t, "k", numFiles, bloomCol))
+      assert(tablelog.TableLog.state(t).active.length == numFiles)
+      r
+    }
+    // numFiles 1: the shuffle map stage, then the writing stage; more
+    // files add the range partitioner's sample job; bloom bits are set
+    // by the writing task. The source is a local relation, so any
+    // input byte would be a staged-file read.
+    assert(create(1) == (2, 0L))
+    assert(create(2) == (3, 0L))
+    assert(create(2, Some("v")) == (3, 0L))
+  }
+
+  test("q506 at sf0.001 starts at most 17 Spark jobs") {
+    val (jobs, _) = jobsOf(TableOps.q506SnapshotTags(spark, sf0001).collect())
+    assert(jobs <= 17, s"q506 started $jobs jobs")
+    info(s"q506 at sf0.001: $jobs jobs")
   }
 
   test("q294/q296: monitors scan only what the series needs") {

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
-import graft.SparkSuite
+import graft.{GraftSession, SparkSuite}
 import graft.tablelog.TableLog
 
 /** INSERT OVERWRITE / TRUNCATE on the catalog (q434/q435's
@@ -28,17 +28,15 @@ class GraftLogOverwriteSpec extends SparkSuite {
     import spark.implicits._
     (0L to 99L).map(i => (i, s"${('a' + (i % 4).toInt).toChar}", s"x$i"))
       .toDF("k", "p", "v").createOrReplaceTempView("ovw_src")
-    withCoalesceOff(
-      spark.sql(s"INSERT INTO graftlog.`$t` SELECT * FROM ovw_src"))
+    coalesceOff().sql(s"INSERT INTO graftlog.`$t` SELECT * FROM ovw_src")
     t
   }
 
-  private def withCoalesceOff[A](body: => A): A = {
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, saved)
-  }
+  /** A child session with AQE coalescing off (plus `confs`); it
+    * sees the temp views registered before it is made. */
+  private def coalesceOff(confs: (String, String)*) =
+    GraftSession.scoped(spark,
+      ("spark.sql.adaptive.coalescePartitions.enabled" -> "false") +: confs: _*)
 
   test("static INSERT OVERWRITE PARTITION restates ONE partition; " +
       "untouched partitions keep their exact files") {
@@ -49,9 +47,9 @@ class GraftLogOverwriteSpec extends SparkSuite {
     import spark.implicits._
     (1000L to 1009L).map(i => (i, s"n$i")).toDF("k", "v")
       .createOrReplaceTempView("ovw_new_b")
-    withCoalesceOff(spark.sql(
+    coalesceOff().sql(
       s"""INSERT OVERWRITE graftlog.`$t` PARTITION (p = 'b')
-         |SELECT k, v FROM ovw_new_b""".stripMargin))
+         |SELECT k, v FROM ovw_new_b""".stripMargin)
     val after = TableLog.state(t)
     // one commit; b is exactly the 10 new rows; a/c/d untouched
     assert(after.version == before.version + 1)
@@ -76,16 +74,12 @@ class GraftLogOverwriteSpec extends SparkSuite {
       "partitions, decided from the task writers' tuple stats") {
     val t = fresh()
     val before = TableLog.state(t)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      import spark.implicits._
-      // incoming holds only b and d rows
-      (Seq((500L, "b", "nb"), (501L, "b", "nb2"), (600L, "d", "nd")))
-        .toDF("k", "p", "v").createOrReplaceTempView("ovw_dyn_src")
-      withCoalesceOff(spark.sql(
-        s"INSERT OVERWRITE graftlog.`$t` SELECT * FROM ovw_dyn_src"))
-    } finally
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    import spark.implicits._
+    // incoming holds only b and d rows
+    (Seq((500L, "b", "nb"), (501L, "b", "nb2"), (600L, "d", "nd")))
+      .toDF("k", "p", "v").createOrReplaceTempView("ovw_dyn_src")
+    coalesceOff("spark.sql.sources.partitionOverwriteMode" -> "dynamic").sql(
+      s"INSERT OVERWRITE graftlog.`$t` SELECT * FROM ovw_dyn_src")
     val got = spark.sql(
       s"SELECT p, count(*) AS n FROM graftlog.`$t` GROUP BY p")
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
@@ -102,9 +96,9 @@ class GraftLogOverwriteSpec extends SparkSuite {
     val t = fresh()
     import spark.implicits._
     // DataFrameWriterV2 expression overwrite: k >= 50 dies, incoming lands
-    withCoalesceOff(
-      (Seq((5000L, "a", "big")).toDF("k", "p", "v")
-        .writeTo(s"graftlog.`$t`").overwrite($"k" >= 50L)))
+    val off = coalesceOff()
+    off.createDataFrame(Seq((5000L, "a", "big"))).toDF("k", "p", "v")
+      .writeTo(s"graftlog.`$t`").overwrite($"k" >= 50L)
     val n1 = spark.sql(s"SELECT count(*), sum(k) FROM graftlog.`$t`")
       .collect().head
     assert(n1.getLong(0) == 51L) // 0..49 survivors + 1 incoming
@@ -112,8 +106,7 @@ class GraftLogOverwriteSpec extends SparkSuite {
     // static INSERT OVERWRITE with no partition spec = truncate form
     (Seq((9L, "z", "only")).toDF("k", "p", "v")
       .createOrReplaceTempView("ovw_all"))
-    withCoalesceOff(spark.sql(
-      s"INSERT OVERWRITE graftlog.`$t` SELECT * FROM ovw_all"))
+    coalesceOff().sql(s"INSERT OVERWRITE graftlog.`$t` SELECT * FROM ovw_all")
     assert(spark.sql(s"SELECT count(*) FROM graftlog.`$t`")
       .collect().head.getLong(0) == 1L)
     // TRUNCATE TABLE: empty now, previous version intact

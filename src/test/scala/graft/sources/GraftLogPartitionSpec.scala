@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.SparkSuite
+import graft.{GraftSession, SparkSuite}
 import graft.tablelog.TableLog
 
 /** Partitioned tables (q432/q433's machinery): identity-partition
@@ -38,19 +38,20 @@ class GraftLogPartitionSpec extends SparkSuite {
       s"""CREATE TABLE graftlog.`$t` (k BIGINT, p STRING, v STRING)
          |PARTITIONED BY (p) TBLPROPERTIES ('key' = 'k')""".stripMargin)
     import spark.implicits._
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val saved = spark.conf.get(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
-    try {
-      (0L to 99L).map(i => (i, s"${('a' + (i % 4).toInt).toChar}", s"x$i"))
-        .toDF("k", "p", "v").createOrReplaceTempView("part_src_1")
-      spark.sql(s"INSERT INTO graftlog.`$t` SELECT * FROM part_src_1")
-      (100L to 199L).map(i => (i, s"${('a' + (i % 4).toInt).toChar}", s"y$i"))
-        .toDF("k", "p", "v").createOrReplaceTempView("part_src_2")
-      spark.sql(s"INSERT INTO graftlog.`$t` SELECT * FROM part_src_2")
-    } finally spark.conf.set(coalesceKey, saved)
+    (0L to 99L).map(i => (i, s"${('a' + (i % 4).toInt).toChar}", s"x$i"))
+      .toDF("k", "p", "v").createOrReplaceTempView("part_src_1")
+    coalesceOff(s"INSERT INTO graftlog.`$t` SELECT * FROM part_src_1")
+    (100L to 199L).map(i => (i, s"${('a' + (i % 4).toInt).toChar}", s"y$i"))
+      .toDF("k", "p", "v").createOrReplaceTempView("part_src_2")
+    coalesceOff(s"INSERT INTO graftlog.`$t` SELECT * FROM part_src_2")
     t
   }
+
+  /** Run `sql` on a child session with AQE coalescing off; the child
+    * sees the temp views registered before the call. */
+  private def coalesceOff(sql: String): Unit =
+    GraftSession.scoped(spark,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false").sql(sql)
 
   test("SQL CREATE ... PARTITIONED BY records identity partitioning; " +
       "partition predicates prune files on the manifest, rows stay exact") {
@@ -243,34 +244,30 @@ class GraftLogPartitionSpec extends SparkSuite {
     val t2 = freshPartitioned()
     // fixture files are tuple-pure -> the scan reports key grouping
     assert(TableLog.state(t1).active.forall(_.parts.size == 1))
-    val confs = Seq(
+    val spj = GraftSession.scoped(spark,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val j = spark.sql(
-        s"""SELECT a.p, count(*) AS n
-           |FROM graftlog.`$t1` a JOIN graftlog.`$t2` b ON a.p = b.p
-           |GROUP BY a.p ORDER BY a.p""".stripMargin)
-      val plan = j.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"expected shuffle-free storage-partitioned join:\n${plan.take(2000)}")
-      // 100+100 rows per table, 50 per tuple per table -> 100*100 pairs/4...
-      // per tuple: 50 rows in a, 50 in b -> 2500 pairs
-      assert(j.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ==
-        Seq("a", "b", "c", "d").map(p => (p, 2500L)))
-      // keyed aggregation alone: one scan, no exchange before the agg
-      val g = spark.sql(
-        s"SELECT p, count(*) AS n FROM graftlog.`$t1` GROUP BY p")
-      val gPlan = g.queryExecution.executedPlan.toString
-      assert(!gPlan.contains("Exchange hashpartitioning"),
-        s"expected exchange-free keyed agg:\n${gPlan.take(2000)}")
-      assert(g.collect().map(r => (r.getString(0), r.getLong(1)))
-        .sortBy(_._1).toSeq ===
-        Seq("a", "b", "c", "d").map(p => (p, 50L)))
-    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    val j = spj.sql(
+      s"""SELECT a.p, count(*) AS n
+         |FROM graftlog.`$t1` a JOIN graftlog.`$t2` b ON a.p = b.p
+         |GROUP BY a.p ORDER BY a.p""".stripMargin)
+    val plan = j.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"expected shuffle-free storage-partitioned join:\n${plan.take(2000)}")
+    // 100+100 rows per table, 50 per tuple per table -> 100*100 pairs/4...
+    // per tuple: 50 rows in a, 50 in b -> 2500 pairs
+    assert(j.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ==
+      Seq("a", "b", "c", "d").map(p => (p, 2500L)))
+    // keyed aggregation alone: one scan, no exchange before the agg
+    val g = spj.sql(
+      s"SELECT p, count(*) AS n FROM graftlog.`$t1` GROUP BY p")
+    val gPlan = g.queryExecution.executedPlan.toString
+    assert(!gPlan.contains("Exchange hashpartitioning"),
+      s"expected exchange-free keyed agg:\n${gPlan.take(2000)}")
+    assert(g.collect().map(r => (r.getString(0), r.getLong(1)))
+      .sortBy(_._1).toSeq ===
+      Seq("a", "b", "c", "d").map(p => (p, 50L)))
     // with bucketing off, the same join shuffles (the fallback shape)
     val j2 = spark.sql(
       s"""SELECT a.p, count(*) AS n
@@ -288,33 +285,29 @@ class GraftLogPartitionSpec extends SparkSuite {
     // land a DV on t1 (merge-on-read delete of two rows of tuple 'a')
     TableLog.deleteWhereDv(spark, t1, col("k").isin(0L, 4L))
     assert(TableLog.state(t1).active.exists(_.dv.isDefined))
-    val confs = Seq(
+    val spj = GraftSession.scoped(spark,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val j = spark.sql(
-        s"""SELECT a.p, count(*) AS n
-           |FROM graftlog.`$t1` a JOIN graftlog.`$t2` b ON a.p = b.p
-           |GROUP BY a.p ORDER BY a.p""".stripMargin)
-      // claiming KeyGroupedPartitioning while DV'd files plan as
-      // separate whole-file partitions would be UNSOUND — the gate
-      // trades the shuffle elision back for correctness
-      assert(j.queryExecution.executedPlan.toString
-        .contains("Exchange hashpartitioning"),
-        "DV'd partitioned scan must not claim key grouping")
-      // rows: tuple a lost 2 of 50 on t1 -> 48*50; b/c/d stay 50*50
-      assert(j.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        == Seq(("a", 2400L), ("b", 2500L), ("c", 2500L), ("d", 2500L)))
-      // the DV-free sibling keeps its exchange-free keyed agg
-      val g = spark.sql(
-        s"SELECT p, count(*) AS n FROM graftlog.`$t2` GROUP BY p")
-      assert(!g.queryExecution.executedPlan.toString
-        .contains("Exchange hashpartitioning"),
-        "DV-free sibling lost its SPJ elision")
-    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    val j = spj.sql(
+      s"""SELECT a.p, count(*) AS n
+         |FROM graftlog.`$t1` a JOIN graftlog.`$t2` b ON a.p = b.p
+         |GROUP BY a.p ORDER BY a.p""".stripMargin)
+    // claiming KeyGroupedPartitioning while DV'd files plan as
+    // separate whole-file partitions would be UNSOUND — the gate
+    // trades the shuffle elision back for correctness
+    assert(j.queryExecution.executedPlan.toString
+      .contains("Exchange hashpartitioning"),
+      "DV'd partitioned scan must not claim key grouping")
+    // rows: tuple a lost 2 of 50 on t1 -> 48*50; b/c/d stay 50*50
+    assert(j.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      == Seq(("a", 2400L), ("b", 2500L), ("c", 2500L), ("d", 2500L)))
+    // the DV-free sibling keeps its exchange-free keyed agg
+    val g = spj.sql(
+      s"SELECT p, count(*) AS n FROM graftlog.`$t2` GROUP BY p")
+    assert(!g.queryExecution.executedPlan.toString
+      .contains("Exchange hashpartitioning"),
+      "DV-free sibling lost its SPJ elision")
   }
 
   test("bucketed tables: co-bucketed KEY join runs with zero shuffle " +
@@ -336,34 +329,30 @@ class GraftLogPartitionSpec extends SparkSuite {
     // every staged file carries the writer's __bucket purity stat
     assert(TableLog.state(t1).active.forall(a =>
       a.cols.exists(s => s.col == "__bucket" && s.min == s.max)))
-    val confs = Seq(
+    val spj = GraftSession.scoped(spark,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (c, _) => c -> spark.conf.get(c) }
-    confs.foreach { case (c, v) => spark.conf.set(c, v) }
-    try {
-      val j = spark.sql(
-        s"""SELECT count(*) AS n, sum(a.k) AS s
-           |FROM graftlog.`$t1` a JOIN graftlog.`$t2` b ON a.k = b.k
-           |""".stripMargin)
-      val plan = j.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"expected shuffle-free bucketed key join:\n${plan.take(2000)}")
-      val r = j.collect().head
-      assert((r.getLong(0), r.getLong(1)) ==
-        ((100L, (0L to 199L).filter(_ % 2 == 0).sum)))
-      // a compaction rewrites without bucket routing: purity stats
-      // drop, the gate falls back to a shuffled (still exact) join
-      TableLog.compact(spark, t2, 1)
-      val j2 = spark.sql(
-        s"""SELECT count(*) FROM graftlog.`$t1` a
-           |JOIN graftlog.`$t2` b ON a.k = b.k""".stripMargin)
-      assert(j2.queryExecution.executedPlan.toString
-        .contains("Exchange hashpartitioning"),
-        "post-compact join should shuffle (purity gone)")
-      assert(j2.collect().head.getLong(0) == 100L)
-    } finally saved.foreach { case (c, v) => spark.conf.set(c, v) }
+    val j = spj.sql(
+      s"""SELECT count(*) AS n, sum(a.k) AS s
+         |FROM graftlog.`$t1` a JOIN graftlog.`$t2` b ON a.k = b.k
+         |""".stripMargin)
+    val plan = j.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"expected shuffle-free bucketed key join:\n${plan.take(2000)}")
+    val r = j.collect().head
+    assert((r.getLong(0), r.getLong(1)) ==
+      ((100L, (0L to 199L).filter(_ % 2 == 0).sum)))
+    // a compaction rewrites without bucket routing: purity stats
+    // drop, the gate falls back to a shuffled (still exact) join
+    TableLog.compact(spj, t2, 1)
+    val j2 = spj.sql(
+      s"""SELECT count(*) FROM graftlog.`$t1` a
+         |JOIN graftlog.`$t2` b ON a.k = b.k""".stripMargin)
+    assert(j2.queryExecution.executedPlan.toString
+      .contains("Exchange hashpartitioning"),
+      "post-compact join should shuffle (purity gone)")
+    assert(j2.collect().head.getLong(0) == 100L)
   }
 
   test("misuse fails loudly: high-cardinality partition column blows " +
@@ -391,19 +380,14 @@ class GraftLogPartitionSpec extends SparkSuite {
       s"""CREATE TABLE graftlog.`$t` (k BIGINT, ts TIMESTAMP, v STRING)
          |PARTITIONED BY (days(ts)) TBLPROPERTIES ('key' = 'k')""".stripMargin)
     import spark.implicits._
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val saved = spark.conf.get(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
-    try {
-      val base = java.time.Instant.parse("2024-03-10T00:00:00Z")
-        .toEpochMilli * 1000L
-      (0L to 99L).map(i =>
-          (i, base + (i % 4) * 86_400_000_000L + i * 1_000_000L, s"x$i"))
-        .toDF("k", "us", "v")
-        .selectExpr("k", "timestamp_micros(us) AS ts", "v")
-        .createOrReplaceTempView("days_src")
-      spark.sql(s"INSERT INTO graftlog.`$t` SELECT * FROM days_src")
-    } finally spark.conf.set(coalesceKey, saved)
+    val base = java.time.Instant.parse("2024-03-10T00:00:00Z")
+      .toEpochMilli * 1000L
+    (0L to 99L).map(i =>
+        (i, base + (i % 4) * 86_400_000_000L + i * 1_000_000L, s"x$i"))
+      .toDF("k", "us", "v")
+      .selectExpr("k", "timestamp_micros(us) AS ts", "v")
+      .createOrReplaceTempView("days_src")
+    coalesceOff(s"INSERT INTO graftlog.`$t` SELECT * FROM days_src")
     t
   }
 
@@ -460,18 +444,13 @@ class GraftLogPartitionSpec extends SparkSuite {
       s"""CREATE TABLE graftlog.`$t` (k BIGINT, ts TIMESTAMP)
          |PARTITIONED BY (months(ts)) TBLPROPERTIES ('key' = 'k')""".stripMargin)
     import spark.implicits._
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val saved = spark.conf.get(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
-    try {
-      val base = java.time.Instant.parse("2023-11-15T12:00:00Z")
-        .toEpochMilli * 1000L
-      // 3 months: Nov 2023, Jan 2024, Mar 2024 (62-day strides)
-      (0L to 59L).map(i => (i, base + (i % 3) * 62L * 86_400_000_000L))
-        .toDF("k", "us").selectExpr("k", "timestamp_micros(us) AS ts")
-        .createOrReplaceTempView("months_src")
-      spark.sql(s"INSERT INTO graftlog.`$t` SELECT * FROM months_src")
-    } finally spark.conf.set(coalesceKey, saved)
+    val base = java.time.Instant.parse("2023-11-15T12:00:00Z")
+      .toEpochMilli * 1000L
+    // 3 months: Nov 2023, Jan 2024, Mar 2024 (62-day strides)
+    (0L to 59L).map(i => (i, base + (i % 3) * 62L * 86_400_000_000L))
+      .toDF("k", "us").selectExpr("k", "timestamp_micros(us) AS ts")
+      .createOrReplaceTempView("months_src")
+    coalesceOff(s"INSERT INTO graftlog.`$t` SELECT * FROM months_src")
     val snap = TableLog.state(t)
     assert(snap.partCols == Seq("months:ts"))
     val months = snap.active.flatMap(_.parts.map(_.values.head)).toSet
@@ -507,23 +486,19 @@ class GraftLogPartitionSpec extends SparkSuite {
     assert(TableLog.state(t1).partCols.isEmpty)
     assert(TableLog.state(t1).active.forall(a =>
       a.cols.exists(s => s.col == "__bucket" && s.min == s.max)))
-    val confs = Seq(
+    val spj = GraftSession.scoped(spark,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (c, _) => c -> spark.conf.get(c) }
-    confs.foreach { case (c, v) => spark.conf.set(c, v) }
-    try {
-      val j = spark.sql(
-        s"""SELECT count(*) AS n, sum(a.k) AS s
-           |FROM graftlog.`$t1` a JOIN graftlog.`$t2` b ON a.k = b.k""".stripMargin)
-      assert(!j.queryExecution.executedPlan.toString
-        .contains("Exchange hashpartitioning"),
-        "expected shuffle-free bucket-transform key join")
-      val r = j.collect().head
-      assert((r.getLong(0), r.getLong(1)) ==
-        ((100L, (0L to 199L).filter(_ % 2 == 0).sum)))
-    } finally saved.foreach { case (c, v) => spark.conf.set(c, v) }
+    val j = spj.sql(
+      s"""SELECT count(*) AS n, sum(a.k) AS s
+         |FROM graftlog.`$t1` a JOIN graftlog.`$t2` b ON a.k = b.k""".stripMargin)
+    assert(!j.queryExecution.executedPlan.toString
+      .contains("Exchange hashpartitioning"),
+      "expected shuffle-free bucket-transform key join")
+    val r = j.collect().head
+    assert((r.getLong(0), r.getLong(1)) ==
+      ((100L, (0L to 199L).filter(_ % 2 == 0).sum)))
     // bucket over a non-key column is refused at CREATE
     val bad = Files.createTempDirectory("tlog_bktbad_").toString + "/tbl"
     val e = intercept[Exception](spark.sql(
@@ -537,22 +512,17 @@ class GraftLogPartitionSpec extends SparkSuite {
       "render zero-padded UTC, raw ranges prune at each grain") {
     useCatalog()
     import spark.implicits._
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val saved = spark.conf.get(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
     // years: 3 years at 365-day strides from mid-2021
     val ty = Files.createTempDirectory("tlog_years_").toString + "/tbl"
     spark.sql(
       s"""CREATE TABLE graftlog.`$ty` (k BIGINT, ts TIMESTAMP)
          |PARTITIONED BY (years(ts)) TBLPROPERTIES ('key' = 'k')""".stripMargin)
-    try {
-      val base = java.time.Instant.parse("2021-07-01T00:00:00Z")
-        .toEpochMilli * 1000L
-      (0L to 59L).map(i => (i, base + (i % 3) * 365L * 86_400_000_000L))
-        .toDF("k", "us").selectExpr("k", "timestamp_micros(us) AS ts")
-        .createOrReplaceTempView("years_src")
-      spark.sql(s"INSERT INTO graftlog.`$ty` SELECT * FROM years_src")
-    } finally spark.conf.set(coalesceKey, saved)
+    val base = java.time.Instant.parse("2021-07-01T00:00:00Z")
+      .toEpochMilli * 1000L
+    (0L to 59L).map(i => (i, base + (i % 3) * 365L * 86_400_000_000L))
+      .toDF("k", "us").selectExpr("k", "timestamp_micros(us) AS ts")
+      .createOrReplaceTempView("years_src")
+    coalesceOff(s"INSERT INTO graftlog.`$ty` SELECT * FROM years_src")
     val ysnap = TableLog.state(ty)
     assert(ysnap.partCols == Seq("years:ts"))
     assert(ysnap.active.flatMap(_.parts.map(_.values.head)).toSet ==
@@ -564,19 +534,16 @@ class GraftLogPartitionSpec extends SparkSuite {
       yb.chosenFiles.size < ysnap.active.size)
     assert(yb.chosenFiles.forall(_.parts.exists(_.values.head >= "2022")))
     // hours: 4 hours on one day; pruning at hour grain; DATE refused
-    spark.conf.set(coalesceKey, "false")
     val th = Files.createTempDirectory("tlog_hours_").toString + "/tbl"
     spark.sql(
       s"""CREATE TABLE graftlog.`$th` (k BIGINT, ts TIMESTAMP)
          |PARTITIONED BY (hours(ts)) TBLPROPERTIES ('key' = 'k')""".stripMargin)
-    try {
-      val base = java.time.Instant.parse("2024-03-10T06:00:00Z")
-        .toEpochMilli * 1000L
-      (0L to 39L).map(i => (i, base + (i % 4) * 3_600_000_000L))
-        .toDF("k", "us").selectExpr("k", "timestamp_micros(us) AS ts")
-        .createOrReplaceTempView("hours_src")
-      spark.sql(s"INSERT INTO graftlog.`$th` SELECT * FROM hours_src")
-    } finally spark.conf.set(coalesceKey, saved)
+    val hBase = java.time.Instant.parse("2024-03-10T06:00:00Z")
+      .toEpochMilli * 1000L
+    (0L to 39L).map(i => (i, hBase + (i % 4) * 3_600_000_000L))
+      .toDF("k", "us").selectExpr("k", "timestamp_micros(us) AS ts")
+      .createOrReplaceTempView("hours_src")
+    coalesceOff(s"INSERT INTO graftlog.`$th` SELECT * FROM hours_src")
     val hsnap = TableLog.state(th)
     assert(hsnap.active.flatMap(_.parts.map(_.values.head)).toSet ==
       (6 to 9).map(h => f"2024-03-10-$h%02d").toSet)

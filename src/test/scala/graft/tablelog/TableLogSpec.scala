@@ -3,7 +3,7 @@ package graft.tablelog
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
-import graft.SparkSuite
+import graft.{GraftSession, SparkSuite}
 
 object TableLogSpec {
   /** Shared mutable state for the nondeterministic-predicate pins —
@@ -977,32 +977,29 @@ class TableLogSpec extends SparkSuite {
       "guard bounds total matched rows, sliver DMLs still land") {
     val t = freshDir()
     TableLog.create(kv((0L to 99L).map(i => (i, s"x$i"))), t, "k", 2)
-    spark.conf.set("spark.graft.dv.maxMatchedRows", "10")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        TableLog.deleteWhereDv(spark, t, col("k") < 50L)
-      }
-      assert(e.getMessage.contains("bulk DML") &&
-        e.getMessage.contains("copy-on-write"), e.getMessage)
-      val e2 = intercept[IllegalArgumentException] {
-        TableLog.updateWhereDv(spark, t, col("k") < 50L,
-          Map("v" -> lit("z")))
-      }
-      assert(e2.getMessage.contains("bulk DML"), e2.getMessage)
-      // nothing committed by the refusals
-      assert(TableLog.latestVersion(t) == 1L)
-      // a sliver under the cap lands normally
-      TableLog.deleteWhereDv(spark, t, col("k") < 5L)
-      assert(TableLog.liveRowsOf(t) == 95L)
-      // the refusal's own advice ("raise the knob") must not wrap the
-      // probe: at Long.MaxValue the delete still DELETES (a silent
-      // zero-limit no-op here would report success and remove nothing)
-      spark.conf.set("spark.graft.dv.maxMatchedRows",
-        Long.MaxValue.toString)
-      TableLog.deleteWhereDv(spark, t, col("k") === 7L)
-      assert(TableLog.liveRowsOf(t) == 94L,
-        "an un-capped DV delete must still delete")
-    } finally spark.conf.unset("spark.graft.dv.maxMatchedRows")
+    val capped = GraftSession.scoped(spark, "spark.graft.dv.maxMatchedRows" -> "10")
+    val e = intercept[IllegalArgumentException] {
+      TableLog.deleteWhereDv(capped, t, col("k") < 50L)
+    }
+    assert(e.getMessage.contains("bulk DML") &&
+      e.getMessage.contains("copy-on-write"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      TableLog.updateWhereDv(capped, t, col("k") < 50L,
+        Map("v" -> lit("z")))
+    }
+    assert(e2.getMessage.contains("bulk DML"), e2.getMessage)
+    // nothing committed by the refusals
+    assert(TableLog.latestVersion(t) == 1L)
+    // a sliver under the cap lands normally
+    TableLog.deleteWhereDv(capped, t, col("k") < 5L)
+    assert(TableLog.liveRowsOf(t) == 95L)
+    // the refusal's own advice ("raise the knob") must not wrap the
+    // probe: at Long.MaxValue the delete still DELETES (a silent
+    // zero-limit no-op here would report success and remove nothing)
+    TableLog.deleteWhereDv(GraftSession.scoped(spark,
+      "spark.graft.dv.maxMatchedRows" -> Long.MaxValue.toString), t, col("k") === 7L)
+    assert(TableLog.liveRowsOf(t) == 94L,
+      "an un-capped DV delete must still delete")
   }
 
   test("merge-on-read MERGE: a sparse tri-clause merge lands DV " +
@@ -1251,43 +1248,41 @@ class TableLogSpec extends SparkSuite {
       t, "k", 2)
     TableLog.setProps(t, TableLog.state(t).props +
       ("dv.mode" -> "merge-on-read"))
-    try {
-      spark.conf.set("spark.graft.dv.maxMatchedRows", "5")
-      // 50 matches > cap 5: the statement re-routes copy-on-write
-      spark.sql(s"DELETE FROM graftlog.`$t` WHERE k < 50")
-      assert(spark.sql(s"SELECT count(*) FROM graftlog.`$t`")
-        .collect().head.getLong(0) == 50L)
-      assert(TableLog.state(t).active.forall(_.dv.isEmpty),
-        "the fallback must land a rewrite, not sidecars")
-      assert(TableLog.history(t).last.op == "delete")
-      // an under-cap delete still takes the DV route
-      spark.sql(s"DELETE FROM graftlog.`$t` WHERE k = 55")
-      assert(TableLog.state(t).active.exists(_.dv.isDefined),
-        "an under-cap delete must stay merge-on-read")
-      // over-cap UPDATE falls back too (the COW updateWhere carries
-      // row identity by construction) and materializes the prior DV
-      // in its rewrite
-      spark.sql(s"UPDATE graftlog.`$t` SET v = 'upd' WHERE k >= 60")
-      assert(spark.sql(
-        s"SELECT count(*) FROM graftlog.`$t` WHERE v = 'upd'")
-        .collect().head.getLong(0) == 40L)
-      assert(spark.sql(s"SELECT count(*) FROM graftlog.`$t`")
-        .collect().head.getLong(0) == 49L)
-      assert(TableLog.history(t).last.op == "update")
-      // dv.strict: the hard refusal is back
-      TableLog.setProps(t, TableLog.state(t).props +
-        ("dv.strict" -> "true"))
-      def msgs(x: Throwable): String =
-        if (x == null) "" else s"${x.getMessage} | ${msgs(x.getCause)}"
-      val e = intercept[Exception] {
-        spark.sql(s"DELETE FROM graftlog.`$t` WHERE k >= 60")
-      }
-      assert(msgs(e).contains("maxMatchedRows"), msgs(e))
-      val e2 = intercept[Exception] {
-        spark.sql(s"UPDATE graftlog.`$t` SET v = 'x' WHERE k >= 60")
-      }
-      assert(msgs(e2).contains("maxMatchedRows"), msgs(e2))
-    } finally spark.conf.unset("spark.graft.dv.maxMatchedRows")
+    val capped = GraftSession.scoped(spark, "spark.graft.dv.maxMatchedRows" -> "5")
+    // 50 matches > cap 5: the statement re-routes copy-on-write
+    capped.sql(s"DELETE FROM graftlog.`$t` WHERE k < 50")
+    assert(capped.sql(s"SELECT count(*) FROM graftlog.`$t`")
+      .collect().head.getLong(0) == 50L)
+    assert(TableLog.state(t).active.forall(_.dv.isEmpty),
+      "the fallback must land a rewrite, not sidecars")
+    assert(TableLog.history(t).last.op == "delete")
+    // an under-cap delete still takes the DV route
+    capped.sql(s"DELETE FROM graftlog.`$t` WHERE k = 55")
+    assert(TableLog.state(t).active.exists(_.dv.isDefined),
+      "an under-cap delete must stay merge-on-read")
+    // over-cap UPDATE falls back too (the COW updateWhere carries
+    // row identity by construction) and materializes the prior DV
+    // in its rewrite
+    capped.sql(s"UPDATE graftlog.`$t` SET v = 'upd' WHERE k >= 60")
+    assert(capped.sql(
+      s"SELECT count(*) FROM graftlog.`$t` WHERE v = 'upd'")
+      .collect().head.getLong(0) == 40L)
+    assert(capped.sql(s"SELECT count(*) FROM graftlog.`$t`")
+      .collect().head.getLong(0) == 49L)
+    assert(TableLog.history(t).last.op == "update")
+    // dv.strict: the hard refusal is back
+    TableLog.setProps(t, TableLog.state(t).props +
+      ("dv.strict" -> "true"))
+    def msgs(x: Throwable): String =
+      if (x == null) "" else s"${x.getMessage} | ${msgs(x.getCause)}"
+    val e = intercept[Exception] {
+      capped.sql(s"DELETE FROM graftlog.`$t` WHERE k >= 60")
+    }
+    assert(msgs(e).contains("maxMatchedRows"), msgs(e))
+    val e2 = intercept[Exception] {
+      capped.sql(s"UPDATE graftlog.`$t` SET v = 'x' WHERE k >= 60")
+    }
+    assert(msgs(e2).contains("maxMatchedRows"), msgs(e2))
   }
 
   test("CALL graftlog.compact_where folds ONE partition's DV debt: " +
