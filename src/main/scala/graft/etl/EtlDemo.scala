@@ -1,9 +1,9 @@
 package graft.etl
 
-import java.nio.file.Files
 import java.time.Instant
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Scratch
 
 /** Self-contained E-T-L demonstration registered as a driver query
   * (rows-only check — the fixture lives in a temp dir, not in the
@@ -23,7 +23,7 @@ object EtlDemo {
     """{"userId": 99, "id": 1000, "title": "solo", "body": "single object, one row"}"""
 
   def q80EtlPosts(spark: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_etl_").toString
+    val root = Scratch.dir("graft_etl_").toString
     val landing = s"$root/landing"
     val table = s"$root/table"
     val checkpoint = s"$root/_checkpoint"

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -91,14 +89,9 @@ object ExtOps {
     * harness; a cluster deployment would keep the dir until the
     * consumer finishes. */
   private def withScratch(prefix: String)(body: String => DataFrame): DataFrame = {
-    val dirPath = Files.createTempDirectory(prefix)
+    val dirPath = Scratch.dir(prefix)
     try body(dirPath.toString).localCheckpoint(true)
-    finally {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(dirPath)
-      val paths = try walk.iterator().asScala.toSeq finally walk.close()
-      paths.reverse.foreach(Files.deleteIfExists)
-    }
+    finally Scratch.rmTree(dirPath)
   }
 
   // ---------------------------------------------------------------- q81
@@ -311,7 +304,7 @@ object ExtOps {
 
   private[graft] def q86Join(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val wh = Files.createTempDirectory("graft_bucketed").toString
+    val wh = Scratch.dir("graft_bucketed").toString
     s.sql("DROP TABLE IF EXISTS graft_bk_orders")
     s.sql("DROP TABLE IF EXISTS graft_bk_lineitem")
     Tables.orders(s, dir).select($"o_orderkey", $"o_orderpriority")
@@ -412,7 +405,7 @@ object ExtOps {
     * filter + aggregate. */
   private[graft] def q98Write(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft_sorted").toString
+    val tmp = Scratch.dir("graft_sorted").toString
     Tables.lineitem(s, dir)
       .select($"l_orderkey", $"l_shipdate", $"l_extendedprice", $"l_returnflag")
       .repartitionByRange(8, $"l_shipdate")
@@ -493,7 +486,7 @@ object ExtOps {
     val bounds = li.agg(
       min($"l_partkey").as("minp"), max($"l_partkey").as("maxp"),
       min($"l_suppkey").as("mins"), max($"l_suppkey").as("maxs"))
-    val tmp = Files.createTempDirectory("graft_zorder").toString
+    val tmp = Scratch.dir("graft_zorder").toString
     li.crossJoin(broadcast(bounds))
       .withColumn("sx", expr("((l_partkey - minp) * 65535) div (maxp - minp)"))
       .withColumn("sy", expr("((l_suppkey - mins) * 65535) div (maxs - mins)"))
@@ -775,7 +768,7 @@ object ExtOps {
     * format round-trips). */
   def q166SchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft_evo").toString
+    val tmp = Scratch.dir("graft_evo").toString
     val orders = Tables.orders(s, dir)
     orders.where($"o_orderkey" % 2 === 0)
       .select($"o_orderkey", $"o_totalprice")

@@ -712,7 +712,7 @@ object MultimodalOps {
     * table shape), which is exactly what this ingest feeds. */
   def q373BinaryFileIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_binmedia")
+    val tmp = Scratch.dir("graft_binmedia")
       .toString
     media(s, dir).foreachPartition { it: Iterator[MediaRow] =>
       it.foreach { m =>

@@ -57,13 +57,14 @@ object Streaming {
       : (SparkSession, String) => DataFrame = (s, dir) => {
     streamInputBytes.set(0L)
     try q(s, dir)
-    finally { val dirs = scratch.get(); dirs.foreach(rmTree); dirs.clear() }
+    finally { val dirs = scratch.get(); dirs.foreach(Scratch.rmTree); dirs.clear() }
   }
 
   /** A temp dir that [[freshBuild]] deletes when this query's build
-    * ends, however it ends. */
+    * ends, however it ends; made under [[Scratch.root]], so a delete
+    * that fails still goes when the JVM exits. */
   private[ops] def scratchDir(prefix: String): Path = {
-    val d = Files.createTempDirectory(prefix)
+    val d = Files.createTempDirectory(Scratch.root, prefix)
     scratch.get() += d
     d
   }
@@ -93,7 +94,7 @@ object Streaming {
       Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(firstDeliveryMs + i * 60000L))
       ()
-    } finally rmTree(stage)
+    } finally Scratch.rmTree(stage)
   }
 
   /** The state store `transformWithState` requires. */
@@ -110,20 +111,6 @@ object Streaming {
     * cores than at 32 at sf0.1 (PERF_r15 scaling block — state work
     * scaled with shuffle partitions = cpus, not with data). */
   private val statePartitionBytes = 32L * 1024 * 1024
-
-  /** Recursive delete that never follows symlinks — the landing dirs
-    * link into the read-only testdata, and only the link dies. The
-    * walk stream is closed before deleting (it holds a directory
-    * handle; leaking one per scratch-dir cleanup is exactly the slow
-    * drip a long bench/verify session can't afford). */
-  private def rmTree(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-      val walk = Files.walk(p)
-      val paths = try walk.iterator().asScala.toSeq finally walk.close()
-      paths.reverse.foreach(Files.deleteIfExists)
-    }
-  }
 
   /** The bounded events stream: the static parquet file re-read as a
     * file-source stream (schema declared, never inferred — the

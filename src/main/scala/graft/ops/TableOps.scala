@@ -63,7 +63,7 @@ object TableOps {
     * (q419 vacuum, q424–q426 DML) builds its own. */
   private[ops] def demoTable(s: SparkSession, dir: String): String =
     demoCache.computeIfAbsent(dir, _ => {
-      val table = Files.createTempDirectory("graft_tlog_").toString
+      val table = Scratch.dir("graft_tlog_").toString
       val o = ordersSlice(s, dir)
       TableLog.create(o.where(col("o_orderkey") % 4 === 0), table,
         "o_orderkey", numFiles = 4)
@@ -157,7 +157,7 @@ object TableOps {
   def q332TableMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val table = {
-      val t = Files.createTempDirectory("graft_tlogm_").toString
+      val t = Scratch.dir("graft_tlogm_").toString
       val base = ordersSlice(s, dir).where($"o_orderkey" % 4 === 0)
       TableLog.create(base, t, "o_orderkey", numFiles = 4)
       val updates = base.where($"o_orderkey" % 20 === 0)
@@ -284,7 +284,7 @@ object TableOps {
   def q389SkippingAdvisor(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val table = {
-      val t = Files.createTempDirectory("graft_tloga_").toString
+      val t = Scratch.dir("graft_tloga_").toString
       val sl = ordersSlice(s, dir)
       val maxK = sl.agg(max($"o_orderkey")).head().getLong(0)
       val w = maxK / advisorSlices + 1L
@@ -364,8 +364,8 @@ object TableOps {
   def q335TableStreamIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val table = {
-      val t = Files.createTempDirectory("graft_tlogs_").toString
-      val landing = Files.createTempDirectory("graft_tlogl_")
+      val t = Scratch.dir("graft_tlogs_").toString
+      val landing = Scratch.dir("graft_tlogl_")
       val slice = ordersSlice(s, dir)
       Seq(0, 1).foreach(k =>
         Streaming.deliver(landing, k, slice.where($"o_orderkey" % 4 === k)))
@@ -443,7 +443,7 @@ object TableOps {
   def q337TableSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val table = {
-      val t = Files.createTempDirectory("graft_tloge_").toString
+      val t = Scratch.dir("graft_tloge_").toString
       val o = Tables.orders(s, dir)
       TableLog.create(
         o.where($"o_orderkey" % 4 === 0)
@@ -492,7 +492,7 @@ object TableOps {
   def q338TableBloomSkip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val table = {
-      val t = Files.createTempDirectory("graft_tlogb_").toString
+      val t = Scratch.dir("graft_tlogb_").toString
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where($"o_orderkey" % 4 === 0), t,
         "o_orderkey", numFiles = 4, bloomCol = Some("o_custkey"))
@@ -591,7 +591,7 @@ object TableOps {
   def q341TableCdcApply(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val table = {
-      val t = Files.createTempDirectory("graft_tlogc_").toString
+      val t = Scratch.dir("graft_tlogc_").toString
       val o = Tables.orders(s, dir)
         .select($"o_orderkey", $"o_totalprice", $"o_orderstatus")
       TableLog.create(o, t, "o_orderkey", numFiles = 4)
@@ -641,7 +641,7 @@ object TableOps {
   def q351TableZorder(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val table = {
-      val t = Files.createTempDirectory("graft_tlogz_").toString
+      val t = Scratch.dir("graft_tlogz_").toString
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where($"o_orderkey" % 4 === 0), t,
         "o_orderkey", numFiles = 4)
@@ -784,7 +784,7 @@ object TableOps {
   def q355TableReplaceWhere(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val table = {
-      val t = Files.createTempDirectory("graft_tlogr_").toString
+      val t = Scratch.dir("graft_tlogr_").toString
       val slice = ordersSlice(s, dir).where($"o_orderkey" % 4 <= 1)
       TableLog.create(slice.where($"o_orderkey" % 4 === 0), t,
         "o_orderkey", numFiles = 4)
@@ -883,7 +883,7 @@ object TableOps {
     * v1 create %4=0 (4 files) · v2 append %4=1 (4) · v3 compact (2)
     * · v4 delete URGENT (2). */
   private def vacuumDemo(s: SparkSession, dir: String): (String, Int, Long) = {
-      val table = Files.createTempDirectory("graft_tlogv_").toString
+      val table = Scratch.dir("graft_tlogv_").toString
       val o = ordersSlice(s, dir)
       TableLog.create(o.where(col("o_orderkey") % 4 === 0), table,
         "o_orderkey", numFiles = 4)
@@ -953,8 +953,8 @@ object TableOps {
   def q422TableStreamSource(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sinkName = {
-      val t = Files.createTempDirectory("graft_tlogsrc_").toString
-      val cp = Files.createTempDirectory("graft_tlogsrc_cp_").toString
+      val t = Scratch.dir("graft_tlogsrc_").toString
+      val cp = Scratch.dir("graft_tlogsrc_cp_").toString
       val name = s"q422_feed_${Integer.toHexString(dir.hashCode)}"
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where(col("o_orderkey") % 4 === 0), t,
@@ -1005,8 +1005,8 @@ object TableOps {
   def q423TableStreamSink(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val table = {
-      val t = Files.createTempDirectory("graft_tlogsk_").toString
-      val landing = Files.createTempDirectory("graft_tlogskl_")
+      val t = Scratch.dir("graft_tlogsk_").toString
+      val landing = Scratch.dir("graft_tlogskl_")
       val slice = ordersSlice(s, dir)
       Seq(0, 1).foreach(k =>
         Streaming.deliver(landing, k, slice.where($"o_orderkey" % 4 === k)))
@@ -1046,7 +1046,7 @@ object TableOps {
   def q424CatalogInsert(s: SparkSession, dir: String): DataFrame = {
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogi_").toString
+      val t = Scratch.dir("graft_tlogi_").toString
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where(col("o_orderkey") % 4 === 0), t,
         "o_orderkey", numFiles = 2)
@@ -1086,7 +1086,7 @@ object TableOps {
   def q425CatalogDelete(s: SparkSession, dir: String): DataFrame = {
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogd_").toString
+      val t = Scratch.dir("graft_tlogd_").toString
       TableLog.create(ordersSlice(s, dir)
         .where(col("o_orderkey") % 4 <= 1), t, "o_orderkey", numFiles = 4)
       s.sql(s"DELETE FROM graftlog.`$t` WHERE o_orderstatus = 'F'")
@@ -1120,7 +1120,7 @@ object TableOps {
   def q426CatalogCreate(s: SparkSession, dir: String): DataFrame = {
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogc_").toString + "/tbl"
+      val t = Scratch.dir("graft_tlogc_").toString + "/tbl"
       s.sql(
         s"""CREATE TABLE graftlog.`$t` (
            |  o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,
@@ -1209,7 +1209,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogalt_").toString + "/tbl"
+      val t = Scratch.dir("graft_tlogalt_").toString + "/tbl"
       s.sql(
         s"""CREATE TABLE graftlog.`$t` (
            |  o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING)
@@ -1256,8 +1256,8 @@ object TableOps {
   def q429ChangeFeedStream(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sinkName = {
-      val t = Files.createTempDirectory("graft_tlogcdf_").toString
-      val cp = Files.createTempDirectory("graft_tlogcdf_cp_").toString
+      val t = Scratch.dir("graft_tlogcdf_").toString
+      val cp = Scratch.dir("graft_tlogcdf_cp_").toString
       val name = s"q429_feed_${Integer.toHexString(dir.hashCode)}"
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where(col("o_orderkey") % 4 === 0), t,
@@ -1313,7 +1313,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogu_").toString
+      val t = Scratch.dir("graft_tlogu_").toString
       TableLog.create(ordersSlice(s, dir).where(col("o_orderkey") % 4 <= 1),
         t, "o_orderkey", numFiles = 4)
       s.sql(
@@ -1371,7 +1371,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogsm_").toString
+      val t = Scratch.dir("graft_tlogsm_").toString
       val base = ordersSlice(s, dir).where($"o_orderkey" % 4 === 0)
       TableLog.create(base, t, "o_orderkey", numFiles = 4)
       val updates = base.where($"o_orderkey" % 20 === 0)
@@ -1412,7 +1412,7 @@ object TableOps {
     * commits, IN-filtered partition read) against the source data. */
   private def partitionedDemo(s: SparkSession, dir: String): String =
     partCache.computeIfAbsent(dir, _ => {
-      val t = Files.createTempDirectory("graft_tlogpt_").toString + "/tbl"
+      val t = Scratch.dir("graft_tlogpt_").toString + "/tbl"
       val ws = partitionWriteSession(s)
       ws.sql(
         s"""CREATE TABLE graftlog.`$t` (
@@ -1499,7 +1499,7 @@ object TableOps {
   def q434InsertOverwrite(s: SparkSession, dir: String): DataFrame = {
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogow_").toString + "/tbl"
+      val t = Scratch.dir("graft_tlogow_").toString + "/tbl"
       val ws = partitionWriteSession(s)
       ws.sql(
         s"""CREATE TABLE graftlog.`$t` (
@@ -1558,7 +1558,7 @@ object TableOps {
   def q435DynamicOverwrite(s: SparkSession, dir: String): DataFrame = {
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogdy_").toString + "/tbl"
+      val t = Scratch.dir("graft_tlogdy_").toString + "/tbl"
       // dynamic mode changes only what INSERT OVERWRITE replaces; the
       // first insert appends either way
       val ws = partitionWriteSession(s,
@@ -1613,7 +1613,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogtr_").toString
+      val t = Scratch.dir("graft_tlogtr_").toString
       TableLog.create(ordersSlice(s, dir).where($"o_orderkey" % 4 === 2),
         t, "o_orderkey", numFiles = 4)
       s.sql(s"TRUNCATE TABLE graftlog.`$t`")
@@ -1649,7 +1649,7 @@ object TableOps {
   private def warehouseRoot(s: SparkSession, catalog: String): String = {
     val key = s"spark.sql.catalog.$catalog.warehouse"
     s.conf.getOption(key).getOrElse {
-      val root = Files.createTempDirectory(s"graft_${catalog}_").toString
+      val root = Scratch.dir(s"graft_${catalog}_").toString
       s.conf.set(s"spark.sql.catalog.$catalog", "graft.sources.GraftLogCatalog")
       s.conf.set(key, root)
       root
@@ -1716,7 +1716,7 @@ object TableOps {
     val root = warehouseRoot(s, "graftwhq")
     dropWarehouseTables(root, "feed", "src", "dst")
     // a fresh checkpoint per call: the recreated tables restart at v1
-    val cp = Files.createTempDirectory("graft_tlogsn_cp_").toString
+    val cp = Scratch.dir("graft_tlogsn_cp_").toString
     s.sql("CREATE NAMESPACE IF NOT EXISTS graftwhq.feed")
     val ddl = """(o_orderkey BIGINT, o_custkey BIGINT,
       |  o_orderstatus STRING, o_orderpriority STRING,
@@ -1777,7 +1777,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogre_").toString
+      val t = Scratch.dir("graft_tlogre_").toString
       TableLog.create(ordersSlice(s, dir).where($"o_orderkey" % 4 === 2),
         t, "o_orderkey", numFiles = 4)
       TableLog.append(ordersSlice(s, dir).where($"o_orderkey" % 4 === 3),
@@ -1823,7 +1823,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogtm_").toString
+      val t = Scratch.dir("graft_tlogtm_").toString
       val base = ordersSlice(s, dir).where($"o_orderkey" % 4 === 1)
       TableLog.create(base, t, "o_orderkey", numFiles = 4)
       val updates = base.where($"o_orderkey" % 3 === 0)
@@ -1895,8 +1895,8 @@ object TableOps {
     withCatalog(s)
     val js = GraftSession.scoped(s, "spark.sql.sources.v2.bucketing.enabled" -> "true")
     val (fact, dim) = {
-      val f = Files.createTempDirectory("graft_tlogsp_").toString + "/fact"
-      val d = Files.createTempDirectory("graft_tlogsp_").toString + "/dim"
+      val f = Scratch.dir("graft_tlogsp_").toString + "/fact"
+      val d = Scratch.dir("graft_tlogsp_").toString + "/dim"
       js.sql(
         s"""CREATE TABLE graftlog.`$f` (
            |  o_orderkey BIGINT, o_orderpriority STRING, o_totalprice DOUBLE)
@@ -1961,7 +1961,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogcs_").toString
+      val t = Scratch.dir("graft_tlogcs_").toString
       TableLog.create(ordersSlice(s, dir).where($"o_orderkey" % 4 === 3),
         t, "o_orderkey", numFiles = 8)
       TableLog.compactZorder(s, t, "o_custkey", "o_orderkey", numFiles = 8)
@@ -1997,8 +1997,8 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val (src, dst) = {
-      val a = Files.createTempDirectory("graft_tlogcl_").toString + "/src"
-      val b = Files.createTempDirectory("graft_tlogcl_").toString + "/dst"
+      val a = Scratch.dir("graft_tlogcl_").toString + "/src"
+      val b = Scratch.dir("graft_tlogcl_").toString + "/dst"
       TableLog.create(ordersSlice(s, dir).where($"o_orderkey" % 8 === 6),
         a, "o_orderkey", numFiles = 4)
       s.sql(s"CALL graftlog.clone('$a', '$b')")
@@ -2086,7 +2086,7 @@ object TableOps {
   private def dvTable(s: SparkSession, dir: String): String = {
     withCatalog(s)
     dvCache.computeIfAbsent(dir, _ => {
-      val t = Files.createTempDirectory("graft_tlogdv_").toString
+      val t = Scratch.dir("graft_tlogdv_").toString
       TableLog.create(ordersSlice(s, dir).where(col("o_orderkey") % 8 === 1),
         t, "o_orderkey", numFiles = 4)
       s.sql(s"CALL graftlog.delete_dv('$t', 'o_custkey % 7 = 0')")
@@ -2125,7 +2125,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogmu_").toString
+      val t = Scratch.dir("graft_tlogmu_").toString
       TableLog.create(ordersSlice(s, dir).where($"o_orderkey" % 8 === 5),
         t, "o_orderkey", numFiles = 4)
       TableLog.updateWhereDv(s, t, $"o_custkey" % 9 === 2,
@@ -2207,7 +2207,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val table = {
-      val t = Files.createTempDirectory("graft_tlogms_").toString + "/tbl"
+      val t = Scratch.dir("graft_tlogms_").toString + "/tbl"
       s.sql(
         s"""CREATE TABLE graftlog.`$t` (
            |  o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,
@@ -2257,8 +2257,8 @@ object TableOps {
   def q459SkipChangeCommits(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sinkName = {
-      val t = Files.createTempDirectory("graft_tlogsc_").toString
-      val cp = Files.createTempDirectory("graft_tlogsc_cp_").toString
+      val t = Scratch.dir("graft_tlogsc_").toString
+      val cp = Scratch.dir("graft_tlogsc_cp_").toString
       val name = s"q459_skipcc_${Integer.toHexString(dir.hashCode)}"
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where(col("o_orderkey") % 8 === 3), t,
@@ -2310,8 +2310,8 @@ object TableOps {
     withCatalog(s)
     val js = GraftSession.scoped(s, "spark.sql.sources.v2.bucketing.enabled" -> "true")
     val (t1, t2) = {
-      val a = Files.createTempDirectory("graft_tlogbk_").toString + "/a"
-      val b = Files.createTempDirectory("graft_tlogbk_").toString + "/b"
+      val a = Scratch.dir("graft_tlogbk_").toString + "/a"
+      val b = Scratch.dir("graft_tlogbk_").toString + "/b"
       js.sql(
         s"""CREATE TABLE graftlog.`$a` (o_orderkey BIGINT,
            |  o_totalprice DOUBLE)
@@ -2366,7 +2366,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogdy_").toString + "/ev"
+      val path = Scratch.dir("graft_tlogdy_").toString + "/ev"
       s.sql(
         s"""CREATE TABLE graftlog.`$path` (event_id BIGINT, ts TIMESTAMP,
            |  event_type STRING, value DOUBLE)
@@ -2413,7 +2413,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogrn_").toString + "/t"
+      val path = Scratch.dir("graft_tlogrn_").toString + "/t"
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where($"o_orderkey" % 4 === 0)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice"),
@@ -2475,7 +2475,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogdc_").toString + "/t"
+      val path = Scratch.dir("graft_tlogdc_").toString + "/t"
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where($"o_orderkey" % 4 === 2)
         .select($"o_orderkey", $"o_orderstatus", $"o_orderpriority",
@@ -2531,7 +2531,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val root = Files.createTempDirectory("graft_tlogds_").toString
+      val root = Scratch.dir("graft_tlogds_").toString
       val path = s"$root/ev"
       s.sql(
         s"""CREATE TABLE graftlog.`$path` (event_id BIGINT, ts TIMESTAMP,
@@ -2588,7 +2588,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tloggd_").toString + "/t"
+      val path = Scratch.dir("graft_tloggd_").toString + "/t"
       val slice = ordersSlice(s, dir).where($"o_orderkey" % 4 === 1)
         .select($"o_orderkey", $"o_custkey", $"o_orderstatus")
       TableLog.create(slice, path, "o_orderkey", numFiles = 4,
@@ -2645,7 +2645,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogcs_").toString + "/t"
+      val path = Scratch.dir("graft_tlogcs_").toString + "/t"
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where($"o_orderkey" % 4 === 3)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice"),
@@ -2748,7 +2748,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogck_").toString + "/t"
+      val path = Scratch.dir("graft_tlogck_").toString + "/t"
       val slice = ordersSlice(s, dir)
       TableLog.create(slice.where($"o_orderkey" % 4 === 0)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice"),
@@ -2807,7 +2807,7 @@ object TableOps {
   def q481DefaultWiden(s: SparkSession, dir: String): DataFrame = {
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogdw_").toString + "/tbl"
+      val path = Scratch.dir("graft_tlogdw_").toString + "/tbl"
       s.sql(
         s"""CREATE TABLE graftlog.`$path` (o_orderkey BIGINT, ship INT)
            |TBLPROPERTIES ('key' = 'o_orderkey')""".stripMargin)       // v1
@@ -2875,7 +2875,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogwap_").toString + "/t"
+      val path = Scratch.dir("graft_tlogwap_").toString + "/t"
       val slice = ordersSlice(s, dir)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
       TableLog.create(slice.where($"o_orderkey" % 4 === 0),
@@ -2949,7 +2949,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogbrm_").toString + "/t"
+      val path = Scratch.dir("graft_tlogbrm_").toString + "/t"
       val slice = ordersSlice(s, dir)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
       TableLog.create(slice.where($"o_orderkey" % 4 === 0),
@@ -3001,7 +3001,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogpse_").toString + "/ev"
+      val path = Scratch.dir("graft_tlogpse_").toString + "/ev"
       val ev = Tables.events(s, dir)
         .select($"event_id", $"ts", $"event_type", $"value")
       TableLog.create(ev.where($"event_id" % 2 === 0), path,
@@ -3047,7 +3047,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val base = Files.createTempDirectory("graft_tlogview_").toString
+      val base = Scratch.dir("graft_tlogview_").toString
       val path = base + "/orders_t"
       val slice = ordersSlice(s, dir)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
@@ -3116,7 +3116,7 @@ object TableOps {
     withCatalog(s)
     graft.GraftFunctions.install(s)
     val (t, fromTs, toTs) = {
-      val path = Files.createTempDirectory("graft_tlogtsf_").toString + "/t"
+      val path = Scratch.dir("graft_tlogtsf_").toString + "/t"
       val slice = ordersSlice(s, dir)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
       TableLog.create(slice.where($"o_orderkey" % 7 === 0),
@@ -3157,7 +3157,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogmev_").toString + "/t"
+      val path = Scratch.dir("graft_tlogmev_").toString + "/t"
       val slice = ordersSlice(s, dir)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
       TableLog.create(slice.where($"o_orderkey" % 6 === 0),
@@ -3219,7 +3219,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tloggen_").toString + "/t"
+      val path = Scratch.dir("graft_tloggen_").toString + "/t"
       TableLog.createEmpty(path,
         "o_orderkey BIGINT, o_totalprice DOUBLE, price_band STRING",
         "o_orderkey",
@@ -3283,7 +3283,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val (src, dst) = {
-      val base = Files.createTempDirectory("graft_tlogdeep_").toString
+      val base = Scratch.dir("graft_tlogdeep_").toString
       val (srcP, dstP) = (base + "/src", base + "/dst")
       val slice = ordersSlice(s, dir)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
@@ -3345,7 +3345,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogid_").toString + "/t"
+      val path = Scratch.dir("graft_tlogid_").toString + "/t"
       TableLog.createEmpty(path,
         "id BIGINT, o_orderkey BIGINT, o_totalprice DOUBLE", "id",
         props = Map("identity.id" -> "1000"))                          // v1
@@ -3418,7 +3418,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogsqlins_")
+      val path = Scratch.dir("graft_tlogsqlins_")
         .toString + "/t"
       TableLog.createEmpty(path,
         "id BIGINT, o_orderkey BIGINT, o_totalprice DOUBLE, " +
@@ -3502,7 +3502,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogreb_").toString + "/t"
+      val path = Scratch.dir("graft_tlogreb_").toString + "/t"
       val slice = ordersSlice(s, dir)
         .select($"o_orderkey", $"o_totalprice")
       TableLog.create(slice.where($"o_orderkey" % 7 === 1),
@@ -3565,7 +3565,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogtag_").toString + "/t"
+      val path = Scratch.dir("graft_tlogtag_").toString + "/t"
       val slice = ordersSlice(s, dir).select($"o_orderkey", $"o_totalprice")
       TableLog.create(slice.where($"o_orderkey" % 6 === 1),
         path, "o_orderkey", numFiles = 2)                              // v1
@@ -3618,7 +3618,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogmu_").toString + "/t"
+      val path = Scratch.dir("graft_tlogmu_").toString + "/t"
       val slice = ordersSlice(s, dir).where($"o_orderkey" % 9 === 5)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
       TableLog.create(slice, path, "o_orderkey", numFiles = 3,
@@ -3671,7 +3671,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogdd_").toString + "/t"
+      val path = Scratch.dir("graft_tlogdd_").toString + "/t"
       val slice = Tables.events(s, dir)
         .select($"event_id", $"ts", $"user_id", $"event_type")
         .where($"event_id" % 4 === 1)
@@ -3737,7 +3737,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogcw_").toString + "/t"
+      val path = Scratch.dir("graft_tlogcw_").toString + "/t"
       // the slice materializes ONCE — the four per-day appends then
       // filter the frozen frame instead of rescanning the source
       val slice = Tables.events(s, dir)
@@ -3816,7 +3816,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogmv_").toString + "/t"
+      val path = Scratch.dir("graft_tlogmv_").toString + "/t"
       // frozen once: the fixture's create/append/merge-source frames
       // all filter this slice — three source scans fold to one
       val slice = ordersSlice(s, dir)
@@ -3923,7 +3923,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogzw_").toString + "/t"
+      val path = Scratch.dir("graft_tlogzw_").toString + "/t"
       val slice = Tables.events(s, dir)
         .select($"event_id", $"ts", $"user_id")
         .where($"event_id" % 4 === 1 &&
@@ -3989,7 +3989,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val base = Files.createTempDirectory("graft_tlogci_")
+      val base = Scratch.dir("graft_tlogci_")
       val path = base.toString + "/t"
       val src = Files.createDirectories(base.resolve("incoming"))
       val slice = Tables.events(s, dir)
@@ -4076,7 +4076,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tloglsh_").toString + "/t"
+      val path = Scratch.dir("graft_tloglsh_").toString + "/t"
       val docs = Tables.documents(s, dir).select($"doc_id", $"text")
         .localCheckpoint(true)
       val corpus = docs.where($"doc_id" % 3 === 0)
@@ -4203,7 +4203,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogad_").toString + "/t"
+      val path = Scratch.dir("graft_tlogad_").toString + "/t"
       val ev = Tables.events(s, dir).select($"event_id", $"event_type")
       // the legacy job: plain parquet, no log, no stats
       ev.where(pmod($"event_id", lit(7)) === 1)
@@ -4249,7 +4249,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogbl_").toString + "/t"
+      val path = Scratch.dir("graft_tlogbl_").toString + "/t"
       val slice = ordersSlice(s, dir).select($"o_orderkey", $"o_totalprice")
       TableLog.create(slice.where($"o_orderkey" % 7 === 1),
         path, "o_orderkey", numFiles = 2)                            // v1
@@ -4318,7 +4318,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val root = Files.createTempDirectory("graft_tlogims_").toString
+      val root = Scratch.dir("graft_tlogims_").toString
       val path = s"$root/t"
       TableLog.createEmpty(path,
         "row_id BIGINT, o_orderkey BIGINT, o_orderstatus STRING, " +
@@ -4411,7 +4411,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tloggp_").toString + "/t"
+      val path = Scratch.dir("graft_tloggp_").toString + "/t"
       val slice = Tables.events(s, dir)
         .select($"event_id", $"ts", $"user_id", $"event_type")
         .where($"event_id" % 3 === 0)
@@ -4482,7 +4482,7 @@ object TableOps {
     import s.implicits._
     withCatalog(s)
     val t = {
-      val path = Files.createTempDirectory("graft_tlogmm_").toString + "/t"
+      val path = Scratch.dir("graft_tlogmm_").toString + "/t"
       val slice = Tables.events(s, dir)
         .select($"event_id", $"ts", $"user_id", $"event_type")
         .where($"event_id" % 3 === 0)

@@ -491,19 +491,12 @@ case class GraftIdentityUpdateCommand(path: String,
       cond.map(b => ColumnBridge.column(b.e)).getOrElse(lit(true))
     val setCols =
       set.map { case (n, b) => n -> ColumnBridge.column(b.e) }.toMap
-    try TableLog.updateWhereDv(session, path, condCol, setCols)
-    catch {
-      // over-cap matched set: re-route THIS statement through the
-      // copy-on-write updateWhere (safe on identity tables too — its
-      // select list CARRIES every row's id, so no id mints or
-      // drifts), unless the table declares dv.strict
-      case e: TableLog.DvBulkRefusalException =>
-        val snap = TableLog.state(path)
-        if (GraftLogTable.dvStrict(snap.props)) throw e
-        GraftLogTable.logDvFallback(path, "UPDATE", e)
-        TableLog.updateWhere(session, path, condCol, setCols,
-          numFiles = math.max(1, snap.active.size))
-    }
+    // over-cap matched set: the copy-on-write updateWhere is safe on
+    // identity tables too — its select list CARRIES every row's id,
+    // so no id mints or drifts
+    GraftLogTable.dvOrCopyOnWrite(path, "UPDATE")(
+      TableLog.updateWhereDv(session, path, condCol, setCols))(
+      TableLog.updateWhere(session, path, condCol, setCols, _))
     Nil
   }
 }

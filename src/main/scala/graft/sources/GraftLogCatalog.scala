@@ -1025,29 +1025,17 @@ class GraftLogTable(tablePath: String, snap: TableLog.Snapshot,
     // until a compaction migrates the layout
     val prune = GraftLogTable.deletePrune(
       SparkSession.active, tablePath, snap, filters.toSeq)
+    val cow = (numFiles: Int) => TableLog.deleteWhere(SparkSession.active,
+      tablePath, cond, numFiles, pruneCandidates = Some(prune))
+    // the DV route prunes its candidate scan with the SAME manifest
+    // stat layers as the COW route — a key-ranged merge-on-read
+    // delete reads the intersecting sliver, never the active set
     if (GraftLogTable.morDeclared(snap.props, "delete.mode") &&
-        GraftLogTable.dvSpecClean(snap)) {
-      // the DV route prunes its candidate scan with the SAME manifest
-      // stat layers as the COW route — a key-ranged merge-on-read
-      // delete reads the intersecting sliver, never the active set.
-      // When the matched set overflows the sidecar niche (the
-      // dvMaxMatched driver guard), THIS statement re-routes through
-      // the copy-on-write rewrite below — the bulk restatement a
-      // 100-TB table wants anyway — logged, not failed; tables
-      // declaring dv.strict = true keep the hard refusal.
-      try {
+        GraftLogTable.dvSpecClean(snap))
+      GraftLogTable.dvOrCopyOnWrite(tablePath, "DELETE")(
         TableLog.deleteWhereDv(SparkSession.active, tablePath, cond,
-          pruneCandidates = Some(prune))
-        return
-      } catch {
-        case e: TableLog.DvBulkRefusalException =>
-          if (GraftLogTable.dvStrict(snap.props)) throw e
-          GraftLogTable.logDvFallback(tablePath, "DELETE", e)
-      }
-    }
-    TableLog.deleteWhere(SparkSession.active, tablePath, cond,
-      numFiles = math.max(1, snap.active.size),
-      pruneCandidates = Some(prune))
+          pruneCandidates = Some(prune)))(cow)
+    else cow(math.max(1, snap.active.size))
     ()
   }
 }
@@ -1083,12 +1071,27 @@ object GraftLogTable {
   private[sources] def dvStrict(props: Map[String, String]): Boolean =
     props.get("dv.strict").exists(_.equalsIgnoreCase("true"))
 
-  private[sources] def logDvFallback(table: String, op: String,
-      e: Throwable): Unit =
-    org.slf4j.LoggerFactory.getLogger(classOf[GraftLogTable])
-      .warn("graftlog: {} on {} overflowed the deletion-vector " +
-        "matched-row cap; falling back to copy-on-write for this " +
-        "statement ({})", op, table, e.getMessage)
+  /** The DV→copy-on-write fallback of the SQL DML routes: run `dv`
+    * (a merge-on-read verb); when its matched set overflows the
+    * sidecar niche (the [[TableLog.DvBulkRefusalException]] of the
+    * dvMaxMatched driver guard), re-route THIS statement through `cow`
+    * with one output file per active file — the bulk restatement a
+    * 100-TB table wants anyway — logged, not failed. Tables declaring
+    * `dv.strict = true` keep the hard refusal. `op` names the SQL
+    * statement in the log line. */
+  private[sources] def dvOrCopyOnWrite(table: String, op: String)(
+      dv: => Long)(cow: Int => Long): Long =
+    try dv
+    catch {
+      case e: TableLog.DvBulkRefusalException =>
+        val snap = TableLog.state(table)
+        if (dvStrict(snap.props)) throw e
+        org.slf4j.LoggerFactory.getLogger(classOf[GraftLogTable])
+          .warn("graftlog: {} on {} overflowed the deletion-vector " +
+            "matched-row cap; falling back to copy-on-write for this " +
+            "statement ({})", op, table, e.getMessage)
+        cow(math.max(1, snap.active.size))
+    }
 
   /** True when every active file of a PARTITIONED table carries
     * current-spec tuple stats — the precondition for merge-on-read

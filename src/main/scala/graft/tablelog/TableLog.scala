@@ -1461,6 +1461,16 @@ object TableLog {
     }.sortBy(_.relPath)
   }
 
+  /** [[stage]] under `snap`'s own layout — its key, bloom, partition
+    * spec, column mapping and spec id — the write of every verb that
+    * adds rows to an existing table. [[create]] states its layout, and
+    * the full rewrites ([[compact]], [[compactZorder]]) drop the column
+    * mapping, so those call [[stage]] themselves. */
+  private def stageAs(snap: Snapshot, df: DataFrame, table: String,
+      numFiles: Int, layout: Option[Column] = None): Seq[AddFile] =
+    stage(df, table, snap.keyCol, numFiles, snap.bloom, layout,
+      snap.partCols, snap.colMap, snap.specId)
+
   /** One [[stage]] write as its tasks see it: where the file goes, the
     * parquet writer factory and Hadoop conf `prepareWrite` set up on
     * the driver, and where each row carries its stats columns. A row
@@ -2140,8 +2150,7 @@ object TableLog {
       .select(schema.fieldNames.map(col): _*)
     validateChecks(assigned, checksOf(snap.props),
       s"appendIdentity into $table")
-    val adds = stage(assigned, table, snap.keyCol, numFiles, snap.bloom,
-      partCols = snap.partCols, colMap = snap.colMap, specId = snap.specId)
+    val adds = stageAs(snap, assigned, table, numFiles)
     // advance the mark by what was actually STAGED — the commit and
     // the data cannot disagree
     val n = adds.map(_.rows).sum
@@ -2326,9 +2335,7 @@ object TableLog {
       case _ => withGens.select(schema.fieldNames.map(col): _*)
     }
     validateChecks(out, checksOf(snap.props), op)
-    val adds2 = stage(out, table, snap.keyCol, math.max(1, needy.size),
-      snap.bloom, partCols = snap.partCols, colMap = snap.colMap,
-      specId = snap.specId)
+    val adds2 = stageAs(snap, out, table, math.max(1, needy.size))
     val propsOpt = idInfo.collect {
       case (c, hwm, step) if nAlloc > 0L =>
         snap.props + (s"identity.$c" -> identityProp(hwm + nAlloc * step, step))
@@ -2343,9 +2350,7 @@ object TableLog {
     requireNoIdentity(snap, s"append into $table")
     val df1 = withWriteDefaults(df, snap)
     validateChecks(df1, checksOf(snap.props), s"append into $table")
-    val adds = stage(df1, table, snap.keyCol, numFiles, snap.bloom,
-      partCols = snap.partCols, colMap = snap.colMap,
-      specId = snap.specId)
+    val adds = stageAs(snap, df1, table, numFiles)
     commit(table, snap.version, "append", adds, Nil, "", "")
   }
 
@@ -2367,9 +2372,7 @@ object TableLog {
     if (snap.txns.get(appId).exists(_ >= txnVersion)) return snap.version
     val df1 = withWriteDefaults(df, snap)
     validateChecks(df1, checksOf(snap.props), s"appendTxn into $table")
-    val adds = stage(df1, table, snap.keyCol, numFiles, snap.bloom,
-      partCols = snap.partCols, colMap = snap.colMap,
-      specId = snap.specId)
+    val adds = stageAs(snap, df1, table, numFiles)
     commit(table, snap.version, "append", adds, Nil, "", "",
       txn = Some((appId, txnVersion)))
   }
@@ -2462,9 +2465,7 @@ object TableLog {
           s"${missing.mkString(", ")} with no declared default")
       val ordered = df1.select(schema.fieldNames.map(col(_)).toSeq: _*)
       validateChecks(ordered, checksOf(snap.props), s"copyInto $table")
-      val adds = stage(ordered, table, snap.keyCol, numFiles, snap.bloom,
-        partCols = snap.partCols, colMap = snap.colMap,
-        specId = snap.specId)
+      val adds = stageAs(snap, ordered, table, numFiles)
       // the ledger identity was computed at LISTING time but the
       // bytes were read during staging — a file mutated in between
       // (a writer still appending to it) would land partial content
@@ -2566,7 +2567,8 @@ object TableLog {
     * value into every row anyway, and the general
     * `df.writeTo(t).overwrite(expr)` form is delete-then-insert by
     * definition. `pruneCandidates` narrows the matched-file scan
-    * (partition/key stats) — files outside it provably hold no match. */
+    * ([[touchedFiles]] over partition/key stats) — files outside it
+    * provably hold no match. Commits even when nothing matches. */
   def overwriteWhereStaged(spark: SparkSession, table: String,
       cond: Column, extAdds: Seq[AddFile], numFiles: Int,
       pruneCandidates: Snapshot => Seq[AddFile] = _.active,
@@ -2578,24 +2580,12 @@ object TableLog {
     requireNoIdentity(snap, s"staged overwrite into $table")
     val stamped = extAdds.map(a =>
       if (a.specId == extSpecId) a else a.copy(specId = extSpecId))
-    val candidates = pruneCandidates(snap)
     val touched =
-      if (candidates.isEmpty) Nil
-      else {
-        val scan = readFiles(spark, table, snap, candidates)
-          .withColumn("_file", input_file_name())
-        val names = scan.where(cond).select("_file").distinct()
-          .collect().map(r => fileIdOfUri(r.getString(0))).toSet
-        candidates.filter(a => names(fileIdOf(a.relPath)))
-      }
+      touchedFiles(spark, table, snap, pruneCandidates(snap))(_.where(cond))
     val survAdds =
       if (touched.isEmpty) Nil
-      else stage(
-        readFiles(spark, table, snap, touched)
-          .where(!coalesce(cond, lit(false))),
-        table, snap.keyCol, numFiles, snap.bloom,
-        partCols = snap.partCols, colMap = snap.colMap,
-      specId = snap.specId)
+      else stageAs(snap, readFiles(spark, table, snap, touched)
+        .where(!coalesce(cond, lit(false))), table, numFiles)
     commit(table, snap.version, "replace", survAdds ++ stamped,
       touched.map(_.relPath), "", "")
   }
@@ -3388,9 +3378,7 @@ object TableLog {
       checkPhysCollision(snap, f.name, "appendEvolve"))
     val merged = StructType(old ++ df.schema.filterNot(f => oldNames(f.name)))
     validateChecks(df, checksOf(snap.props), s"appendEvolve into $table")
-    val adds = stage(df, table, snap.keyCol, numFiles, snap.bloom,
-      partCols = snap.partCols, colMap = snap.colMap,
-      specId = snap.specId)
+    val adds = stageAs(snap, df, table, numFiles)
     commit(table, snap.version, "evolve", adds, Nil, merged.toDDL, "")
   }
 
@@ -3720,6 +3708,38 @@ object TableLog {
     readFiles(spark, table, snap, files)
   }
 
+  // --------------------------------------------- copy-on-write core
+
+  /** The files of `candidates` holding at least one row that `hit`
+    * keeps — the touched-file discovery of every copy-on-write verb,
+    * ONE `input_file_name()` scan of the candidates. `hit` is a
+    * `where(cond)` for the predicate verbs and a broadcast key join
+    * for [[merge]] and [[applyCdc]]; it must keep the `_file` column.
+    * No candidates, no scan. */
+  private def touchedFiles(spark: SparkSession, table: String,
+      snap: Snapshot, candidates: Seq[AddFile])(
+      hit: DataFrame => DataFrame): Seq[AddFile] =
+    if (candidates.isEmpty) Nil
+    else {
+      val ids = hit(readFiles(spark, table, snap, candidates)
+          .withColumn("_file", input_file_name()))
+        .select("_file").distinct()
+        .collect().map(r => fileIdOfUri(r.getString(0))).toSet
+      candidates.filter(a => ids(fileIdOf(a.relPath)))
+    }
+
+  /** The commit of every copy-on-write verb: stage `rewritten` (the
+    * touched files' survivors plus the verb's new rows) under the
+    * snapshot's layout and replace `touched` with it in ONE manifest.
+    * `schemaDdl` and `props` ride along for [[merge]]'s schema
+    * evolution and identity mark. */
+  private def cowCommit(snap: Snapshot, table: String, op: String,
+      rewritten: DataFrame, numFiles: Int, touched: Seq[AddFile],
+      schemaDdl: String = "",
+      props: Option[Map[String, String]] = None): Long =
+    commit(table, snap.version, op, stageAs(snap, rewritten, table, numFiles),
+      touched.map(_.relPath), schemaDdl, "", props = props)
+
   /** Transactional CDC apply — the inverse of [[diffVersions]]: land
     * a change stream (rows tagged `action` ∈ insert/update/delete,
     * q106/q180's shape) as ONE atomic copy-on-write commit. Exactly
@@ -3730,7 +3750,9 @@ object TableLog {
     * idiom needs for exactly-once CDC pipelines. An `update` whose
     * key is absent lands as an insert (upsert posture, disclosed).
     * `changes` carries the table's columns plus `action`; keys must
-    * be unique within the batch. */
+    * be unique within the batch. The copy-on-write core
+    * ([[touchedFiles]], [[cowCommit]]) does the rewrite; an empty
+    * batch still commits. */
   def applyCdc(spark: SparkSession, table: String, changes: DataFrame,
       numFiles: Int): Long = {
     val snap = state(table)
@@ -3740,52 +3762,34 @@ object TableLog {
     val touchKeys = changes
       .where(col("action").isin("update", "delete"))
       .select(col(k)).distinct()
-    val scan = readFiles(spark, table, snap, snap.active)
-      .withColumn("_file", input_file_name())
-    val touchedNames = scan.join(broadcast(touchKeys), k)
-      .select("_file").distinct()
-      .collect().map(r => fileIdOfUri(r.getString(0))).toSet
-    val touched = snap.active.filter(a => touchedNames(fileIdOf(a.relPath)))
+    val touched = touchedFiles(spark, table, snap, snap.active)(
+      _.join(broadcast(touchKeys), k))
     val survivors = readFiles(spark, table, snap, touched)
       .join(broadcast(touchKeys), Seq(k), "left_anti")
     val incoming = changes.where(col("action") =!= "delete")
       .drop("action")
-    val rewritten = survivors.unionByName(incoming)
-    val adds = stage(rewritten, table, k, numFiles, snap.bloom,
-      partCols = snap.partCols, colMap = snap.colMap,
-      specId = snap.specId)
-    commit(table, snap.version, "cdc", adds, touched.map(_.relPath), "", "")
+    cowCommit(snap, table, "cdc", survivors.unionByName(incoming),
+      numFiles, touched)
   }
 
   /** Copy-on-write DELETE: rewrite exactly the files holding ≥1
-    * matching row, re-adding their survivors. Touched files are
-    * found with one `input_file_name` scan — with key-column
-    * predicates, pass `pruneKeys` so only range-intersecting files
-    * are even read (stats-level skipping); predicates on other
-    * columns scan the active set once (a production table keeps
-    * stats per predicate-worthy column to skip here too). */
+    * matching row, re-adding their survivors ([[touchedFiles]],
+    * [[cowCommit]]). With key-column predicates, pass
+    * `pruneCandidates = Some(prunedFiles(_, lo, hi))` so only
+    * range-intersecting files are even read (stats-level skipping);
+    * predicates on other columns scan the active set once (a
+    * production table keeps stats per predicate-worthy column to skip
+    * here too). No commit when nothing matches. */
   def deleteWhere(spark: SparkSession, table: String, cond: Column,
-      numFiles: Int, pruneKeys: Option[(Long, Long)] = None,
+      numFiles: Int,
       pruneCandidates: Option[Snapshot => Seq[AddFile]] = None): Long = {
     val snap = state(table)
-    val candidates = (pruneKeys, pruneCandidates) match {
-      case (Some((lo, hi)), _) => prunedFiles(snap, lo, hi)
-      case (None, Some(f))     => f(snap)
-      case (None, None)        => snap.active
-    }
-    val scan = readFiles(spark, table, snap, candidates)
-      .withColumn("_file", input_file_name())
-    val touchedNames = scan.where(cond).select("_file").distinct()
-      .collect().map(r => fileIdOfUri(r.getString(0))).toSet
-    val touched = candidates.filter(a => touchedNames(fileIdOf(a.relPath)))
+    val touched = touchedFiles(spark, table, snap,
+      pruneCandidates.fold(snap.active)(_(snap)))(_.where(cond))
     if (touched.isEmpty) return snap.version // no-op: nothing matched
     // SQL DELETE semantics: only cond=TRUE rows go; NULL-cond rows stay
-    val survivors = readFiles(spark, table, snap, touched)
-      .where(!coalesce(cond, lit(false)))
-    val adds = stage(survivors, table, snap.keyCol, numFiles, snap.bloom,
-      partCols = snap.partCols, colMap = snap.colMap,
-      specId = snap.specId)
-    commit(table, snap.version, "delete", adds, touched.map(_.relPath), "", "")
+    cowCommit(snap, table, "delete", readFiles(spark, table, snap, touched)
+      .where(!coalesce(cond, lit(false))), numFiles, touched)
   }
 
   /** Validate UPDATE assignments against `snap`'s schema and return
@@ -3831,7 +3835,8 @@ object TableLog {
     * safe by construction: the select list CARRIES the id for every
     * row (assignments may not target it — checked), so no id mints or
     * drifts and the allocator's mark never moves. CHECK constraints
-    * gate the new images like every write surface. */
+    * gate the new images like every write surface. Same copy-on-write
+    * core as [[deleteWhere]]; no commit when nothing matches. */
   def updateWhere(spark: SparkSession, table: String, cond: Column,
       set: Map[String, Column], numFiles: Int,
       pruneCandidates: Option[Snapshot => Seq[AddFile]] = None): Long = {
@@ -3841,14 +3846,9 @@ object TableLog {
     require(idTargets.isEmpty,
       s"updateWhere into $table: ${idTargets.mkString(", ")} is " +
         "GENERATED ALWAYS AS IDENTITY — its values cannot be updated")
-    val candidates = pruneCandidates.fold(snap.active)(f => f(snap))
-    if (candidates.isEmpty) return snap.version
-    val scan = readFiles(spark, table, snap, candidates)
-      .withColumn("_file", input_file_name())
-    val touchedNames = scan.where(cond).select("_file").distinct()
-      .collect().map(r => fileIdOfUri(r.getString(0))).toSet
-    val touched = candidates.filter(a => touchedNames(fileIdOf(a.relPath)))
-    if (touched.isEmpty) return snap.version
+    val touched = touchedFiles(spark, table, snap,
+      pruneCandidates.fold(snap.active)(_(snap)))(_.where(cond))
+    if (touched.isEmpty) return snap.version // no-op: nothing matched
     val sel = updateSelectList("updateWhere", table, snap, set)
     // the condition evaluates ONCE per row (hit bit stamped, frame
     // frozen) — matched and survivor sets then derive from the same
@@ -3863,16 +3863,12 @@ object TableLog {
     val updated = rows.where(col("__hit")).select(sel: _*)
     validateChecks(updated, checksOf(snap.props),
       s"updateWhere into $table")
-    val rewritten = rows.where(!col("__hit")).drop("__hit")
-      .unionByName(updated)
-    val adds = stage(rewritten, table, snap.keyCol, numFiles, snap.bloom,
-      partCols = snap.partCols, colMap = snap.colMap,
-      specId = snap.specId)
-    commit(table, snap.version, "update", adds,
-      touched.map(_.relPath), "", "")
+    cowCommit(snap, table, "update",
+      rows.where(!col("__hit")).drop("__hit").unionByName(updated),
+      numFiles, touched)
   }
 
-  /** Shared DV-commit tail of [[deleteWhereDv]]/[[updateWhereDv]]:
+  /** The manifest half of [[dvCommit]], the end of all three DV verbs:
     * union the newly-dead positions into each touched file's bitset
     * sidecar and produce the manifest delta (removes, re-adds). On
     * PARTITIONED tables the per-(file, tuple) dead counts decrement
@@ -4150,7 +4146,7 @@ object TableLog {
     * make a re-evaluated survivor set disagree with the recorded dead
     * positions, and the dvExact bounds stamped from it would then
     * answer stats-only aggregates silently wrong instead of refusing.
-    * Shared by all three DV DML verbs so none can regress alone. */
+    * Called only from [[dvCommit]], so no DV verb can regress alone. */
   private def dvSurvivorsFrame(spark: SparkSession, live: DataFrame,
       raw: Array[org.apache.spark.sql.Row]): DataFrame = {
     import spark.implicits._
@@ -4160,6 +4156,72 @@ object TableLog {
       col("__graft_f") === col("__graft_dead_f") &&
         col("__graft_p") === col("__graft_dead_p"), "left_anti")
       .drop("__graft_dead_f", "__graft_dead_p")
+  }
+
+  // -------------------------------------------- deletion-vector core
+
+  /** The shared front of the DV verbs: `candidates` may take deletion
+    * vectors only with current-spec tuple stats on a partitioned table
+    * ([[requireDvPartStats]]) and with row counts inside the bitset's
+    * Int position domain — checked up front for the ROW COUNT, not
+    * just the matched positions, because the read path indexes the
+    * bitset by running position, which must stay in range for every
+    * live row of a DV'd file. `cow` is the copy-on-write route the
+    * refusal points at. Returns `candidates`. */
+  private def dvCandidates(table: String, snap: Snapshot,
+      candidates: Seq[AddFile], cow: String): Seq[AddFile] = {
+    requireDvPartStats(table, snap, candidates)
+    candidates.find(_.rows > Int.MaxValue).foreach(a =>
+      throw new IllegalArgumentException(
+        s"$table: ${a.relPath} holds ${a.rows} rows — beyond the DV " +
+          s"bitset's 2^31 position domain; use $cow"))
+    candidates
+  }
+
+  /** `(__graft_f, __graft_p[, __graft_t])` over a [[dvLiveFrame]] —
+    * the hit rows [[dvHits]] collects; the tuple renders only on
+    * partitioned tables. */
+  private def dvHitCols(snap: Snapshot): Seq[Column] =
+    Seq(col("__graft_f"), col("__graft_p")) ++
+      (if (snap.partCols.isEmpty) Nil
+       else Seq(dvTupleCol(snap).as("__graft_t")))
+
+  /** Collect the dead positions of one DV DML: the rows of `hitRows`
+    * (shaped as [[dvHitCols]]; None when the verb has nothing that can
+    * die) behind the bulk-matched guard — one `limit(dvProbeN)` probe
+    * bounds the driver collect, and a predicate matching more than
+    * [[dvMaxMatched]] rows refuses with [[DvBulkRefusalException]]
+    * (`op` names the verb) instead of OOMing the driver at collect
+    * time. */
+  private def dvHits(spark: SparkSession, table: String, op: String,
+      hitRows: Option[DataFrame]): Array[org.apache.spark.sql.Row] = {
+    val maxM = dvMaxMatched(spark)
+    hitRows.fold(Array.empty[org.apache.spark.sql.Row]) { df =>
+      val got = df.limit(dvProbeN(maxM)).collect()
+      if (got.length > maxM) throw dvBulkRefusal(table, op, maxM)
+      got
+    }
+  }
+
+  /** The shared end of the DV verbs: the dead positions `hits` by file
+    * id, survivor-exact bounds for the touched files
+    * ([[dvSurvivorStats]] over `live` minus `hits` —
+    * [[dvSurvivorsFrame]], never a second evaluation of the
+    * predicate), the new DV entries ([[dvCommitEntries]]), and ONE
+    * commit of them with `staged`, the verb's new row images. */
+  private def dvCommit(spark: SparkSession, table: String, snap: Snapshot,
+      op: String, live: DataFrame, candidates: Seq[AddFile],
+      hits: Array[org.apache.spark.sql.Row], staged: Seq[AddFile] = Nil,
+      props: Option[Map[String, String]] = None): Long = {
+    val byFile = hits.map(r => (r.getString(0), r.getLong(1),
+        if (snap.partCols.isEmpty) Nil else r.getSeq[String](2).toList))
+      .groupBy(_._1)
+      .map { case (f, xs) => f -> xs.toSeq.map(x => (x._2, x._3)) }
+    val (removes, dvAdds) = dvCommitEntries(table, snap, byFile, candidates,
+      dvSurvivorStats(snap, dvSurvivorsFrame(spark, live, hits),
+        byFile.keySet))
+    commit(table, snap.version, op, dvAdds ++ staged, removes, "", "",
+      props = props)
   }
 
   /** MERGE-ON-READ delete via DELETION VECTORS (Delta/Iceberg-v2's
@@ -4183,54 +4245,24 @@ object TableLog {
     * ([[dvCommitEntries]]), so `#partitions` and tuple-stat pruning
     * stay EXACT through the delete. Key/column min/max stats survive
     * as over-approximations: pruning stays sound, exact
-    * stats-answering refuses DV'd files. */
-  def deleteWhereDv(spark: SparkSession, table: String,
-      cond: Column, pruneKeys: Option[(Long, Long)] = None,
+    * stats-answering refuses DV'd files. The DV core
+    * ([[dvCandidates]], [[dvHits]], [[dvCommit]]) does the work; no
+    * commit when nothing matches. */
+  def deleteWhereDv(spark: SparkSession, table: String, cond: Column,
       pruneCandidates: Option[Snapshot => Seq[AddFile]] = None): Long = {
     val snap = state(table)
     // candidate pruning — the SAME manifest stat layers the COW
     // delete takes: a key-ranged GDPR delete on a 100-TB table scans
     // the intersecting sliver, never the active set
-    val candidates = (pruneKeys, pruneCandidates) match {
-      case (Some((lo, hi)), _) => prunedFiles(snap, lo, hi)
-      case (None, Some(f))     => f(snap)
-      case (None, None)        => snap.active
-    }
+    val candidates = dvCandidates(table, snap,
+      pruneCandidates.fold(snap.active)(_(snap)),
+      "the copy-on-write deleteWhere")
     if (candidates.isEmpty) return snap.version
-    requireDvPartStats(table, snap, candidates)
-    // the DV bitset's position domain is Int: refuse files whose ROW
-    // COUNT exceeds it up front (not just the matched positions —
-    // the read path indexes the bitset by running position, which
-    // must stay in range for every live row of a DV'd file)
-    candidates.find(_.rows > Int.MaxValue).foreach(a =>
-      throw new IllegalArgumentException(
-        s"$table: ${a.relPath} holds ${a.rows} rows — beyond the DV " +
-          "bitset's 2^31 position domain; use the copy-on-write " +
-          "deleteWhere"))
     val live = dvLiveFrame(spark, table, snap, candidates)
-    val tupleCols: Seq[Column] =
-      if (snap.partCols.isEmpty) Nil
-      else Seq(dvTupleCol(snap).as("__graft_t"))
-    // bulk-matched guard: one limit-probe bounds the driver collect —
-    // a predicate matching the fleet refuses with copy-on-write
-    // advice instead of OOMing the driver at collect time
-    val maxM = dvMaxMatched(spark)
-    val raw = live.where(cond)
-      .select(col("__graft_f") +: col("__graft_p") +: tupleCols: _*)
-      .limit(dvProbeN(maxM))
-      .collect()
-    if (raw.length > maxM)
-      throw dvBulkRefusal(table, "deleteWhereDv", maxM)
-    val hits = raw.map(r => (r.getString(0), r.getLong(1),
-        if (snap.partCols.isEmpty) Nil
-        else r.getSeq[String](2).toList))
-      .groupBy(_._1)
-      .map { case (f, xs) => f -> xs.toSeq.map(x => (x._2, x._3)) }
+    val hits = dvHits(spark, table, "deleteWhereDv",
+      Some(live.where(cond).select(dvHitCols(snap): _*)))
     if (hits.isEmpty) return snap.version
-    val (removes, adds) = dvCommitEntries(table, snap, hits, candidates,
-      dvSurvivorStats(snap, dvSurvivorsFrame(spark, live, raw),
-        hits.keySet))
-    commit(table, snap.version, "delete", adds, removes, "", "")
+    dvCommit(spark, table, snap, "delete", live, candidates, hits)
   }
 
   /** MERGE-ON-READ update — deletion vectors + fresh-file append in
@@ -4238,14 +4270,13 @@ object TableLog {
     * matched rows' positions die via DV sidecars (their files never
     * rewrite) and the updated images land as new files in the same
     * atomic commit — an update of 0.1% of a 100-TB table writes KB of
-    * sidecars plus only the changed rows. Same niche and same
-    * guarantees as [[deleteWhereDv]] — on partitioned tables the DV
-    * side decrements per-tuple stats exactly and the updated images
+    * sidecars plus only the changed rows. Same niche, same DV core and
+    * same guarantees as [[deleteWhereDv]] — on partitioned tables the
+    * DV side decrements per-tuple stats exactly and the updated images
     * stage under the table's partition spec, so `#partitions` stays
-    * exact through the update. */
+    * exact through the update. No commit when nothing matches. */
   def updateWhereDv(spark: SparkSession, table: String, cond: Column,
       set: Map[String, Column], numFiles: Int = 1,
-      pruneKeys: Option[(Long, Long)] = None,
       pruneCandidates: Option[Snapshot => Seq[AddFile]] = None): Long = {
     val snap = state(table)
     // a DV update of EXISTING rows keeps its assigned ids (same
@@ -4259,40 +4290,17 @@ object TableLog {
     require(idTargets.isEmpty,
       s"updateWhereDv into $table: ${idTargets.mkString(", ")} is " +
         "GENERATED ALWAYS AS IDENTITY — its values cannot be updated")
-    // same candidate pruning + position-domain guard as deleteWhereDv
-    val candidates = (pruneKeys, pruneCandidates) match {
-      case (Some((lo, hi)), _) => prunedFiles(snap, lo, hi)
-      case (None, Some(f))     => f(snap)
-      case (None, None)        => snap.active
-    }
+    val candidates = dvCandidates(table, snap,
+      pruneCandidates.fold(snap.active)(_(snap)), "copy-on-write DML")
     if (candidates.isEmpty) return snap.version
-    requireDvPartStats(table, snap, candidates)
-    candidates.find(_.rows > Int.MaxValue).foreach(a =>
-      throw new IllegalArgumentException(
-        s"$table: ${a.relPath} holds ${a.rows} rows — beyond the DV " +
-          "bitset's 2^31 position domain; use copy-on-write DML"))
     val live = dvLiveFrame(spark, table, snap, candidates)
+    // frozen: the hit positions and the updated images derive from
+    // ONE evaluation of the condition
     val matched = live.where(cond).localCheckpoint(true)
-    // bulk-matched guard (the frozen frame makes the count free-ish):
-    // the hit positions AND the updated images both ride the driver/
-    // executor sliver path — a fleet-sized match refuses loudly
-    val maxM = dvMaxMatched(spark)
-    if (matched.count() > maxM)
-      throw dvBulkRefusal(table, "updateWhereDv", maxM)
-    val tupleCols: Seq[Column] =
-      if (snap.partCols.isEmpty) Nil
-      else Seq(dvTupleCol(snap).as("__graft_t"))
-    val rawHits = matched
-      .select(col("__graft_f") +: col("__graft_p") +: tupleCols: _*)
-      .collect()
-    val hits = rawHits.map(r => (r.getString(0), r.getLong(1),
-        if (snap.partCols.isEmpty) Nil
-        else r.getSeq[String](2).toList))
-      .groupBy(_._1)
-      .map { case (f, xs) => f -> xs.toSeq.map(x => (x._2, x._3)) }
+    val hits = dvHits(spark, table, "updateWhereDv",
+      Some(matched.select(dvHitCols(snap): _*)))
     if (hits.isEmpty) return snap.version
     val updated = matched.drop("__graft_f", "__graft_p")
-      .drop("__graft_dv_file", "__graft_dv_pos")
       .select(updateSelectList("updateWhereDv", table, snap, set): _*)
     // The set-expressions produce NEW row images; a table that reports
     // ENFORCED CHECK constraints must gate them like every other write
@@ -4303,14 +4311,9 @@ object TableLog {
     // their tuple stats land exact like any other partitioned write;
     // file count sized to the images' tuple spread (a broad update
     // across many days must not trip the per-file tuple cap)
-    val staged = stage(updated, table, snap.keyCol,
-      dvImageNumFiles(updated, snap, numFiles), snap.bloom,
-      partCols = snap.partCols, colMap = snap.colMap, specId = snap.specId)
-    val (removes, dvAdds) = dvCommitEntries(table, snap, hits, candidates,
-      dvSurvivorStats(snap, dvSurvivorsFrame(spark, live, rawHits),
-        hits.keySet))
-    commit(table, snap.version, "update",
-      dvAdds ++ staged, removes, "", "")
+    val staged =
+      stageAs(snap, updated, table, dvImageNumFiles(updated, snap, numFiles))
+    dvCommit(spark, table, snap, "update", live, candidates, hits, staged)
   }
 
   /** Atomic slice restatement (Delta `replaceWhere` / dynamic
@@ -4321,9 +4324,10 @@ object TableLog {
     * reader atomically. `incoming` must itself satisfy `cond`
     * (checked; Delta's contract) — otherwise the "replace THIS
     * slice" claim would silently widen into an upsert of unrelated
-    * rows. Cost profile is deleteWhere's: only files holding a
-    * matching row rewrite; the new slice lands as fresh files in the
-    * same commit. */
+    * rows. Cost profile is deleteWhere's, through the same
+    * copy-on-write core: only files holding a matching row rewrite;
+    * the new slice lands as fresh files in the same commit, which
+    * lands even when nothing matches. */
   def replaceWhere(spark: SparkSession, table: String, cond: Column,
       incoming0: DataFrame, numFiles: Int): Long = {
     val snap = state(table)
@@ -4337,11 +4341,8 @@ object TableLog {
       s"replaceWhere: $violating incoming rows do not satisfy the replace " +
         "predicate — restating a slice must not smuggle rows outside it")
     validateChecks(incoming, checksOf(snap.props), s"replaceWhere into $table")
-    val scan = readFiles(spark, table, snap, snap.active)
-      .withColumn("_file", input_file_name())
-    val touchedNames = scan.where(cond).select("_file").distinct()
-      .collect().map(r => fileIdOfUri(r.getString(0))).toSet
-    val touched = snap.active.filter(a => touchedNames(fileIdOf(a.relPath)))
+    val touched =
+      touchedFiles(spark, table, snap, snap.active)(_.where(cond))
     // IDENTITY tables: replaceWhere is admissible ONLY as an
     // ID-PRESERVING slice restatement — the MERGE rewrite's
     // carried-id audit, applied to the slice: incoming rows carry
@@ -4376,19 +4377,17 @@ object TableLog {
     }
     val survivors = readFiles(spark, table, snap, touched)
       .where(!coalesce(cond, lit(false)))
-    val rewritten = survivors.unionByName(incoming)
-    val adds = stage(rewritten, table, snap.keyCol, numFiles, snap.bloom,
-      partCols = snap.partCols, colMap = snap.colMap,
-      specId = snap.specId)
-    commit(table, snap.version, "replace", adds, touched.map(_.relPath), "", "")
+    cowCommit(snap, table, "replace", survivors.unionByName(incoming),
+      numFiles, touched)
   }
 
   /** Copy-on-write MERGE (upsert): rows of `changes` whose key
     * matches an active row REPLACE it; the rest INSERT. Exactly the
     * files containing a matched key are rewritten (changes' keys
-    * broadcast into one scan of the active set); inserts land as
-    * fresh files. The q90 full-outer-join semantics, landed as a
-    * transactional commit.
+    * broadcast into one scan of the active set — [[touchedFiles]],
+    * then [[cowCommit]]); inserts land as fresh files. The q90
+    * full-outer-join semantics, landed as a transactional commit,
+    * which an empty change set commits too.
     *
     * `evolve = true` is Delta's `autoMerge` shape: UNSEEN source
     * columns widen the target schema IN THE SAME atomic merge commit
@@ -4454,12 +4453,8 @@ object TableLog {
     if (idOpt.isEmpty)
       validateChecks(changes, checksOf(snap.props), s"merge into $table")
     val changeKeys = changes.select(col(k)).distinct()
-    val scan = readFiles(spark, table, snap, snap.active)
-      .withColumn("_file", input_file_name())
-    val touchedNames = scan.join(broadcast(changeKeys), k)
-      .select("_file").distinct()
-      .collect().map(r => fileIdOfUri(r.getString(0))).toSet
-    val touched = snap.active.filter(a => touchedNames(fileIdOf(a.relPath)))
+    val touched = touchedFiles(spark, table, snap, snap.active)(
+      _.join(broadcast(changeKeys), k))
     val touchedRows = readFiles(spark, table, snap, touched)
     // identity completion of the change rows: matched keys inherit the
     // pre-image's id (min per key — the whole-row replace collapses a
@@ -4485,14 +4480,11 @@ object TableLog {
     val rewritten = touchedRows
       .join(broadcast(changeKeys), Seq(k), "left_anti")
       .unionByName(changes1, allowMissingColumns = extra.nonEmpty)
-    val adds = stage(rewritten, table, k, numFiles, snap.bloom,
-      partCols = snap.partCols, colMap = snap.colMap,
-      specId = snap.specId)
     val propsOpt = idOpt.collect { case (c, hwm, step) if nAlloc > 0L =>
       snap.props + (s"identity.$c" -> identityProp(hwm + nAlloc * step, step))
     }
-    commit(table, snap.version, "merge", adds, touched.map(_.relPath),
-      if (extra.nonEmpty) merged.toDDL else "", "", props = propsOpt)
+    cowCommit(snap, table, "merge", rewritten, numFiles, touched,
+      if (extra.nonEmpty) merged.toDDL else "", propsOpt)
   }
 
   /** One arm of a tri-clause MERGE for [[mergeDv]]. `kind` is
@@ -4614,35 +4606,29 @@ object TableLog {
     * the [[dvMaxMatched]] driver guard (DVs suit sparse DML — a bulk
     * restatement should take the COW route), survivor stats priced at
     * the touched sliver, images staged distributed. */
-  /** `pruneKeys`: the source's key envelope `[lo, hi]` when the ON
-    * condition is an equality on the table key — candidate files
-    * whose manifest range provably misses it are never read (a
-    * key-ranged CDC batch on a 100-TB table scans the intersecting
-    * sliver, the same layers the DV delete prunes with). SOUND only
-    * without not-matched-by-source arms: those must see every target
-    * row, so the combination refuses. Matched pairs and the insert
-    * anti-join are unaffected — a pruned file holds no key in the
-    * source's range, hence no possible match.
-    *
-    * `pruneOn = (targetCol, sourceCol)`: the generalized form the SQL
-    * route passes when the ON condition is a plain cross-side
-    * equality — mergeDv aggregates the envelope itself over the
-    * frozen source (so the bounds can never disagree with the join
-    * inputs) and prunes by the table-key range or the manifest's
-    * per-file COLUMN stats, integral and STRING domains alike (binary
-    * collation, the same over-approximated bounds the file-skip layer
-    * trusts) — see [[mergePruneCandidates]]. Same
-    * not-matched-by-source refusal. */
+  /** `pruneOn = (targetCol, sourceCol)`, passed when the ON condition
+    * is a plain cross-side equality: mergeDv aggregates the source's
+    * envelope itself over the frozen source (so the bounds can never
+    * disagree with the join inputs) and never reads a candidate file
+    * whose bounds provably miss it — the table-key range when
+    * `targetCol` is the key (a key-ranged CDC batch on a 100-TB table
+    * scans the intersecting sliver, the same layers the DV delete
+    * prunes with), else the manifest's per-file COLUMN stats, integral
+    * and STRING domains alike (binary collation, the same
+    * over-approximated bounds the file-skip layer trusts) — see
+    * [[mergePruneCandidates]]. SOUND only without not-matched-by-source
+    * arms: those must see every target row, so the combination
+    * refuses. Matched pairs and the insert anti-join are unaffected —
+    * a pruned file holds no value in the source's range, hence no
+    * possible match. */
   def mergeDv(spark: SparkSession, table: String, source0: DataFrame,
       on: Column, matched: Seq[MergeArm] = Nil,
       notMatched: Seq[MergeArm] = Nil,
       notMatchedBySource: Seq[MergeArm] = Nil,
       numFiles: Int = 1,
-      pruneKeys: Option[(Long, Long)] = None,
       pruneOn: Option[(String, String)] = None): Long = {
     val snap = state(table)
-    require((pruneKeys.isEmpty && pruneOn.isEmpty) ||
-      notMatchedBySource.isEmpty,
+    require(pruneOn.isEmpty || notMatchedBySource.isEmpty,
       s"mergeDv into $table: key pruning cannot compose with " +
         "not-matched-by-source arms — they must see every target row")
     // the source plan evaluates ONCE, before any join: the matched
@@ -4684,17 +4670,10 @@ object TableLog {
             "arms cannot assign it; omit it (matched rows keep their " +
             "ids, inserts allocate)"))
     }
-    val candidates = (pruneKeys, pruneOn) match {
-      case (Some((lo, hi)), _) => prunedFiles(snap, lo, hi)
-      case (None, Some((tc, sc))) =>
-        mergePruneCandidates(snap, source, tc, sc)
-      case (None, None) => snap.active
-    }
-    requireDvPartStats(table, snap, candidates)
-    candidates.find(_.rows > Int.MaxValue).foreach(a =>
-      throw new IllegalArgumentException(
-        s"$table: ${a.relPath} holds ${a.rows} rows — beyond the DV " +
-          "bitset's 2^31 position domain; use the copy-on-write merge"))
+    val candidates = dvCandidates(table, snap,
+      pruneOn.fold(snap.active) { case (tc, sc) =>
+        mergePruneCandidates(snap, source, tc, sc) },
+      "the copy-on-write merge")
     // the live target frame, prefixed; rendered partition tuple and
     // provenance ride alongside (computed BEFORE prefixing — the
     // tuple renders from logical names)
@@ -4815,39 +4794,17 @@ object TableLog {
     // by the bulk guard (the sidecars are driver-built)
     val hitSel = Seq(col("__graft_f"), col("__graft_p")) ++
       (if (partitioned) Seq(col("__graft_tuple")) else Nil)
-    val deadFrames = (mArmed.toSeq ++ nmbsArmed.toSeq)
-      .map(_.select(hitSel: _*))
-    val maxM = dvMaxMatched(spark)
-    val raw = deadFrames.reduceOption(_.unionByName(_)) match {
-      case None => Array.empty[org.apache.spark.sql.Row]
-      case Some(df) =>
-        val got = df.limit(dvProbeN(maxM)).collect()
-        if (got.length > maxM) throw dvBulkRefusal(table, "mergeDv", maxM)
-        got
-    }
-    val hits = raw.map(r => (r.getString(0), r.getLong(1),
-        if (partitioned) r.getSeq[String](2).toList else Nil))
-      .groupBy(_._1)
-      .map { case (f, xs) => f -> xs.toSeq.map(x => (x._2, x._3)) }
+    val hits = dvHits(spark, table, "mergeDv",
+      (mArmed.toSeq ++ nmbsArmed.toSeq).map(_.select(hitSel: _*))
+        .reduceOption(_.unionByName(_)))
     if (hits.isEmpty && images.isEmpty) return snap.version
-    // survivor-exact bounds for the touched files: live rows minus
-    // this merge's dead positions
-    val survivorStats =
-      if (hits.isEmpty) Map.empty[String, (Long, Long, Seq[ColStat])]
-      else dvSurvivorStats(snap, dvSurvivorsFrame(spark, live, raw),
-        hits.keySet)
     val staged = images.fold(Seq.empty[AddFile])(df =>
-      stage(df, table, snap.keyCol,
-        dvImageNumFiles(df, snap, numFiles), snap.bloom,
-        partCols = snap.partCols, colMap = snap.colMap,
-        specId = snap.specId))
-    val (removes, dvAdds) =
-      dvCommitEntries(table, snap, hits, candidates, survivorStats)
+      stageAs(snap, df, table, dvImageNumFiles(df, snap, numFiles)))
     val propsOpt = idOpt.collect { case (c, hwm, step) if nAlloc > 0L =>
       snap.props + (s"identity.$c" -> identityProp(hwm + nAlloc * step, step))
     }
-    commit(table, snap.version, "merge", dvAdds ++ staged, removes,
-      "", "", props = propsOpt)
+    dvCommit(spark, table, snap, "merge", live, candidates, hits, staged,
+      propsOpt)
   }
 
   /** OPTIMIZE ZORDER: [[compact]] whose output files follow the
@@ -4927,10 +4884,8 @@ object TableLog {
       Files.exists(p) && Files.size(p) < smallBytes
     }
     if (small.size <= math.max(1, targetFiles)) return snap.version
-    val data = readFiles(spark, table, snap, small)
-    val adds = stage(data, table, snap.keyCol, targetFiles, snap.bloom,
-      partCols = snap.partCols, colMap = snap.colMap,
-      specId = snap.specId)
+    val adds = stageAs(snap, readFiles(spark, table, snap, small), table,
+      targetFiles)
     commit(table, snap.version, "compact", adds,
       small.map(_.relPath), "", "")
   }
@@ -5023,9 +4978,7 @@ object TableLog {
           scaled, bits)))
       }
     }
-    val adds = stage(data, table, snap.keyCol, numFiles, snap.bloom,
-      layout = layout, partCols = snap.partCols, colMap = snap.colMap,
-      specId = snap.specId)
+    val adds = stageAs(snap, data, table, numFiles, layout)
     (commit(table, snap.version,
       if (layout.isDefined) "zorder" else "compact", adds,
       sel.map(_.relPath), "", ""), sel.size)

@@ -68,7 +68,7 @@ class TableLogSpec extends SparkSuite {
     TableLog.create(kv((0L to 99L).map(i => (i, s"a$i"))), t, "k", 1)
     TableLog.append(kv((100L to 199L).map(i => (i, s"b$i"))), t, 1)
     TableLog.deleteWhere(spark, t, col("k").between(10L, 20L), 1,
-      pruneKeys = Some((10L, 20L)))
+      pruneCandidates = Some(TableLog.prunedFiles(_, 10L, 20L)))
     val h = TableLog.history(t).last
     // only the [0,99] file intersects: one remove, its 89 survivors re-added
     assert(h.op == "delete" && h.nRemoves == 1 && h.rowsRemoved == 100L
@@ -1120,7 +1120,7 @@ class TableLogSpec extends SparkSuite {
     val changes = Seq((3L, "UPD")).toDF("k", "v")
     TableLog.mergeDv(spark, t, changes, col(T + "k") === col(S + "k"),
       matched = Seq(MergeArm(None, "update", Map("v" -> col(S + "v")))),
-      pruneKeys = Some((3L, 3L)))
+      pruneOn = Some(("k", "k")))
     // the update landed without touching the vandalized range
     val live = TableLog.state(t).active
       .filter(_.relPath != top.relPath)
@@ -1131,7 +1131,7 @@ class TableLogSpec extends SparkSuite {
     val e = intercept[IllegalArgumentException] {
       TableLog.mergeDv(spark, t, changes, col(T + "k") === col(S + "k"),
         notMatchedBySource = Seq(MergeArm(None, "delete")),
-        pruneKeys = Some((3L, 3L)))
+        pruneOn = Some(("k", "k")))
     }
     assert(e.getMessage.contains("not-matched-by-source"), e.getMessage)
   }
@@ -1691,5 +1691,83 @@ class TableLogSpec extends SparkSuite {
       snap2.active, snap2.active.map(_.relPath), "", "")
     assert(v == 4L, "append-only interim commits must keep rebasing")
     assert(TableLog.snapshot(spark, t).count() == 10L)
+  }
+
+  test("DML verbs keep their no-op rules on a predicate or change set " +
+      "matching nothing") {
+    import spark.implicits._
+    import TableLog.{MergeArm, MergeTargetPrefix => T, MergeSourcePrefix => S}
+    val none = col("k") === -1L
+    val noKeys = Seq.empty[(Long, String)].toDF("k", "v")
+    // (verb, commits a version, run it on table t)
+    val verbs: Seq[(String, Boolean, String => Any)] = Seq(
+      ("deleteWhere", false, t => TableLog.deleteWhere(spark, t, none, 1)),
+      ("updateWhere", false,
+        t => TableLog.updateWhere(spark, t, none, Map("v" -> lit("z")), 1)),
+      ("deleteWhereDv", false, t => TableLog.deleteWhereDv(spark, t, none)),
+      ("updateWhereDv", false,
+        t => TableLog.updateWhereDv(spark, t, none, Map("v" -> lit("z")))),
+      ("mergeDv", false, t => TableLog.mergeDv(spark, t,
+        Seq((-1L, "x")).toDF("k", "v"), col(T + "k") === col(S + "k"),
+        matched = Seq(MergeArm(None, "delete")))),
+      ("replaceWhere", true,
+        t => TableLog.replaceWhere(spark, t, none, noKeys, 1)),
+      ("merge", true, t => TableLog.merge(spark, t, noKeys, 1)),
+      ("applyCdc", true, t => TableLog.applyCdc(spark, t,
+        Seq.empty[(Long, String, String)].toDF("k", "v", "action"), 1)),
+      ("overwriteWhereStaged", true,
+        t => TableLog.overwriteWhereStaged(spark, t, none, Nil, 1)))
+    verbs.foreach { case (name, commits, run) =>
+      val t = freshDir()
+      TableLog.create(kv((0L to 9L).map(i => (i, s"a$i"))), t, "k", 2)
+      run(t)
+      assert(TableLog.latestVersion(t) == (if (commits) 2L else 1L),
+        s"$name on a no-match: v${TableLog.latestVersion(t)}")
+      assert(TableLog.snapshot(spark, t).count() == 10L, name)
+      assert(TableLog.state(t).active.map(_.relPath).sorted ==
+        TableLog.state(t, 1L).active.map(_.relPath).sorted, name)
+    }
+  }
+
+  test("the DML verbs share one copy-on-write core and one " +
+      "deletion-vector core") {
+    val src = {
+      val f = scala.io.Source.fromFile(
+        "src/main/scala/graft/tablelog/TableLog.scala", "UTF-8")
+      try f.getLines().toVector finally f.close()
+    }
+    // the lines of `def name`: its signature through the first later
+    // line back at the def's indentation (its closing brace, or the
+    // next member of a one-expression def)
+    def body(name: String): Set[Int] = {
+      val start = src.indexWhere(l => l.contains(s"def $name("))
+      assert(start >= 0, s"no def $name in TableLog.scala")
+      val indent = src(start).takeWhile(_ == ' ').length
+      val end = src.indexWhere(l =>
+        l.trim.nonEmpty && l.takeWhile(_ == ' ').length <= indent, start + 1)
+      (start to end).toSet
+    }
+    def sites(token: String, in: Set[Int]): Seq[Int] =
+      in.toSeq.sorted.filter(i => src(i).contains(token))
+    val verbs = Seq("applyCdc", "deleteWhere", "updateWhere", "replaceWhere",
+      "merge", "overwriteWhereStaged", "deleteWhereDv", "updateWhereDv",
+      "mergeDv")
+    val dml = (verbs :+ "touchedFiles").flatMap(body).toSet
+    assert(sites("input_file_name()", dml) ==
+      sites("input_file_name()", body("touchedFiles")) &&
+      sites("input_file_name()", dml).size == 1,
+      s"input_file_name() at ${sites("input_file_name()", dml)}")
+    val all = src.indices.toSet
+    // call sites only: a def's own signature line is not one
+    def onlyIn(token: String, helper: String): Unit = {
+      val at = sites(token, all).filterNot(i => src(i).contains("def "))
+      assert(at.nonEmpty && at.forall(body(helper)), s"$token at $at")
+    }
+    assert(sites("colMap = snap.colMap", all).isEmpty)
+    onlyIn("snap.colMap, snap.specId)", "stageAs")
+    onlyIn("requireDvPartStats(table", "dvCandidates")
+    onlyIn("dvProbeN(maxM)", "dvHits")
+    onlyIn("dvCommitEntries(table", "dvCommit")
+    onlyIn("dvSurvivorStats(snap", "dvCommit")
   }
 }
